@@ -1,31 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    // f"" interpolators use the JVM default locale; under a
-    // comma-decimal locale every number below would render "1,08"
-    // and the JSON line becomes unparseable. Pin ROOT process-wide.
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Parse once with a validated fallback: the raw env string feeds
-    // toInt (probe thread count) and toDouble (loadavg gate) later —
-    // a malformed value ('', '8.0') must not abort the whole run.
-    val cpusN: Int = sys.env.get("SPARK_GRAFT_CPUS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ > 0).getOrElse(4)
-    val cpus = cpusN.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // See Verify.scala: ICU case mapping is ~30x slower than JVM's.
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // session warm-up: JVM/codegen/parquet-footer startup costs land
-    // here instead of on whichever query happens to run first
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Tables.lineitem(spark, sfDir).limit(1).collect()
+    val sfDir = GraftSession.sfDir
+    val cpus = GraftSession.cpus
+    val spark = GraftSession(cpus)
+    GraftSession.warm(spark, sfDir)
     // noop sink forces full computation of every output column —
     // count() alone would let Catalyst prune the projections away.
     //
@@ -53,8 +32,7 @@ object Bench {
     // drift auditable: compare probe_ms across boards before
     // comparing totals. Min of 3, measured before pass 1 and after
     // the last pass.
-    def cpuProbeMs(): Double = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
+    def probeLoop(): Unit = {
       var x = 0x9E3779B97F4A7C15L
       var i = 0
       while (i < 200000000) {
@@ -62,29 +40,19 @@ object Bench {
         x ^= x >>> 33
         i += 1
       }
-      val dt = (System.nanoTime() - t0) / 1e6
       if (x == 42L) System.err.println("") // defeat dead-code elim
-      dt
-    }.min
+    }
+    def timeMs(body: => Unit): Double = {
+      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e6
+    }
+    def cpuProbeMs(): Double = (1 to 3).map(_ => timeMs(probeLoop())).min
     // parallel twin: the same loop on `cpus` threads at once. The
     // single-thread probe pins per-core latency; THIS one inflates
     // under host-level core steal / SMT contention — the dimension
     // that actually moves bench totals between "idle" boards.
-    def cpuProbeMtMs(): Double = {
-      val body: Runnable = () => {
-        var x = 0x9E3779B97F4A7C15L
-        var i = 0
-        while (i < 200000000) {
-          x = x * 6364136223846793005L + 1442695040888963407L
-          x ^= x >>> 33
-          i += 1
-        }
-        if (x == 42L) System.err.println("")
-      }
-      val t0 = System.nanoTime()
-      val ts = (1 to cpusN).map(_ => new Thread(body))
+    def cpuProbeMtMs(): Double = timeMs {
+      val ts = (1 to cpus).map(_ => new Thread(() => probeLoop()))
       ts.foreach(_.start()); ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e6
     }
     val probeBefore = cpuProbeMs()
     val probeMtBefore = cpuProbeMtMs()
@@ -123,7 +91,7 @@ object Bench {
     // committed board (158 s, idle) and the driver re-run (186 s,
     // loadavg 13) from telling the same story. Skipped for quick
     // single-pass iteration runs.
-    val loadGate = cpusN.toDouble / 4.0
+    val loadGate = cpus.toDouble / 4.0
     val extraPasses = if (passes >= 3 && loads.max > loadGate) 1 else 0
     (1 to extraPasses).foreach(_ => runPass("extra (loadavg gate)"))
     val best = times.view.mapValues(_.min).toMap

@@ -1,23 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only helper: print `.explain("formatted")` for one registered
   * query (the plans/<round>/ evidence files the optimization rounds
   * commit). Usage: tools/run.sh graft.PlanDump <query> [sfDir] */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val name = args(0)
-    val sfDir = args.lift(1).getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = args.lift(1).getOrElse(GraftSession.sfDir)
+    val spark = GraftSession()
     val df = SparkEntry.queries(name)(spark, sfDir)
     println(df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode))

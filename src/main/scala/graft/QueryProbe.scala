@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only instrumentation main (never run by the driver): executes
   * ONE registered query under the bench's session shape and prints a
@@ -24,21 +23,11 @@ object QueryProbe {
                           stages: Seq[Int], desc: String)
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val name = args(0)
-    val sfDir = args.lift(1).getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    val sfDir = args.lift(1).getOrElse(GraftSession.sfDir)
     val passes = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Tables.lineitem(spark, sfDir).limit(1).collect()
+    val spark = GraftSession()
+    GraftSession.warm(spark, sfDir)
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()
     val stages = new java.util.concurrent.ConcurrentHashMap[Int, StageRow]()

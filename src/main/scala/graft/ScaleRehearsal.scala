@@ -1663,95 +1663,68 @@ object ScaleRehearsal {
     }
   }
 
+  type Runner = (SparkSession, String, Seq[Int]) => Unit
+
+  /** Every rehearsal family, in the fixed order a comma list runs in:
+    * families share process-scoped landed stores, so the order is
+    * part of what a run measures. */
+  val rehearsals: Seq[(String, Runner)] = Seq(
+    ("streaming", runStreaming(_, _, _)),
+    ("deepstate", runStreamingDeep(_, _, _)),
+    ("join", runJoin(_, _, _)),
+    ("bucketed", runBucketed(_, _, _)),
+    ("pipeline", runPipeline(_, _, _)),
+    ("layout", runLayout(_, _, _)),
+    ("events", runEvents(_, _, _)),
+    ("topk", runTopK(_, _, _)),
+    ("similarity", runSimilarity(_, _, _)),
+    ("spj", runSpj(_, _, _)),
+    ("spjskew", runSpjSkew(_, _, _)),
+    ("joinpush", runJoinPush(_, _, _)),
+    ("retrieval", runRetrieval(_, _, _)),
+    ("wand", runWand(_, _, _)),
+    ("wandmix", runWandMix(_, _, _)),
+    ("workload", runWorkload(_, _, _)),
+    ("wandzipf", runWandZipf(_, _, _)),
+    ("workloadzipf", (s, d, m) =>
+      runWorkload(s, d, m, stager = stageDocsZipf, fam = "workloadzipf")),
+    ("buckets", runBuckets(_, _, _)),
+    ("delete", runDelete(_, _, _)),
+    ("media", runMedia(_, _, _)),
+    ("mediadiverse", runMediaDiverse(_, _, _)),
+    ("sketch", runSketch(_, _, _)),
+    ("phrase", runPhrase(_, _, _)),
+    ("ensemble", runEnsemble(_, _, _)),
+    ("governance", runGovernance(_, _, _)),
+    ("qualitytrain", runQualityTrain(_, _, _)),
+    ("textscale", runTextScale(_, _, _)),
+    ("ivfmaint", runIvfMaint(_, _, _)))
+
+  /** The rehearsals a comma list names, in table order; `all` is
+    * streaming + join. Fails FAST on a typo'd family: a silently
+    * dropped token makes a comma-list run look complete while skipping
+    * a rehearsal. */
+  def selected(families: String): Seq[(String, Runner)] = {
+    val names = families.split(",").toSet.flatMap { (f: String) =>
+      if (f == "all") Set("streaming", "join") else Set(f) }
+    val known = rehearsals.map(_._1).toSet
+    val unknown = names -- known
+    require(unknown.isEmpty,
+      s"unknown rehearsal families: ${unknown.toSeq.sorted.mkString(", ")} " +
+        s"(known: ${(known + "all").toSeq.sorted.mkString(", ")})")
+    rehearsals.filter { case (name, _) => names(name) }
+  }
+
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     // comma-separated families run in ONE JVM, sharing the
     // process-scoped landed stores (e.g. "wand,workload" tokenizes
     // each staged corpus once, not once per family)
-    val families = args.headOption.getOrElse("all").split(",").toSet
-    // fail FAST on a typo'd family: a silently-dropped token makes a
-    // comma-list run look complete while skipping a rehearsal
-    val known = Set("all", "streaming", "deepstate", "join", "bucketed",
-      "pipeline", "layout", "events", "topk", "similarity", "spj",
-      "spjskew", "joinpush", "retrieval", "wand", "wandmix", "workload",
-      "ivfmaint", "wandzipf", "workloadzipf", "buckets", "delete", "media",
-      "mediadiverse", "governance", "sketch", "phrase", "ensemble",
-      "qualitytrain", "textscale")
-    val unknown = families -- known
-    require(unknown.isEmpty,
-      s"unknown rehearsal families: ${unknown.toSeq.sorted.mkString(", ")} " +
-        s"(known: ${known.toSeq.sorted.mkString(", ")})")
-    def family(name: String): Boolean = families.contains(name)
+    val runners = selected(args.headOption.getOrElse("all"))
     val mults = args.lift(1).map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(1, 10, 50))
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (family("streaming") || family("all"))
-      runStreaming(spark, sfDir, mults)
-    if (family("deepstate"))
-      runStreamingDeep(spark, sfDir, mults)
-    if (family("join") || family("all"))
-      runJoin(spark, sfDir, mults)
-    if (family("bucketed"))
-      runBucketed(spark, sfDir, mults)
-    if (family("pipeline"))
-      runPipeline(spark, sfDir, mults)
-    if (family("layout"))
-      runLayout(spark, sfDir, mults)
-    if (family("events"))
-      runEvents(spark, sfDir, mults)
-    if (family("topk"))
-      runTopK(spark, sfDir, mults)
-    if (family("similarity"))
-      runSimilarity(spark, sfDir, mults)
-    if (family("spj"))
-      runSpj(spark, sfDir, mults)
-    if (family("spjskew"))
-      runSpjSkew(spark, sfDir, mults)
-    if (family("joinpush"))
-      runJoinPush(spark, sfDir, mults)
-    if (family("retrieval"))
-      runRetrieval(spark, sfDir, mults)
-    if (family("wand"))
-      runWand(spark, sfDir, mults)
-    if (family("wandmix"))
-      runWandMix(spark, sfDir, mults)
-    if (family("workload"))
-      runWorkload(spark, sfDir, mults)
-    if (family("wandzipf"))
-      runWandZipf(spark, sfDir, mults)
-    if (family("workloadzipf"))
-      runWorkload(spark, sfDir, mults,
-        stager = stageDocsZipf, fam = "workloadzipf")
-    if (family("buckets"))
-      runBuckets(spark, sfDir, mults)
-    if (family("delete"))
-      runDelete(spark, sfDir, mults)
-    if (family("media"))
-      runMedia(spark, sfDir, mults)
-    if (family("mediadiverse"))
-      runMediaDiverse(spark, sfDir, mults)
-    if (family("sketch"))
-      runSketch(spark, sfDir, mults)
-    if (family("phrase"))
-      runPhrase(spark, sfDir, mults)
-    if (family("ensemble"))
-      runEnsemble(spark, sfDir, mults)
-    if (family("governance"))
-      runGovernance(spark, sfDir, mults)
-    if (family("qualitytrain"))
-      runQualityTrain(spark, sfDir, mults)
-    if (family("textscale"))
-      runTextScale(spark, sfDir, mults)
-    if (family("ivfmaint"))
-      runIvfMaint(spark, sfDir, mults)
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession()
+    runners.foreach { case (_, run) => run(spark, sfDir, mults) }
     spark.stop()
   }
 }

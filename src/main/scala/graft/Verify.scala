@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // ICU case mapping makes lower()/upper() ~30x slower (measured:
-      // 25s -> 0.7s on the sf0.1 wordcount) and the ICU <clinit> alone
-      // burns ~30s of CPU on first use. JVM case mapping is identical
-      // on ASCII and matches the oracle.
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // PIN the retrieval-oracle dump dataset UP FRONT: the bm25/hybrid
     // oracles read the landed idf sidecar unconditionally (no

@@ -33,7 +33,7 @@ object Dedup {
     * corpus first when its downstream partial aggregate would
     * otherwise run inside a single scan task. */
   def shinglesRawFrom(docs: DataFrame, n: Int = 3): DataFrame = {
-    val toks = split(lower(col("text")), "[^\\p{L}]+")
+    val toks = TextOps.tokens(col("text"))
     docs
       .withColumn("toks", filter(toks, t => length(t) > 0))
       .withColumn("idx",

@@ -45,7 +45,8 @@ object MapReduce {
     * maximal runs of Unicode letters. Scala-side twin of
     * TextOps.tokens for use inside typed mappers. */
   def tokenizeText(text: String): Seq[String] =
-    text.toLowerCase.split("[^\\p{L}]+").filter(_.nonEmpty).toSeq
+    text.toLowerCase(java.util.Locale.ROOT)
+      .split("[^\\p{L}]+").filter(_.nonEmpty).toSeq
 
   /** Associative-combine MapReduce: the scalable reducer contract. */
   def reduceByKey[V](s: SparkSession,

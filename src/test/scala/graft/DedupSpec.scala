@@ -213,16 +213,15 @@ class DedupSpec extends SparkSpec {
   }
 
   test("accent fold on the reference Portuguese fixture is byte-stable") {
-    // the real multilingual case (reference Master/Data/TestInverted/
-    // 3.txt): Spark sees more UTF-8 bytes than codepoints, and the
+    // the real multilingual case (the Portuguese TestInverted/3.txt
+    // fixture): Spark sees more UTF-8 bytes than codepoints, and the
     // fixture's lowercase accent set folds to pure ASCII under the
     // gate's translate — the precondition for byte == codepoint
     // levenshtein on the folded column
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val fixture = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(
-        "/root/reference/Master/Data/TestInverted/3.txt")), "UTF-8")
+      java.nio.file.Paths.get(s"$refData/TestInverted/3.txt")), "UTF-8")
     val accented = "não é coração atenção depois está alguém"
     assert(fixture.contains("ã"), "fixture lost its Portuguese accents")
     val r = Seq((accented, fixture.take(2000)))

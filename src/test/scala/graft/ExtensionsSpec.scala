@@ -14,12 +14,7 @@ class ExtensionsSpec extends AnyFunSuite {
   private val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
   private def newSession(extended: Boolean): SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName(s"graft-ext-$extended")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val b = GraftSession.builder(4).appName(s"graft-ext-$extended")
     (if (extended) b.withExtensions(new graft.functions.GraftExtensions) else b)
       .getOrCreate()
   }

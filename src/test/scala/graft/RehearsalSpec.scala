@@ -8,6 +8,24 @@ import org.apache.spark.sql.functions._
   * depends on, at a small multiple on the small sf dir. */
 class RehearsalSpec extends SparkSpec {
 
+  test("rehearsal table: fixed order, all = streaming + join, typos fail fast") {
+    def names(arg: String) = ScaleRehearsal.selected(arg).map(_._1)
+    assert(names("all") == Seq("streaming", "join"))
+    assert(names("topk,join,all") == Seq("streaming", "join", "topk"))
+    assert(names("workloadzipf,wand") == Seq("wand", "workloadzipf"))
+    // a typo'd family throws before main builds a session: building one
+    // would re-apply GraftSession's shape to the shared session and
+    // overwrite this sentinel partition count
+    spark.conf.set("spark.sql.shuffle.partitions", "13")
+    try {
+      val e = intercept[IllegalArgumentException](
+        ScaleRehearsal.main(Array("join,bogus")))
+      assert(e.getMessage.contains("bogus"), e.getMessage)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "13",
+        "main touched a session before rejecting the family list")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+  }
+
   test("staged events shards are key-disjoint and files time-ordered") {
     val mult = 3
     val dir = ScaleRehearsal.stageEvents(spark, sfDir, mult)

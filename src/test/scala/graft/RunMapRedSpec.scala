@@ -8,8 +8,6 @@ import graft.sources.TextSources
   * `Master/testMaster.py:11-12`'s commented invocation, made real). */
 class RunMapRedSpec extends SparkSpec {
 
-  private val refData = "/root/reference/Master/Data"
-
   test("run_mapred InvertedIndex on the reference corpus dir") {
     val out = MapReduce.runMapRed(spark, s"$refData/TestInverted",
       "InvertedIndexMapper", "InvertedIndexReducer")

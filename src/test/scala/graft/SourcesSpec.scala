@@ -4,13 +4,11 @@ import graft.sources.TextSources
 import graft.operators.TextOps
 import org.apache.spark.sql.functions._
 
-/** Reference-fixture E2E (SURVEY.md §5.2): run WordCount on the
-  * reference's own test.txt and InvertedIndex on its TestInverted
-  * corpus (read-only fixtures), cross-checked against an independent
-  * in-test Scala count. */
+/** Reference-fixture E2E (SURVEY.md §5.2): run WordCount on a
+  * reference-shaped test.txt and InvertedIndex on a TestInverted corpus
+  * (in-repo fixtures, see `SparkSpec.refData`), cross-checked against
+  * an independent in-test Scala count. */
 class SourcesSpec extends SparkSpec {
-
-  private val refData = "/root/reference/Master/Data"
 
   private def scalaTokens(text: String): Seq[String] =
     text.toLowerCase.split("[^\\p{L}]+").filter(_.nonEmpty).toSeq

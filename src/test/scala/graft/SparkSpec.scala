@@ -18,20 +18,20 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+  /** Reference-shaped text fixtures (`src/test/resources/refdata`):
+    * `test.txt` plus the four-file `TestInverted` corpus, whose `3.txt`
+    * is Portuguese. */
+  val refData: String =
+    java.nio.file.Paths.get(getClass.getResource("/refdata").toURI).toString
 }
 
 object SparkSpec {
   private var cached: SparkSession = null
   def session: SparkSession = synchronized {
     if (cached == null || cached.sparkContext.isStopped) {
-      cached = SparkSession.builder()
-        .master("local[4]")
+      cached = GraftSession.builder(4)
         .config("spark.sql.warehouse.dir",
           java.nio.file.Files.createTempDirectory("graft_wh").toString)
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.icu.caseMappings.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
       cached.sparkContext.setLogLevel("ERROR")
     }

@@ -58,6 +58,14 @@ class TokenizeSpec extends SparkSpec {
     texts.foreach { t =>
       assert(tok(t) == MapReduce.tokenizeText(t), s"mismatch on '$t'")
     }
+    // a tr-TR default locale lowercases "I" to dotless "ı": the twin
+    // must stay locale-independent, like the column form and the oracle
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+      assert(tok("TITLE") == MapReduce.tokenizeText("TITLE"),
+        "mismatch on 'TITLE' under tr-TR")
+    } finally java.util.Locale.setDefault(saved)
   }
 
   test("wordcount total equals token count (mass conservation)") {
