@@ -64,6 +64,10 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val times = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
+    // a query that throws in ANY pass is a failure, never a time: its
+    // elapsed-until-exception would otherwise read as a fast query
+    // (how the jdbc pair hid for a round). Name -> exception class.
+    val failed = scala.collection.mutable.TreeMap.empty[String, String]
     def runPass(label: String): Unit = {
       val t0 = System.nanoTime()
       names.foreach { case (name, fn) =>
@@ -73,11 +77,12 @@ object Bench {
         // stragglers are swept here so every entry starts cold.
         spark.catalog.clearCache()
         val q0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          times(name) = (System.nanoTime() - q0) / 1e9 :: times(name)
+        } catch { case e: Throwable =>
+          failed(name) = e.getClass.getName
           System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-        val dt = (System.nanoTime() - q0) / 1e9
-        times(name) = dt :: times(name)
       }
       loads += osBean.getSystemLoadAverage
       System.err.println(f"[bench] pass $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
@@ -94,25 +99,21 @@ object Bench {
     val loadGate = cpus.toDouble / 4.0
     val extraPasses = if (passes >= 3 && loads.max > loadGate) 1 else 0
     (1 to extraPasses).foreach(_ => runPass("extra (loadavg gate)"))
-    val best = times.view.mapValues(_.min).toMap
+    val ok = names.filterNot { case (k, _) => failed.contains(k) }
+    val best = ok.map { case (k, _) => k -> times(k).min }.toMap
     val total = best.values.sum
-    def qmap(prec: Int): String = names.map { case (k, _) =>
-      val v = if (prec == 0) Math.round(best(k)).toString
-              else s"%.${prec}f".format(best(k))
-      "\"" + k + "\":" + v
-    }.mkString("{", ",", "}")
+    def failedMap(kv: Iterable[(String, String)]): String =
+      kv.map { case (k, c) => "\"" + k + "\":\"" + c + "\"" }.mkString("{", ",", "}")
+    val queriesJson = ok.map { case (k, _) => "\"" + k + f"\":${best(k)}%.3f" }
+      .mkString("{", ",", "}")
     // spread = max/min across passes, steady-state passes only (pass 1
     // pays plan codegen) — >2x flags a co-tenant-noisy measurement the
     // min cannot necessarily recover from
-    val spreads = names.map { case (k, _) =>
+    val spreads = ok.map { case (k, _) =>
       val steady = times(k).dropRight(1) // times are prepended; last = pass 1
       val sp = if (steady.size >= 2) steady.max / steady.min else 1.0
       s"\"" + k + f"\":${sp}%.2f"
     }.mkString("{", ",", "}")
-    def mainLine(prec: Int, sf: String, unit: Boolean) = {
-      val unitPart = if (unit) ""","unit":"sec"""" else ""
-      f"""{"metric":"total","value":$total%.2f$unitPart,"queries":${qmap(prec)},"sf":"$sf"}"""
-    }
     // The consumer scrapes only the LAST ~2000 chars of stdout and
     // json-parses line by line, so the line must fit that window
     // ENTIRELY or every head-truncated entry is lost (round-5 bench
@@ -127,21 +128,32 @@ object Bench {
     // seconds ride along so the line still accounts for the total.
     // Full 3-decimal detail, spread, and raw pass times always go to
     // the sidecar file below.
+    // Failed queries (name -> exception class) ride on the line too,
+    // as many as fit in half the budget; the rest are counted in
+    // "failed_omitted".
     val Budget = 1995 // window 2000 minus the trailing newline, minus slack
     val sfShort = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    val stdoutLine = Seq(mainLine(3, sfDir, unit = true))
-      .find(_.length <= Budget).getOrElse {
+    val failedKept = {
+      var used = 2
+      failed.toSeq.takeWhile { case (k, c) =>
+        used += k.length + c.length + 6; used <= Budget / 2 }
+    }
+    val failedPart = s""""failed":${failedMap(failedKept)},""" +
+      (if (failedKept.size < failed.size)
+        s""""failed_omitted":${failed.size - failedKept.size},""" else "")
+    val fullLine = f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":$queriesJson,$failedPart"sf":"$sfDir"}"""
+    val stdoutLine = if (fullLine.length <= Budget) fullLine else {
       // slowest-first fill: reserve worst-case digits for the omitted
       // count and a fixed-width omitted sum, then pack entries while
       // they fit (the first kept entry carries no comma — exact
       // accounting, no reliance on slack)
-      val bySlowest = names.map(_._1).sortBy(k => (-best(k), k))
+      val bySlowest = ok.map(_._1).sortBy(k => (-best(k), k))
       val entries = bySlowest.map { k =>
         "\"" + k + f"""\":${best(k)}%.1f""" }
       val omittedPad = "0" * entries.size.toString.length
       val sumPad = f"${total}%.1f".length
       val fixed = (f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":{},""" +
-        s""""omitted":$omittedPad,"omitted_sum_s":${"0" * sumPad},"sf":"$sfShort"}""").length
+        failedPart + s""""omitted":$omittedPad,"omitted_sum_s":${"0" * sumPad},"sf":"$sfShort"}""").length
       val keep = scala.collection.mutable.ArrayBuffer.empty[String]
       var used = fixed
       var full = false // stop at the FIRST non-fit so kept = a strict
@@ -152,17 +164,17 @@ object Bench {
         } else full = true
       }
       val keptSet = bySlowest.take(keep.size).toSet
-      val omittedSum = names.collect {
+      val omittedSum = ok.collect {
         case (k, _) if !keptSet.contains(k) => best(k) }.sum
-      f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":${keep.mkString("{", ",", "}")},"omitted":${entries.size - keep.size},"omitted_sum_s":$omittedSum%.1f,"sf":"$sfShort"}"""
+      f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":${keep.mkString("{", ",", "}")},$failedPart"omitted":${entries.size - keep.size},"omitted_sum_s":$omittedSum%.1f,"sf":"$sfShort"}"""
     }
-    val passTimes = names.map { case (k, _) =>
+    val passTimes = ok.map { case (k, _) =>
       "\"" + k + "\":[" + times(k).reverse.map(t => f"$t%.3f").mkString(",") + "]"
     }.mkString("{", ",", "}")
     val loadArr = loads.map(l => f"$l%.2f").mkString("[", ",", "]")
     val probeAfter = cpuProbeMs()
     val probeMtAfter = cpuProbeMtMs()
-    val sidecar = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${qmap(3)},"spread":$spreads,"pass_times":$passTimes,"passes":$passes,"extra_passes":$extraPasses,"cpus":"$cpus","loadavg":$loadArr,"probe_ms":[$probeBefore%.1f,$probeAfter%.1f],"probe_mt_ms":[$probeMtBefore%.1f,$probeMtAfter%.1f],"sf":"$sfDir"}"""
+    val sidecar = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$queriesJson,"failed":${failedMap(failed)},"spread":$spreads,"pass_times":$passTimes,"passes":$passes,"extra_passes":$extraPasses,"cpus":"$cpus","loadavg":$loadArr,"probe_ms":[$probeBefore%.1f,$probeAfter%.1f],"probe_mt_ms":[$probeMtBefore%.1f,$probeMtAfter%.1f],"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_SELF.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (sidecar + "\n").getBytes("UTF-8"))

@@ -20,7 +20,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Selected by `GRAFT_RELIABLE_CHECKPOINT=1` (deploy-time, no code
   * change) or the `reliable` var (spec'd directly). The checkpoint
-  * dir defaults to session scratch; production sets
+  * dir defaults to this JVM's scratch (Spark writes each context's
+  * checkpoints under a fresh UUID, never read by a later run, so the
+  * scratch cleanup removes them); production sets
   * `sparkContext.setCheckpointDir` to cluster storage first and this
   * helper respects it.
   */
@@ -32,7 +34,7 @@ object Checkpoints {
   private def ensureCheckpointDir(s: SparkSession): Unit =
     if (s.sparkContext.getCheckpointDir.isEmpty)
       s.sparkContext.setCheckpointDir(
-        graft.Scratch.path("graft_ckpt").toString)
+        graft.Scratch.processScoped("graft_ckpt").toString)
 
   /** Eagerly materialize `df` and truncate its lineage on the
     * configured rung. Both branches return a plan whose depth is

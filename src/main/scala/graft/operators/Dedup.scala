@@ -305,27 +305,18 @@ object Dedup {
   // this one epoch. A future DYNAMIC tombstone feed must fold a
   // tombstone-epoch into those cache keys (and this root's), or a
   // newer batch would silently serve the older batch's landed pairs.
-  private val lshTombStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val lshTombIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so DedupSpec can pin build-once. */
-  private[graft] val lshTombBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val lshTombStores = new graft.Landed[String]("graft_sigtomb")
 
   /** Land the tombstone sidecar for the signature store: the deleted
     * doc_ids only (∝ batch by construction), derived index-locally
     * from the landed sig artifact — never a corpus read. */
   private def lshTombRoot(s: SparkSession, d: String): String =
-    lshTombStores.computeIfAbsent(d, _ => {
-      lshTombBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_sigtomb",
-        s"t${lshTombIds.getAndIncrement()}").toString
+    lshTombStores.root(d) { out =>
       SigStore.forDataset(s, d).sig(s)
         .filter(col("doc_id") % DelEvery === DelSlot)
         .select("doc_id")
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** The landed tombstone ids as a fresh store read — exposed so the
     * spec can pin |tombstones| ∝ batch. */
@@ -347,8 +338,7 @@ object Dedup {
     * measured for BM25/IVF (anti-join + overwrite of sig/banded);
     * the masked probe is the verb's probe-time half. */
   private val lshDelPairStores =
-    new java.util.concurrent.ConcurrentHashMap[(String, Double, Int), String]()
-  private val lshDelPairIds = new java.util.concurrent.atomic.AtomicInteger(0)
+    new graft.Landed[(String, Double, Int)]("graft_sigmaskpairs")
 
   def minhashLshDelete(s: SparkSession, d: String,
                        minEst: Double = 0.5,
@@ -358,28 +348,20 @@ object Dedup {
     // per delete batch, every later read is artifact-sized); in
     // production the artifact invalidates when the next tombstone
     // batch lands, exactly as the live pair set invalidates on append
-    val path = lshDelPairStores.computeIfAbsent((d, minEst, maxBucket), _ => {
+    val path = lshDelPairStores.root((d, minEst, maxBucket)) { out =>
       val st = SigStore.forDataset(s, d)
       val full = st.banded(s)
       val masked = full.join(broadcast(lshTombStore(s, d)),
         Seq("doc_id"), "left_anti")
-      val out = graft.Scratch.processScoped("graft_sigmaskpairs",
-        s"mp${lshDelPairIds.getAndIncrement()}").toString
       lshPairsFrom(masked, st.sig(s), minEst, maxBucket,
         capFrom = Some(full))
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
     s.read.parquet(path)
       .transform(Present.sortedUnbounded(_, col("doc_a"), col("doc_b")))
   }
 
-  private val lshPurgeStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val lshPurgeIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so DedupSpec can pin build-once. */
-  private[graft] val lshPurgeBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val lshPurgeStores = new graft.Landed[String]("graft_sigpurge")
 
   /** Compaction with tombstone PURGE for the signature store — the
     * twin [[minhashLshDelete]]'s scaladoc names: rewrite the landed
@@ -391,18 +373,14 @@ object Dedup {
     * the compaction that refreshes the stale per-bucket counts the
     * masked probe lives with. Index-local, priced ∝ store. */
   private def lshPurgeRoot(s: SparkSession, d: String): String =
-    lshPurgeStores.computeIfAbsent(d, _ => {
-      lshPurgeBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_sigpurge",
-        s"p${lshPurgeIds.getAndIncrement()}").toString
+    lshPurgeStores.root(d) { out =>
       val st = SigStore.forDataset(s, d)
       val tomb = lshTombStore(s, d)
       st.sig(s).join(broadcast(tomb), Seq("doc_id"), "left_anti")
         .write.mode("overwrite").parquet(s"$out/sig")
       st.banded(s).join(broadcast(tomb), Seq("doc_id"), "left_anti")
         .write.mode("overwrite").parquet(s"$out/banded")
-      out
-    })
+    }
 
   /** The purged (sig, banded) artifacts as fresh store reads —
     * exposed so the spec can pin purged = store − tombstones. */
@@ -424,22 +402,18 @@ object Dedup {
     * signatures restricted to survivors, caps over survivors,
     * pairs among survivors. */
   private val lshPurgePairStores =
-    new java.util.concurrent.ConcurrentHashMap[(String, Double, Int), String]()
+    new graft.Landed[(String, Double, Int)]("graft_sigpurge")
 
   def minhashLshDeleteCompact(s: SparkSession, d: String,
                               minEst: Double = 0.5,
                               maxBucket: Int = LshMaxBucket): DataFrame = {
-    // pairs land UNDER the purge root (so the read provably stands on
-    // the purged artifacts — DedupSpec pins the path), once per
-    // compaction; reads are artifact-sized thereafter
-    val path = lshPurgePairStores.computeIfAbsent((d, minEst, maxBucket),
-      _ => {
-        val (sig, banded) = lshPurgedStore(s, d)
-        val out = s"${lshPurgeRoot(s, d)}/pairs_${minEst}_$maxBucket"
-        lshPairsFrom(banded, sig, minEst, maxBucket)
-          .write.mode("overwrite").parquet(out)
-        out
-      })
+    // pairs land in the purge store's namespace (DedupSpec pins the
+    // path), once per compaction; reads are artifact-sized thereafter
+    val path = lshPurgePairStores.root((d, minEst, maxBucket)) { out =>
+      val (sig, banded) = lshPurgedStore(s, d)
+      lshPairsFrom(banded, sig, minEst, maxBucket)
+        .write.mode("overwrite").parquet(out)
+    }
     s.read.parquet(path)
       .transform(Present.sortedUnbounded(_, col("doc_a"), col("doc_b")))
   }
@@ -742,26 +716,16 @@ object Dedup {
     // and an internal sort would cost a range exchange per side
   }
 
-  private val simhashSigStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val simhashPairStores =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), String]()
-  private val simhashPairIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so DedupSpec can pin build-once. */
-  private[graft] val simhashPairBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private val simhashSigStores = new graft.Landed[String]("graft_simhash")
+  private[graft] val simhashPairStores =
+    new graft.Landed[(String, Int, Int)]("graft_simhash")
 
   /** The signature relation is maxHam-INDEPENDENT, so it lands keyed
     * by dataset alone (the SigStore split: store per dataset, pairs
     * per (dataset, params)) — a second threshold never re-pays the
     * corpus tokenize + 64-bit vote head. */
   private def simhashSigRoot(s: SparkSession, d: String): String =
-    simhashSigStores.computeIfAbsent(d, _ => {
-      val out = graft.Scratch.processScoped("graft_simhash",
-        s"sig${simhashPairIds.getAndIncrement()}").toString
-      simhash(s, d).write.mode("overwrite").parquet(out)
-      out
-    })
+    simhashSigStores.root(d)(simhash(s, d).write.mode("overwrite").parquet(_))
 
   /** SimHash near-dup pairs at Hamming distance <= maxHam, blocked by
     * 15-bit band equality (any pair within distance 3 must agree on
@@ -776,16 +740,10 @@ object Dedup {
   def simhashPairs(s: SparkSession, d: String,
                    maxHam: Int = 3,
                    maxBucket: Int = SimHashMaxBucket): DataFrame = {
-    val path = simhashPairStores.computeIfAbsent((d, maxHam, maxBucket),
-      _ => {
-      simhashPairBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_simhash",
-        s"p${simhashPairIds.getAndIncrement()}_h${maxHam}_b$maxBucket")
-        .toString
+    val path = simhashPairStores.root((d, maxHam, maxBucket)) { out =>
       simhashPairsFrom(s.read.parquet(simhashSigRoot(s, d)), maxHam,
         maxBucket).write.mode("overwrite").parquet(out)
-      out
-    })
+    }
     s.read.parquet(path)
       .transform(Present.sortedUnbounded(_, col("doc_a"), col("doc_b")))
   }
@@ -871,9 +829,7 @@ object Dedup {
     // suite's last per-run recomputation in the family (BENCH_SELF
     // pass-1 3.8 s vs 0.45 s min); steady state is now a store read
     // like every other pair artifact.
-    val path = ensembleStores.computeIfAbsent(d, _ => {
-      val out = graft.Scratch.processScoped("graft_ensemble",
-        s"e${ensembleIds.getAndIncrement()}").toString
+    val path = ensembleStores.root(d) { out =>
       val mh = SigStore.lshPairs(s, d).select("doc_a", "doc_b")
         .select(col("doc_a"), col("doc_b"),
           lit(1).as("m"), lit(0).as("sm"), lit(0).as("e"))
@@ -892,14 +848,12 @@ object Dedup {
           (col("e") === 1).as("in_exact"),
           (col("m") + col("sm") + col("e")).as("votes"))
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
     s.read.parquet(path)
       .transform(Present.sortedUnbounded(_, col("doc_a"), col("doc_b")))
   }
 
-  private val ensembleStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val ensembleStores = new graft.Landed[String]("graft_ensemble")
 
   /** Degenerate-bucket threshold for the CLUSTERED ensemble: band
     * buckets holding more than this many signatures route to O(n)
@@ -913,8 +867,7 @@ object Dedup {
   val EnsembleClusterBucket = 2
 
   private val ensembleClusteredStores =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-  private val ensembleIds = new java.util.concurrent.atomic.AtomicInteger(0)
+    new graft.Landed[(String, Int)]("graft_ensemble")
 
   /** STAR EDGES of the degenerate band buckets of a banded signature
     * relation: every bucket deeper than `t` becomes (rep, member)
@@ -958,9 +911,7 @@ object Dedup {
     * CTEs). */
   def dedupEnsembleClustered(s: SparkSession, d: String,
                              t: Int = EnsembleClusterBucket): DataFrame = {
-    val path = ensembleClusteredStores.computeIfAbsent((d, t), _ => {
-      val out = graft.Scratch.processScoped("graft_ensemble",
-        s"c${ensembleIds.getAndIncrement()}_t$t").toString
+    val path = ensembleClusteredStores.root((d, t)) { out =>
       val st = SigStore.forDataset(s, d)
       def tag(df: DataFrame, m: Int, sm: Int, e: Int, c: Int): DataFrame =
         df.select(col("doc_a"), col("doc_b"), lit(m).as("m"),
@@ -988,8 +939,7 @@ object Dedup {
           (col("c") === 1).as("clustered"),
           (col("m") + col("sm") + col("e")).as("votes"))
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
     s.read.parquet(path)
       .transform(Present.sortedUnbounded(_, col("doc_a"), col("doc_b")))
   }
@@ -1016,11 +966,7 @@ object Dedup {
     * store-∪-batch bucket counts — identical semantics to the full
     * cap; a production store maintains the per-bucket counts
     * incrementally (they are exactly the store's bucket sizes). */
-  private val incrStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** Build counter — exposed so DedupSpec can pin build-once. */
-  private[graft] val incrBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val incrStores = new graft.Landed[String]("graft_incr")
 
   def dedupIncremental(s: SparkSession, d: String,
                        minEst: Double = 0.5, maxBucket: Int = LshMaxBucket): DataFrame = {
@@ -1029,10 +975,7 @@ object Dedup {
     // family's artifacts: the previous form re-wrote both parquet
     // halves on EVERY call, paying the store build in what is supposed
     // to be the recurrent-cost measurement (1.54 s → store-read shape).
-    val root = incrStores.computeIfAbsent(d, _ => {
-      incrBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_incr",
-        s"store_${lshEpoch.getAndIncrement()}").toString
+    val root = incrStores.root(d) { out =>
       // derive both halves from the session SigStore — the corpus was
       // already minhashed for the store; the split is two metadata-cheap
       // parquet rewrites partitioned by is_batch (ONE pass per artifact,
@@ -1045,8 +988,7 @@ object Dedup {
       st.sig(s).withColumn("is_batch", isBatch)
         .write.mode("overwrite").partitionBy("is_batch")
         .parquet(s"$out/sig")
-      out
-    })
+    }
     dedupIncrementalProbe(s, root, minEst, maxBucket)
       .transform(Present.sortedUnbounded(_, col("doc_a"), col("doc_b")))
   }

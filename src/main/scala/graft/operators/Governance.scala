@@ -435,12 +435,7 @@ object Governance {
     1L -> "dp_release", 2L -> "dp_sum", 3L -> "dp_user_count",
     4L -> "dp_release_refresh")
 
-  private val dpLedgerStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val dpLedgerIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so GovernanceSpec can pin build-once. */
-  private[graft] val dpLedgerBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val dpLedgerStores = new graft.Landed[String]("graft_dpledger")
 
   /** Land the per-release ε sidecar (seq, release, eps_units) — the
     * idf/nll-sidecar pattern applied to privacy accounting: the spend
@@ -448,10 +443,7 @@ object Governance {
     * request reads the ledger instead of trusting its caller. Tiny by
     * construction (one row per release ever made). */
   private def dpLedgerRoot(s: SparkSession, d: String): String =
-    dpLedgerStores.computeIfAbsent(d, _ => {
-      dpLedgerBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_dpledger",
-        s"l${dpLedgerIds.getAndIncrement()}").toString
+    dpLedgerStores.root(d) { out =>
       import scala.jdk.CollectionConverters._
       s.createDataFrame(
         DpSchedule.map { case (seq, rel) =>
@@ -464,8 +456,7 @@ object Governance {
           org.apache.spark.sql.types.StructField("eps_units",
             org.apache.spark.sql.types.LongType))))
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** The landed ledger as a fresh store read — exposed so the spec
     * can pin one row per release. */
@@ -609,27 +600,18 @@ object Governance {
   val ManifestIncrEvery = 100L
   val ManifestIncrSlot  = 97L
 
-  private val manifestBaseStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val manifestBaseIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so GovernanceSpec can pin build-once. */
-  private[graft] val manifestBaseBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val manifestBaseStores = new graft.Landed[String]("graft_manifbase")
 
   /** Land yesterday's manifest: [[manifestOf]] over the corpus minus
     * the arriving batch — the artifact a production release already
     * has on disk when the append lands. */
   private def manifestBaseRoot(s: SparkSession, d: String): String =
-    manifestBaseStores.computeIfAbsent(d, _ => {
-      manifestBaseBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_manifbase",
-        s"b${manifestBaseIds.getAndIncrement()}").toString
+    manifestBaseStores.root(d) { out =>
       manifestOf(Tables.documents(s, d)
           .filter(col("doc_id") % ManifestIncrEvery =!= ManifestIncrSlot),
         "n_chars", "total_chars")
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** The landed base manifest as a fresh store read — exposed so the
     * spec can pin byte-stability of the untouched shards. */

@@ -388,31 +388,17 @@ object Multimodal {
     * this store each query re-ran it — a suite paid the codec three
     * times. At 100 TB the production shape is exactly a store: decode
     * once into a landed columnar features table, query it many times;
-    * no one re-decodes petabytes of video per downstream query. Keyed
-    * by dataset dir; paths are monotonically unique per build so a
-    * returned reader never observes its path overwritten, and
-    * `computeIfAbsent` serializes the build per key. */
-  private val featureStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val storeIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so MultimodalSpec can pin build-once reuse. */
-  private[graft] val featureBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+    * no one re-decodes petabytes of video per downstream query. A
+    * [[graft.Landed]] root keyed by dataset dir. */
+  private[graft] val featureStores = new graft.Landed[String]("graft_mediastore")
 
   /** Landed features table for a dataset dir, building on first use.
     * Returns a fresh parquet read bound to the caller's session (the
     * cache holds only paths, so sessions interoperate). */
-  def featuresTable(s: SparkSession, d: String): DataFrame = {
-    val path = featureStores.computeIfAbsent(d, _ => {
-      featureBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_mediastore",
-        s"m${storeIds.getAndIncrement()}").toString
-      extractFeatures(mediaTable(s, d)).toDF()
-        .write.mode("overwrite").parquet(out)
-      out
+  def featuresTable(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(featureStores.root(d) { out =>
+      extractFeatures(mediaTable(s, d)).toDF().write.mode("overwrite").parquet(out)
     })
-    s.read.parquet(path)
-  }
 
   def multimodalFeatures(s: SparkSession, d: String): DataFrame =
     Present.sortedUnbounded(featuresTable(s, d),
@@ -431,12 +417,7 @@ object Multimodal {
   val MediaIncrEvery = 10L
   val MediaIncrSlot  = 7L
 
-  private val mediaSegStores =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private val mediaSegIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so MultimodalSpec can pin build-once. */
-  private[graft] val mediaSegBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val mediaSegStores = new graft.Landed[String]("graft_mediaseg")
 
   /** Land the (base, delta) feature segments: base = yesterday's
     * store — a LANDED artifact, so it derives from the existing
@@ -444,21 +425,19 @@ object Multimodal {
     * production it simply already exists on disk); delta DECODES only
     * the batch — the one codec pass the append actually pays, so
     * ingest is priced ∝ batch (at 100 TB: the nightly media drop
-    * decodes overnight's uploads, never the archived petabytes). */
-  private def mediaSegRoots(s: SparkSession, d: String): (String, String) =
-    mediaSegStores.computeIfAbsent(d, _ => {
-      mediaSegBuildCount.incrementAndGet()
-      val n = mediaSegIds.getAndIncrement()
-      val baseOut = graft.Scratch.processScoped("graft_mediab", s"b$n").toString
+    * decodes overnight's uploads, never the archived petabytes). Both
+    * land under one root. */
+  private def mediaSegRoots(s: SparkSession, d: String): (String, String) = {
+    val root = mediaSegStores.root(d) { out =>
       featuresTable(s, d)
         .filter(col("doc_id") % MediaIncrEvery =!= MediaIncrSlot)
-        .write.mode("overwrite").parquet(baseOut)
-      val deltaOut = graft.Scratch.processScoped("graft_mediad", s"d$n").toString
+        .write.mode("overwrite").parquet(s"$out/graft_mediab")
       extractFeatures(mediaTableOf(s, Tables.documents(s, d)
           .filter(col("doc_id") % MediaIncrEvery === MediaIncrSlot)))
-        .toDF().write.mode("overwrite").parquet(deltaOut)
-      (baseOut, deltaOut)
-    })
+        .toDF().write.mode("overwrite").parquet(s"$out/graft_mediad")
+    }
+    (s"$root/graft_mediab", s"$root/graft_mediad")
+  }
 
   /** The landed delta segment as a fresh read — exposed so the spec
     * can pin |delta| = |batch|. */
@@ -562,55 +541,33 @@ object Multimodal {
   val MediaDelEvery = 10L
   val MediaDelSlot  = 3L
 
-  private val mediaTombStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val mediaTombIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so MultimodalSpec can pin build-once. */
-  private[graft] val mediaTombBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val mediaTombStores = new graft.Landed[String]("graft_mediatomb")
 
   /** Landed tombstone sidecar: the deleted doc_ids ONLY, derived
     * index-locally from the features store's narrow id column (a real
     * takedown arrives as an id list; deriving it here keeps the
     * rehearsal deterministic). ∝ batch by construction. */
-  private[graft] def mediaTombStore(s: SparkSession, d: String): DataFrame = {
-    val path = mediaTombStores.computeIfAbsent(d, _ => {
-      mediaTombBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_mediatomb",
-        s"t${mediaTombIds.getAndIncrement()}").toString
+  private[graft] def mediaTombStore(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(mediaTombStores.root(d) { out =>
       featuresTable(s, d)
         .filter(col("doc_id") % MediaDelEvery === MediaDelSlot)
         .select("doc_id")
         .write.mode("overwrite").parquet(out)
-      out
     })
-    s.read.parquet(path)
-  }
 
-  private val mediaPurgeStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val mediaPurgeIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so MultimodalSpec can pin build-once. */
-  private[graft] val mediaPurgeBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val mediaPurgeStores = new graft.Landed[String]("graft_mediapurge")
 
   /** The purged single segment: the features store rewritten minus
     * the tombstoned docs — signatures only, NO codec pass (the store
     * already decoded them once), the compaction that turns the
     * probe-time mask into a storage saving. */
   private[graft] def mediaPurgedSegment(s: SparkSession, d: String)
-      : DataFrame = {
-    val path = mediaPurgeStores.computeIfAbsent(d, _ => {
-      mediaPurgeBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_mediapurge",
-        s"p${mediaPurgeIds.getAndIncrement()}").toString
+      : DataFrame =
+    s.read.parquet(mediaPurgeStores.root(d) { out =>
       featuresTable(s, d)
         .join(broadcast(mediaTombStore(s, d)), Seq("doc_id"), "left_anti")
         .write.mode("overwrite").parquet(out)
-      out
     })
-    s.read.parquet(path)
-  }
 
   /** MASKED media dedup (the delete's probe half): the dedup decision
     * AFTER a takedown — deleted docs neither survive nor anchor any
@@ -740,27 +697,17 @@ object Multimodal {
       }
   }
 
-  private val divFeatureStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val divStoreIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so RehearsalSpec can pin build-once. */
-  private[graft] val divFeatureBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val divFeatureStores =
+    new graft.Landed[String]("graft_mediastore_div")
 
   /** Landed features store for the DIVERSE corpus — the same genuine
     * decode ([[extractFeatures]] — real PNG parse, real pixel reads)
     * over the diverse payloads. */
-  def featuresTableDiverse(s: SparkSession, d: String): DataFrame = {
-    val path = divFeatureStores.computeIfAbsent(d, _ => {
-      divFeatureBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_mediastore_div",
-        s"m${divStoreIds.getAndIncrement()}").toString
+  def featuresTableDiverse(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(divFeatureStores.root(d) { out =>
       extractFeatures(mediaTableDiverseOf(s, Tables.documents(s, d))).toDF()
         .write.mode("overwrite").parquet(out)
-      out
     })
-    s.read.parquet(path)
-  }
 
   /** The banded near-dup over the diverse store — the rehearsal's
     * measured query (same rule, same plan as the gated

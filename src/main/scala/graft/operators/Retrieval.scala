@@ -161,14 +161,9 @@ object Retrieval {
     java.lang.Long.parseLong(hex, 16) % buckets
   }
 
-  private val dtStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val dtIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so RetrievalSpec can pin build-once. */
-  private[graft] val dtBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val dtStores = new graft.Landed[String]("graft_bm25")
 
-  /** Land ONE index SEGMENT under a fresh root — the single
+  /** Land ONE index SEGMENT under a store root — the single
     * index-build recipe every store below shares: `dt` = postings
     * PARTITIONED BY word bucket (wb = md5-60(word) % 64 — on disk
     * each bucket is its own directory, so a probe reads ONLY the
@@ -177,17 +172,16 @@ object Retrieval {
     * next to the index — `dl` (doc_id → length) and `dfr`
     * (word → df) — derived from the landed postings so ONE tokenize
     * pass covers everything. A layout change edits exactly this
-    * method; the full/base/delta roots only choose the doc slice. */
-  private def landSegment(s: SparkSession, docs: DataFrame,
-                          tag: String, rest: String): String = {
-    val out = graft.Scratch.processScoped(tag, rest).toString
+    * method; the full/base/delta roots only choose the doc slice, the
+    * bucket-count rehearsal ([[indexRootAt]]) the bucket count. */
+  private def landSegment(s: SparkSession, docs: DataFrame, out: String,
+                          buckets: Int = WordBuckets): Unit = {
     TextOps.tokenize(docs)
       .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
       .withColumn("wb",
-        pmod(Dedup.md5Hash60(col("word")), lit(WordBuckets.toLong)))
+        pmod(Dedup.md5Hash60(col("word")), lit(buckets.toLong)))
       .write.mode("overwrite").partitionBy("wb").parquet(s"$out/dt")
     deriveSidecars(s, out)
-    out
   }
 
   /** Re-derive the `dl`/`dfr` corpus-stat sidecars from a root's
@@ -204,11 +198,7 @@ object Retrieval {
   }
 
   private def dtRoot(s: SparkSession, d: String): String =
-    dtStores.computeIfAbsent(d, _ => {
-      dtBuildCount.incrementAndGet()
-      landSegment(s, Tables.documents(s, d), "graft_bm25",
-        s"x${dtIds.getAndIncrement()}")
-    })
+    dtStores.root(d)(landSegment(s, Tables.documents(s, d), _))
 
   /** A landed postings segment as a fresh store read. Partition-column
     * inference narrows `wb` to int; pin it back to long (the
@@ -230,35 +220,21 @@ object Retrieval {
   def dfrStore(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"${dtRoot(s, d)}/dfr")
 
-  private val idfStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val idfIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so RetrievalSpec can pin build-once. */
-  private[graft] val idfBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val idfStores = new graft.Landed[String]("graft_idf")
 
-  /** Land the (df → idfq) integer sidecar from a df relation — the
-    * one place Robertson idf's ln ever runs. Shared by the
-    * full-index sidecar, the segment-sourced twin, and the
-    * post-compaction twin. `ndocs` is a 1-row (ndocs BIGINT) relation
-    * the CALLER derives from its own dl sidecar(s) — N = INDEXED
-    * docs, the count every real engine uses — so each build path
-    * stands on its own landed artifacts and never re-reads the raw
+  /** Land the (df → idfq) integer sidecar from a df relation at `out`
+    * — the one place Robertson idf's ln ever runs. Shared by the
+    * full-index sidecar, the segment-sourced twin, the
+    * post-compaction twins and the bucket-count rehearsal's root-local
+    * twin, so the ln/quantization can never drift. `ndocs` is a 1-row
+    * (ndocs BIGINT) relation the CALLER derives from its own dl
+    * sidecar(s) — N = INDEXED docs, the count every real engine
+    * uses — so each build path stands on its own landed artifacts and never re-reads the raw
     * corpus (a doc that tokenizes to zero words is not indexed and
     * does not count; the oracle's replay aggregates the same
     * token-derived dl, so the two N's agree by construction). */
   private def landIdf(s: SparkSession, dfr: DataFrame, ndocs: DataFrame,
-                      tag: String, rest: String): String = {
-    val out = graft.Scratch.processScoped(tag, rest).toString
-    landIdfTo(s, dfr, ndocs, out)
-    out
-  }
-
-  /** The one idf-landing recipe at an EXPLICIT output path — shared by
-    * every [[landIdf]] sidecar and the bucket-count rehearsal's
-    * root-local twin, so the ln/quantization can never drift. */
-  private def landIdfTo(s: SparkSession, dfr: DataFrame, ndocs: DataFrame,
-                        out: String): Unit =
+                      out: String): Unit =
     dfr.select("df").distinct()
       .crossJoin(broadcast(ndocs))
       .select(col("df"),
@@ -267,15 +243,15 @@ object Retrieval {
           * 1e7, 0).cast("long").as("idfq"))
       .write.mode("overwrite").parquet(out)
 
+  /** [[landIdf]] from a landed segment root's own dfr + dl sidecars. */
+  private def landIdfOf(s: SparkSession, root: String, out: String): Unit =
+    landIdf(s, s.read.parquet(s"$root/dfr"),
+      s.read.parquet(s"$root/dl").agg(count(lit(1)).as("ndocs")), out)
+
+  // built FROM the landed df + dl sidecars — the raw corpus is
+  // tokenized exactly once per dataset, by the postings build
   private def idfRoot(s: SparkSession, d: String): String =
-    idfStores.computeIfAbsent(d, _ => {
-      idfBuildCount.incrementAndGet()
-      // built FROM the landed df + dl sidecars — the raw corpus is
-      // tokenized exactly once per dataset, by the postings build
-      landIdf(s, dfrStore(s, d),
-        dlStore(s, d).agg(count(lit(1)).as("ndocs")),
-        "graft_idf", s"f${idfIds.getAndIncrement()}")
-    })
+    idfStores.root(d)(landIdfOf(s, dtRoot(s, d), _))
 
   /** The landed (df, idfq) integers as a fresh store read. */
   def idfStore(s: SparkSession, d: String): DataFrame =
@@ -438,40 +414,22 @@ object Retrieval {
   val IncrEvery = 10
   val IncrSlot = 7
 
-  private val baseStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val baseIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so RetrievalSpec can pin build-once. */
-  private[graft] val baseBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val baseStores = new graft.Landed[String]("graft_bm25b")
 
   private def baseRoot(s: SparkSession, d: String): String =
-    baseStores.computeIfAbsent(d, _ => {
-      baseBuildCount.incrementAndGet()
-      landSegment(s, Tables.documents(s, d)
-          .filter(col("doc_id") % IncrEvery =!= IncrSlot),
-        "graft_bm25b", s"b${baseIds.getAndIncrement()}")
-    })
+    baseStores.root(d)(landSegment(s, Tables.documents(s, d)
+      .filter(col("doc_id") % IncrEvery =!= IncrSlot), _))
 
   /** The arriving batch's DELTA artifacts, landed once per dataset:
     * the maintenance job tokenizes ONLY the batch (cost ∝ batch —
     * the other "petabytes" already sit in the base index) and lands
     * the batch's postings + stat sidecars next to the base's, the
     * way a production index APPENDS a day's segment. */
-  private val incrStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val incrIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so RetrievalSpec can pin build-once. */
-  private[graft] val incrBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val incrStores = new graft.Landed[String]("graft_bm25i")
 
   private def incrRoot(s: SparkSession, d: String): String =
-    incrStores.computeIfAbsent(d, _ => {
-      incrBuildCount.incrementAndGet()
-      landSegment(s, Tables.documents(s, d)
-          .filter(col("doc_id") % IncrEvery === IncrSlot),
-        "graft_bm25i", s"i${incrIds.getAndIncrement()}")
-    })
+    incrStores.root(d)(landSegment(s, Tables.documents(s, d)
+      .filter(col("doc_id") % IncrEvery === IncrSlot), _))
 
   /** Segment-sourced (df → idfq) sidecar — the SAME landed integers
     * as [[idfStore]] (identical formula over the identical merged df
@@ -480,12 +438,10 @@ object Retrieval {
     * trigger a full-corpus postings build on cold start, or its
     * "update cost ∝ batch" contract would be false exactly when it
     * runs standalone. */
-  private val idfSegStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val idfSegIds = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val idfSegStores = new graft.Landed[String]("graft_idfseg")
 
   private def idfSegRoot(s: SparkSession, d: String): String =
-    idfSegStores.computeIfAbsent(d, _ => {
+    idfSegStores.root(d) { out =>
       val merged = s.read.parquet(s"${baseRoot(s, d)}/dfr")
         .unionByName(s.read.parquet(s"${incrRoot(s, d)}/dfr"))
         .groupBy("word").agg(sum("df").as("df"))
@@ -494,9 +450,8 @@ object Retrieval {
       val ndocs = s.read.parquet(s"${baseRoot(s, d)}/dl")
         .unionByName(s.read.parquet(s"${incrRoot(s, d)}/dl"))
         .agg(count(lit(1)).as("ndocs"))
-      landIdf(s, merged, ndocs, "graft_idfseg",
-        s"g${idfSegIds.getAndIncrement()}")
-    })
+      landIdf(s, merged, ndocs, out)
+    }
 
   /** The segment-sourced idf integers as a fresh store read. */
   def idfSegStore(s: SparkSession, d: String): DataFrame =
@@ -550,12 +505,7 @@ object Retrieval {
   // catalog_compact trade, applied to the retrieval index.
   // ---------------------------------------------------------------
 
-  private val compactStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val compactIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so RetrievalSpec can pin build-once. */
-  private[graft] val compactBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val compactStores = new graft.Landed[String]("graft_bm25c")
 
   /** Fold the landed base + delta segments into one compacted root:
     * merge postings per (doc_id, word) — a GENERAL segment fold (tf
@@ -568,21 +518,15 @@ object Retrieval {
     * local rewrite scheduled off-peak, priced ∝ index, amortized over
     * every later probe's single-segment read. */
   private def compactRoot(s: SparkSession, d: String): String =
-    compactStores.computeIfAbsent(d, _ => {
-      compactBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_bm25c",
-        s"c${compactIds.getAndIncrement()}").toString
+    compactStores.root(d) { out =>
       readPostings(s, s"${baseRoot(s, d)}/dt")
         .unionByName(readPostings(s, s"${incrRoot(s, d)}/dt"))
         .groupBy("doc_id", "word", "wb").agg(sum("tf").as("tf"))
         .write.mode("overwrite").partitionBy("wb").parquet(s"$out/dt")
       deriveSidecars(s, out)
-      out
-    })
+    }
 
-  private val idfCmpStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val idfCmpIds = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val idfCmpStores = new graft.Landed[String]("graft_idfcmp")
 
   /** (df → idfq) sidecar sourced from the COMPACTED dfr + dl —
     * identical integers to [[idfStore]]'s (same formula, same df
@@ -590,12 +534,7 @@ object Retrieval {
     * monolithic full index OR the raw corpus: post-compaction scoring
     * stands on the compacted artifacts alone. */
   private def idfCmpRoot(s: SparkSession, d: String): String =
-    idfCmpStores.computeIfAbsent(d, _ => {
-      val root = compactRoot(s, d)
-      landIdf(s, s.read.parquet(s"$root/dfr"),
-        s.read.parquet(s"$root/dl").agg(count(lit(1)).as("ndocs")),
-        "graft_idfcmp", s"h${idfCmpIds.getAndIncrement()}")
-    })
+    idfCmpStores.root(d)(landIdfOf(s, compactRoot(s, d), _))
 
   /** Post-compaction BM25 — the gated proof that compaction is
     * INVISIBLE in the answer: one compacted segment (single dt read,
@@ -638,12 +577,7 @@ object Retrieval {
   val DelEvery = 10L
   val DelSlot  = 3L
 
-  private val tombStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val tombIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so RetrievalSpec can pin build-once. */
-  private[graft] val tombBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val tombStores = new graft.Landed[String]("graft_bm25t")
 
   /** Land the tombstone sidecar: the deleted doc_ids, nothing else —
     * the delete REQUEST is an id list, so the landed artifact is
@@ -652,15 +586,11 @@ object Retrieval {
     * index actually holds; never a corpus read): a real pipeline
     * hands the id list in directly. */
   private def tombRoot(s: SparkSession, d: String): String =
-    tombStores.computeIfAbsent(d, _ => {
-      tombBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_bm25t",
-        s"t${tombIds.getAndIncrement()}").toString
+    tombStores.root(d) { out =>
       dlStore(s, d).filter(col("doc_id") % DelEvery === DelSlot)
         .select("doc_id")
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** The landed tombstone ids as a fresh store read — exposed so the
     * spec can pin |tombstones| ∝ batch. */
@@ -689,12 +619,7 @@ object Retrieval {
       .transform(Present.sorted(_, col("query_id"), col("rank")))
   }
 
-  private val delCmpStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val delCmpIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so RetrievalSpec can pin build-once. */
-  private[graft] val delCmpBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val delCmpStores = new graft.Landed[String]("graft_bm25dc")
 
   /** Compaction with tombstone PURGE: rewrite the postings minus the
     * tombstoned docs (keeping the wb layout) and re-derive the dl/dfr
@@ -704,31 +629,20 @@ object Retrieval {
     * corpus; priced ∝ index, scheduled off-peak like every other
     * compaction here. */
   private def delCmpRoot(s: SparkSession, d: String): String =
-    delCmpStores.computeIfAbsent(d, _ => {
-      delCmpBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_bm25dc",
-        s"e${delCmpIds.getAndIncrement()}").toString
+    delCmpStores.root(d) { out =>
       readPostings(s, s"${dtRoot(s, d)}/dt")
         .join(broadcast(tombStore(s, d)), Seq("doc_id"), "left_anti")
         .write.mode("overwrite").partitionBy("wb").parquet(s"$out/dt")
       deriveSidecars(s, out)
-      out
-    })
+    }
 
-  private val idfDelStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val idfDelIds = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val idfDelStores = new graft.Landed[String]("graft_idfdel")
 
   /** (df → idfq) sidecar from the PURGED dfr + dl — the fresh-stats
     * integers post-delete-compaction (N and df both shrink), built
     * from the compacted artifacts alone. */
   private def idfDelRoot(s: SparkSession, d: String): String =
-    idfDelStores.computeIfAbsent(d, _ => {
-      val root = delCmpRoot(s, d)
-      landIdf(s, s.read.parquet(s"$root/dfr"),
-        s.read.parquet(s"$root/dl").agg(count(lit(1)).as("ndocs")),
-        "graft_idfdel", s"j${idfDelIds.getAndIncrement()}")
-    })
+    idfDelStores.root(d)(landIdfOf(s, delCmpRoot(s, d), _))
 
   /** The purged-index idf integers as a fresh store read. */
   def idfDelStore(s: SparkSession, d: String): DataFrame =
@@ -766,28 +680,16 @@ object Retrieval {
   // different count. Rehearsal-only — no gate reads these roots.
   // ---------------------------------------------------------------
 
-  private val idxAtStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val idxAtIds = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val idxAtStores = new graft.Landed[(String, Int)]("graft_bm25kb")
 
   /** Land a full postings index (+ dl/dfr sidecars + root-local idf)
     * at an EXPLICIT word-bucket count, keyed by (dataset, buckets). */
   private[graft] def indexRootAt(s: SparkSession, d: String,
                                  buckets: Int): String =
-    idxAtStores.computeIfAbsent(s"$d#b$buckets", _ => {
-      val out = graft.Scratch.processScoped("graft_bm25kb",
-        s"k${idxAtIds.getAndIncrement()}").toString
-      TextOps.tokenize(Tables.documents(s, d))
-        .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-        .withColumn("wb",
-          pmod(Dedup.md5Hash60(col("word")), lit(buckets.toLong)))
-        .write.mode("overwrite").partitionBy("wb").parquet(s"$out/dt")
-      deriveSidecars(s, out)
-      landIdfTo(s, s.read.parquet(s"$out/dfr"),
-        s.read.parquet(s"$out/dl").agg(count(lit(1)).as("ndocs")),
-        s"$out/idf")
-      out
-    })
+    idxAtStores.root((d, buckets)) { out =>
+      landSegment(s, Tables.documents(s, d), out, buckets)
+      landIdfOf(s, out, s"$out/idf")
+    }
 
   /** The BM25 probe against an explicit root/bucket count — the same
     * scoring chain as the gate, with the pruning literals hashed at
@@ -814,12 +716,7 @@ object Retrieval {
   // the pruned query stays hash-gated against the full replay.
   // ---------------------------------------------------------------
 
-  private val ubStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ubIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so RetrievalSpec can pin build-once. */
-  private[graft] val ubBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val ubStores = new graft.Landed[String]("graft_bm25ub")
 
   /** Land the per-word MAX-SCORE sidecar next to the postings: for
     * every word, the maximum exact-integer contribution any of its
@@ -830,10 +727,7 @@ object Retrieval {
     * Vocabulary-sized, like dfr — index maintenance refreshes it with
     * the other sidecars. */
   private def ubRoot(s: SparkSession, d: String): String =
-    ubStores.computeIfAbsent(d, _ => {
-      ubBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_bm25ub",
-        s"u${ubIds.getAndIncrement()}").toString
+    ubStores.root(d) { out =>
       val dl = dlStore(s, d)
       val st = dl.agg(sum("len").as("t"), count(lit(1)).as("nd"))
         .select(expr("(10 * t) div nd").as("avgq"))
@@ -847,8 +741,7 @@ object Retrieval {
         .withColumn("wb",
           pmod(Dedup.md5Hash60(col("word")), lit(WordBuckets.toLong)))
         .write.mode("overwrite").partitionBy("wb").parquet(out)
-      out
-    })
+    }
 
   /** The landed (word, ubq) max-score integers as a fresh store read
     * (wb pinned back to long, like every bucketed store). */
@@ -1032,12 +925,7 @@ object Retrieval {
     (2L, "part", "filter"),
     (3L, "customer", "join"))
 
-  private val ppStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ppIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so RetrievalSpec can pin build-once. */
-  private[graft] val ppBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val ppStores = new graft.Landed[String]("graft_bm25pos")
 
   /** Land the POSITIONAL postings — (doc_id, pos, word) one row per
     * token occurrence, PARTITIONED BY the same md5 word bucket as the
@@ -1058,25 +946,16 @@ object Retrieval {
         pmod(Dedup.md5Hash60(col("word")), lit(WordBuckets.toLong)))
 
   private def ppRoot(s: SparkSession, d: String): String =
-    ppStores.computeIfAbsent(d, _ => {
-      ppBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_bm25pos",
-        s"p${ppIds.getAndIncrement()}").toString
+    ppStores.root(d) { out =>
       positionalPostingsOf(Tables.documents(s, d))
         .write.mode("overwrite").partitionBy("wb").parquet(out)
-      out
-    })
+    }
 
   /** The landed positional postings as a fresh store read. */
   def ppStore(s: SparkSession, d: String): DataFrame =
     readPostings(s, ppRoot(s, d))
 
-  private val ppSegStores =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private val ppSegIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so RetrievalSpec can pin build-once. */
-  private[graft] val ppSegBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val ppSegStores = new graft.Landed[String]("graft_bm25posseg")
 
   /** Land the (base, delta) positional segments — the append verb for
     * the positional index (the [[bm25Incremental]] contract: base =
@@ -1084,21 +963,18 @@ object Retrieval {
     * has; delta tokenizes ONLY the arriving batch, so the append is
     * priced ∝ batch). Positions are per-document, so segments union
     * without renumbering — the property that makes a positional index
-    * append-friendly. */
-  private def ppSegRoots(s: SparkSession, d: String): (String, String) =
-    ppSegStores.computeIfAbsent(d, _ => {
-      ppSegBuildCount.incrementAndGet()
-      val n = ppSegIds.getAndIncrement()
-      val baseOut = graft.Scratch.processScoped("graft_bm25posb", s"b$n").toString
+    * append-friendly. Both land under one root. */
+  private def ppSegRoots(s: SparkSession, d: String): (String, String) = {
+    val root = ppSegStores.root(d) { out =>
       ppStore(s, d)
         .filter(col("doc_id") % IncrEvery =!= IncrSlot)
-        .write.mode("overwrite").partitionBy("wb").parquet(baseOut)
-      val deltaOut = graft.Scratch.processScoped("graft_bm25posd", s"d$n").toString
+        .write.mode("overwrite").partitionBy("wb").parquet(s"$out/graft_bm25posb")
       positionalPostingsOf(Tables.documents(s, d)
           .filter(col("doc_id") % IncrEvery === IncrSlot))
-        .write.mode("overwrite").partitionBy("wb").parquet(deltaOut)
-      (baseOut, deltaOut)
-    })
+        .write.mode("overwrite").partitionBy("wb").parquet(s"$out/graft_bm25posd")
+    }
+    (s"$root/graft_bm25posb", s"$root/graft_bm25posd")
+  }
 
   /** The landed delta segment as a fresh read — exposed so the spec
     * can pin |delta docs| = |batch|. */
@@ -1131,26 +1007,17 @@ object Retrieval {
     phraseRetrieveFrom(s, ppStore(s, d)
       .join(broadcast(tombStore(s, d)), Seq("doc_id"), "left_anti"))
 
-  private val ppPurgeStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ppPurgeIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so RetrievalSpec can pin build-once. */
-  private[graft] val ppPurgeBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val ppPurgeStores = new graft.Landed[String]("graft_bm25pospurge")
 
   /** The purged positional store: rewritten minus the tombstoned
     * docs' rows, wb layout kept (the probe's bucket pruning survives
     * the purge) — index-local, no tokenize, priced ∝ store. */
   private def ppPurgeRoot(s: SparkSession, d: String): String =
-    ppPurgeStores.computeIfAbsent(d, _ => {
-      ppPurgeBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_bm25pospurge",
-        s"p${ppPurgeIds.getAndIncrement()}").toString
+    ppPurgeStores.root(d) { out =>
       ppStore(s, d)
         .join(broadcast(tombStore(s, d)), Seq("doc_id"), "left_anti")
         .write.mode("overwrite").partitionBy("wb").parquet(out)
-      out
-    })
+    }
 
   /** The purged positional store as a fresh read — exposed so the
     * spec can pin purged = store − tombstoned rows. */

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped MATERIALIZED SIGNATURE STORE for the MinHash/LSH
@@ -21,13 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and keyed by (dataset dir, shingle df-cap, hash family params) so
   * distinct corpora or parameterizations never collide.
   *
-  * Concurrency/staleness: artifact roots are MONOTONICALLY UNIQUE per
-  * build (an AtomicInteger, never recycled — a previously returned
-  * reader can never observe its path overwritten), and
-  * `computeIfAbsent` serializes the build per key, so concurrent
-  * callers in one JVM get one build and the same path. Paths from a
-  * previous JVM are never re-registered — a new JVM rebuilds from the
-  * corpus (mode=overwrite makes the re-write safe).
+  * Concurrency/staleness: every artifact is a [[graft.Landed]] root —
+  * never reused, one build per key per JVM even when callers race.
   *
   * Derivation chain: `shingles` is written from the one corpus pass;
   * `sig` is aggregated FROM the landed shingles parquet; `banded`
@@ -36,17 +29,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SigStore {
 
-  private final case class Key(dir: String, maxDf: Int, nH: Int, bands: Int)
+  private[graft] final case class Key(dir: String, maxDf: Int, nH: Int, bands: Int)
 
-  private val stores = new ConcurrentHashMap[Key, String]()
-  private val pairs  = new ConcurrentHashMap[(Key, Double, Int), String]()
-  private val exact  = new ConcurrentHashMap[(Key, Double), String]()
-  private val ids    = new AtomicInteger(0)
-  /** Build counter — exposed so DedupSpec can pin build-once reuse. */
-  private[graft] val buildCount = new AtomicInteger(0)
-  /** Exact-pair build counter — exposed so PipelineSpec can pin that
-    * the five exact-graph consumers share one landed artifact. */
-  private[graft] val exactBuildCount = new AtomicInteger(0)
+  private[graft] val stores = new graft.Landed[Key]("graft_sigstore")
+  private val pairs = new graft.Landed[(Key, Double, Int)]("graft_sigstore")
+  private val lshVerified =
+    new graft.Landed[(Key, Double, Double, Int)]("graft_sigstore")
+  private[graft] val exact = new graft.Landed[(Key, Double)]("graft_sigstore")
 
   /** Handle over the landed artifacts; DataFrames are fresh parquet
     * reads bound to the CALLER's session (the cache holds only
@@ -61,20 +50,14 @@ object SigStore {
   def forDataset(s: SparkSession, d: String,
                  maxDf: Int = Dedup.MaxShingleDf): Store = {
     val key = Key(d, maxDf, Dedup.NumHashes, Dedup.Bands)
-    Store(stores.computeIfAbsent(key, _ => build(s, d, maxDf)))
-  }
-
-  private def build(s: SparkSession, d: String, maxDf: Int): String = {
-    buildCount.incrementAndGet()
-    val root = graft.Scratch.processScoped("graft_sigstore",
-      s"s${ids.getAndIncrement()}").toString
-    Dedup.cappedShingles(s, d, maxDf)
-      .write.mode("overwrite").parquet(s"$root/shingles")
-    Dedup.minhashSignaturesMd5From(s.read.parquet(s"$root/shingles"))
-      .write.mode("overwrite").parquet(s"$root/sig")
-    Dedup.bandedFrom(s.read.parquet(s"$root/sig"))
-      .write.mode("overwrite").parquet(s"$root/banded")
-    root
+    Store(stores.root(key) { root =>
+      Dedup.cappedShingles(s, d, maxDf)
+        .write.mode("overwrite").parquet(s"$root/shingles")
+      Dedup.minhashSignaturesMd5From(s.read.parquet(s"$root/shingles"))
+        .write.mode("overwrite").parquet(s"$root/sig")
+      Dedup.bandedFrom(s.read.parquet(s"$root/sig"))
+        .write.mode("overwrite").parquet(s"$root/banded")
+    })
   }
 
   /** LSH candidate pairs with signature-agreement estimate, computed
@@ -86,18 +69,12 @@ object SigStore {
                minEst: Double = 0.5, maxBucket: Int = Dedup.LshMaxBucket,
                maxDf: Int = Dedup.MaxShingleDf): DataFrame = {
     val key = (Key(d, maxDf, Dedup.NumHashes, Dedup.Bands), minEst, maxBucket)
-    val path = pairs.computeIfAbsent(key, _ => {
+    s.read.parquet(pairs.root(key) { out =>
       val st = forDataset(s, d, maxDf)
-      val out = s"${st.root}/pairs_${ids.getAndIncrement()}"
       Dedup.lshPairsFrom(st.banded(s), st.sig(s), minEst, maxBucket)
         .write.mode("overwrite").parquet(out)
-      out
     })
-    s.read.parquet(path)
   }
-
-  private val lshVerified =
-    new ConcurrentHashMap[(Key, Double, Double, Int), String]()
 
   /** Landed LSH-VERIFIED pair graph (r19): candidate generation from
     * the banded artifact + exact-Jaccard verification against the
@@ -111,9 +88,8 @@ object SigStore {
                        maxDf: Int = Dedup.MaxShingleDf): DataFrame = {
     val key = (Key(d, maxDf, Dedup.NumHashes, Dedup.Bands),
       minJ, minEst, maxBucket)
-    val path = lshVerified.computeIfAbsent(key, _ => {
+    s.read.parquet(lshVerified.root(key) { out =>
       val st = forDataset(s, d, maxDf)
-      val out = s"${st.root}/lshverified_${ids.getAndIncrement()}"
       // maxDf/maxBucket forwarded: candidates and verify shingles must
       // come from the SAME parameterization or the landed artifact
       // matches neither
@@ -121,9 +97,7 @@ object SigStore {
           lshPairs(s, d, minEst, maxBucket, maxDf)
             .select("doc_a", "doc_b"), minJ)
         .write.mode("overwrite").parquet(out)
-      out
     })
-    s.read.parquet(path)
   }
 
   /** Landed EXACT-Jaccard near-dup pair graph — the verified pair set
@@ -138,14 +112,9 @@ object SigStore {
   def exactPairs(s: SparkSession, d: String, minJ: Double = 0.5,
                  maxDf: Int = Dedup.MaxShingleDf): DataFrame = {
     val key = (Key(d, maxDf, Dedup.NumHashes, Dedup.Bands), minJ)
-    val path = exact.computeIfAbsent(key, _ => {
-      exactBuildCount.incrementAndGet()
-      val st = forDataset(s, d, maxDf)
-      val out = s"${st.root}/exact_${ids.getAndIncrement()}"
-      Dedup.neardupJaccardFromShingles(st.shingles(s), minJ)
+    s.read.parquet(exact.root(key) { out =>
+      Dedup.neardupJaccardFromShingles(forDataset(s, d, maxDf).shingles(s), minJ)
         .write.mode("overwrite").parquet(out)
-      out
     })
-    s.read.parquet(path)
   }
 }

@@ -391,15 +391,9 @@ object Similarity {
     * once, with every ANN query a store read + probe. Rebuilding the
     * index per query pays the seed + Lloyd passes over the corpus
     * every time, which no production vector store does; here (as with
-    * SigStore / the multimodal features store) the artifact is keyed
-    * by dataset dir, paths are monotonically unique per build, and
-    * `computeIfAbsent` serializes the build. */
-  private val ivfStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ivfIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so SimilaritySpec can pin build-once. */
-  private[graft] val ivfBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+    * SigStore / the multimodal features store) the artifact is a
+    * [[graft.Landed]] root keyed by dataset dir. */
+  private[graft] val ivfStores = new graft.Landed[String]("graft_ivf")
 
   /** (inverted file, centroids) as fresh parquet reads over the landed
     * index, building it on first request for the dataset. The
@@ -410,19 +404,20 @@ object Similarity {
     * inverted-list lookup, instead of scanning the whole index and
     * discarding at the join. Partition-column inference narrows cid
     * to int; pin it back to long so joins stay cast-free. */
-  def ivfStore(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val root = ivfStores.computeIfAbsent(d, _ => {
-      ivfBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_ivf",
-        s"i${ivfIds.getAndIncrement()}").toString
-      val (idx, cent) = ivfBuild(s, d)
-      idx.write.mode("overwrite").partitionBy("cid").parquet(s"$out/idx")
-      cent.write.mode("overwrite").parquet(s"$out/cent")
-      out
-    })
+  def ivfStore(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    ivfRead(s, ivfStores.root(d)(ivfLand(ivfBuild(s, d), _)))
+
+  /** Land (inverted file, centroids) under one root, the inverted file
+    * partitioned by cid. */
+  private def ivfLand(index: (DataFrame, DataFrame), out: String): Unit = {
+    index._1.write.mode("overwrite").partitionBy("cid").parquet(s"$out/idx")
+    index._2.write.mode("overwrite").parquet(s"$out/cent")
+  }
+
+  /** (inverted file, centroids) as fresh reads of a landed root. */
+  private def ivfRead(s: SparkSession, root: String): (DataFrame, DataFrame) =
     (s.read.parquet(s"$root/idx").withColumn("cid", col("cid").cast("long")),
       s.read.parquet(s"$root/cent"))
-  }
 
   /** ANN via IVF: each query probes its IvfProbes nearest centroids
     * and ranks exact cosine only within those clusters — the corpus
@@ -505,12 +500,7 @@ object Similarity {
   val IvfIncrEvery = 10L
   val IvfIncrSlot  = 7L
 
-  private val ivfIncStores =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private val ivfIncIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so SimilaritySpec can pin build-once. */
-  private[graft] val ivfIncBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val ivfIncStores = new graft.Landed[String]("graft_ivfinc")
 
   /** Land the (base segment, delta segment) pair: base = the landed
     * inverted file MINUS the batch (yesterday's index), delta = the
@@ -518,23 +508,22 @@ object Similarity {
     * assignment pass whose cost is ∝ batch × K — the nightly
     * maintenance job's shape (the other "petabytes" of vectors are
     * never re-read, never re-assigned). Both segments keep the
-    * cid-partitioned layout, so probes prune per segment. */
-  private def ivfIncRoots(s: SparkSession, d: String): (String, String) =
-    ivfIncStores.computeIfAbsent(d, _ => {
-      ivfIncBuildCount.incrementAndGet()
-      val n = ivfIncIds.getAndIncrement()
+    * cid-partitioned layout, so probes prune per segment. Both land
+    * under one store root, each named so a plan shows which segment
+    * it reads. */
+  private def ivfIncRoots(s: SparkSession, d: String): (String, String) = {
+    val root = ivfIncStores.root(d) { out =>
       val (idx, cent) = ivfStore(s, d)
-      val baseOut = graft.Scratch.processScoped("graft_ivfb", s"b$n").toString
       idx.filter(col("vec_id") % IvfIncrEvery =!= IvfIncrSlot)
-        .write.mode("overwrite").partitionBy("cid").parquet(baseOut)
-      val deltaOut = graft.Scratch.processScoped("graft_ivfd", s"d$n").toString
+        .write.mode("overwrite").partitionBy("cid").parquet(s"$out/graft_ivfb")
       val batch = emb(s, d)
         .filter(col("vec_id") % IvfIncrEvery === IvfIncrSlot)
         .select("vec_id", "v")
       assignTo(s, batch, cent)
-        .write.mode("overwrite").partitionBy("cid").parquet(deltaOut)
-      (baseOut, deltaOut)
-    })
+        .write.mode("overwrite").partitionBy("cid").parquet(s"$out/graft_ivfd")
+    }
+    (s"$root/graft_ivfb", s"$root/graft_ivfd")
+  }
 
   /** The landed delta segment as a fresh read — exposed so the spec
     * can pin |delta| = |batch| (update cost ∝ batch). */
@@ -575,29 +564,13 @@ object Similarity {
   val IvfPrunedK      = 64
   val IvfPrunedProbes = 4
 
-  private val ivfKStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ivfKIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so SimilaritySpec can pin build-once. */
-  private[graft] val ivfKBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val ivfKStores = new graft.Landed[(String, Int)]("graft_ivfk")
 
   /** [[ivfStore]] at an explicit K, keyed by (dataset, K) — the same
     * deterministic build (md5 seeds, fixed-point Lloyd), the same
     * cid-partitioned landed layout. */
-  def ivfStoreK(s: SparkSession, d: String, k: Int): (DataFrame, DataFrame) = {
-    val root = ivfKStores.computeIfAbsent(s"$d#k$k", _ => {
-      ivfKBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_ivfk",
-        s"k${ivfKIds.getAndIncrement()}").toString
-      val (idx, cent) = ivfBuild(s, d, k)
-      idx.write.mode("overwrite").partitionBy("cid").parquet(s"$out/idx")
-      cent.write.mode("overwrite").parquet(s"$out/cent")
-      out
-    })
-    (s.read.parquet(s"$root/idx").withColumn("cid", col("cid").cast("long")),
-      s.read.parquet(s"$root/cent"))
-  }
+  def ivfStoreK(s: SparkSession, d: String, k: Int): (DataFrame, DataFrame) =
+    ivfRead(s, ivfKStores.root((d, k))(ivfLand(ivfBuild(s, d, k), _)))
 
   /** ANN in the nprobe ≪ K regime: [[IvfPrunedProbes]] probes into a
     * [[IvfPrunedK]]-cell landed index — the three queries' probed-cid
@@ -623,12 +596,7 @@ object Similarity {
   // compaction folds the segments back to one.
   // ---------------------------------------------------------------
 
-  private val ivfCmpStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ivfCmpIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so SimilaritySpec can pin build-once. */
-  private[graft] val ivfCmpBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val ivfCmpStores = new graft.Landed[String]("graft_ivfc")
 
   /** Fold the landed base + delta segments into one compacted root,
     * keeping the cid layout (each cell directory is rewritten from
@@ -641,29 +609,18 @@ object Similarity {
     * compaction is index-local, priced ∝ index, scheduled off-peak,
     * amortized over every later probe's single-segment read. */
   private def ivfCmpRoot(s: SparkSession, d: String): String =
-    ivfCmpStores.computeIfAbsent(d, _ => {
-      ivfCmpBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_ivfc",
-        s"c${ivfCmpIds.getAndIncrement()}").toString
+    ivfCmpStores.root(d) { out =>
       val (baseRoot, deltaRoot) = ivfIncRoots(s, d)
       def seg(dir: String) = s.read.parquet(dir)
         .withColumn("cid", col("cid").cast("long"))
-      seg(baseRoot).unionByName(seg(deltaRoot))
-        .write.mode("overwrite").partitionBy("cid").parquet(s"$out/idx")
-      val (_, cent) = ivfStore(s, d)
-      cent.write.mode("overwrite").parquet(s"$out/cent")
-      out
-    })
+      ivfLand((seg(baseRoot).unionByName(seg(deltaRoot)), ivfStore(s, d)._2), out)
+    }
 
   /** The compacted (inverted file, centroids) as fresh store reads —
     * exposed so the spec can pin the single-segment shape. */
   private[graft] def ivfCompactStore(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    val root = ivfCmpRoot(s, d)
-    (s.read.parquet(s"$root/idx")
-       .withColumn("cid", col("cid").cast("long")),
-      s.read.parquet(s"$root/cent"))
-  }
+      : (DataFrame, DataFrame) =
+    ivfRead(s, ivfCmpRoot(s, d))
 
   /** Post-compaction ANN — the gated proof that the fold is INVISIBLE
     * in the answer: ONE compacted segment (single idx read, no
@@ -699,12 +656,7 @@ object Similarity {
   val IvfDelEvery = 10L
   val IvfDelSlot  = 3L
 
-  private val ivfTombStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ivfTombIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so SimilaritySpec can pin build-once. */
-  private[graft] val ivfTombBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val ivfTombStores = new graft.Landed[String]("graft_ivft")
 
   /** Land the tombstone sidecar: deleted vec_ids only — the delete
     * request IS an id list, so the artifact is ∝ batch by
@@ -712,16 +664,12 @@ object Similarity {
     * file's id column (never an embedding read); a real pipeline
     * hands the list in directly. */
   private def ivfTombRoot(s: SparkSession, d: String): String =
-    ivfTombStores.computeIfAbsent(d, _ => {
-      ivfTombBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_ivft",
-        s"t${ivfTombIds.getAndIncrement()}").toString
+    ivfTombStores.root(d) { out =>
       ivfStore(s, d)._1
         .filter(col("vec_id") % IvfDelEvery === IvfDelSlot)
         .select("vec_id")
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** The landed tombstone ids as a fresh store read — exposed so the
     * spec can pin |tombstones| ∝ batch. */
@@ -744,12 +692,7 @@ object Similarity {
       .transform(Present.sorted(_, col("q_id"), col("rn")))
   }
 
-  private val ivfDelCmpStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ivfDelCmpIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so SimilaritySpec can pin build-once. */
-  private[graft] val ivfDelCmpBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val ivfDelCmpStores = new graft.Landed[String]("graft_ivfdc")
 
   /** Compaction with tombstone PURGE: rewrite the inverted file minus
     * the tombstoned ids (keeping the cid layout), carry the LANDED
@@ -757,26 +700,17 @@ object Similarity {
     * never an embedding), priced ∝ index, after which the tombstones
     * are dead weight. */
   private def ivfDelCmpRoot(s: SparkSession, d: String): String =
-    ivfDelCmpStores.computeIfAbsent(d, _ => {
-      ivfDelCmpBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_ivfdc",
-        s"e${ivfDelCmpIds.getAndIncrement()}").toString
+    ivfDelCmpStores.root(d) { out =>
       val (idx, cent) = ivfStore(s, d)
-      idx.join(broadcast(ivfTombStore(s, d)), Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").partitionBy("cid").parquet(s"$out/idx")
-      cent.write.mode("overwrite").parquet(s"$out/cent")
-      out
-    })
+      ivfLand((idx.join(broadcast(ivfTombStore(s, d)), Seq("vec_id"),
+        "left_anti"), cent), out)
+    }
 
   /** The purged (inverted file, centroids) as fresh store reads —
     * exposed so the spec can pin zero tombstoned rows survive. */
   private[graft] def ivfDelCompactStore(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    val root = ivfDelCmpRoot(s, d)
-    (s.read.parquet(s"$root/idx")
-       .withColumn("cid", col("cid").cast("long")),
-      s.read.parquet(s"$root/cent"))
-  }
+      : (DataFrame, DataFrame) =
+    ivfRead(s, ivfDelCmpRoot(s, d))
 
   /** Post-purge ANN — ONE purged segment, no mask anywhere in the
     * plan, probed through the same chain: must hash-equal
@@ -810,25 +744,16 @@ object Similarity {
     * pinned by PlanSpec). This is the published IVF-(S)Q memory-bound
     * layout: codes for the cheap scan, vectors co-located for the
     * rerank fetch. Built once per dataset (ivfStore's pattern). */
-  private val pqStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val pqIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so SimilaritySpec can pin build-once. */
-  private[graft] val pqBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val pqStores = new graft.Landed[String]("graft_ivfpq")
 
   def pqStore(s: SparkSession, d: String): DataFrame = {
-    val root = pqStores.computeIfAbsent(d, _ => {
-      pqBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_ivfpq",
-        s"p${pqIds.getAndIncrement()}").toString
+    val root = pqStores.root(d) { out =>
       val (idx, _) = ivfStore(s, d)
       idx.withColumn("nrm", sqrt(dot(col("v"), col("v"))))
         .select(col("cid"), col("vec_id"), col("v"),
           int8Codes(col("v"), col("nrm")).as("qvec"))
         .write.mode("overwrite").partitionBy("cid").parquet(out)
-      out
-    })
+    }
     // partition-column inference may narrow cid to int; pin to long so
     // joins/filters against the centroid-derived cid stay cast-free
     s.read.parquet(root).withColumn("cid", col("cid").cast("long"))
@@ -1271,12 +1196,7 @@ object Similarity {
     * [[annProjectRerank]] — the exact-rerank depth. */
   val ProjShortlist = 50
 
-  private val sketchStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val sketchIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so SimilaritySpec can pin build-once. */
-  private[graft] val sketchBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val sketchStores = new graft.Landed[String]("graft_sketch")
 
   /** Session-scoped landed SKETCH STORE: [[embedProject]]'s 16-dim JL
     * sketches as one array column (vec_id, sp), NARROWED TO FLOAT32
@@ -1296,17 +1216,11 @@ object Similarity {
       round(dot(col("v"), typedLit(projSigns(j).toSeq)), 6)
         .cast("float")): _*)
 
-  def sketchStore(s: SparkSession, d: String): DataFrame = {
-    val root = sketchStores.computeIfAbsent(d, _ => {
-      sketchBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_sketch",
-        s"s${sketchIds.getAndIncrement()}").toString
+  def sketchStore(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(sketchStores.root(d) { out =>
       emb(s, d).select(col("vec_id"), sketchCol.as("sp"))
         .write.mode("overwrite").parquet(out)
-      out
     })
-    s.read.parquet(root)
-  }
 
   /** PROJECTED-PREFILTER ANN — the composed consumer of
     * [[embedProject]] (the round-16 sketch finally earning its keep):
@@ -1374,33 +1288,25 @@ object Similarity {
   val SketchIncrEvery = 5L
   val SketchIncrSlot  = 2L
 
-  private val sketchSegStores =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private val sketchSegIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so SimilaritySpec can pin build-once. */
-  private[graft] val sketchSegBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val sketchSegStores = new graft.Landed[String]("graft_sketchseg")
 
   /** Land the (base, delta) sketch segments: base = the store minus
     * the batch (a landed artifact in production); delta PROJECTS only
     * the arriving batch — the one JL pass the append pays, ∝ batch
     * (the multimodal_features_incremental contract applied to the
     * sketch store: a pure-map artifact appends by mapping the batch,
-    * never re-projecting the archive). */
-  private def sketchSegRoots(s: SparkSession, d: String): (String, String) =
-    sketchSegStores.computeIfAbsent(d, _ => {
-      sketchSegBuildCount.incrementAndGet()
-      val n = sketchSegIds.getAndIncrement()
-      val baseOut = graft.Scratch.processScoped("graft_sketchb", s"b$n").toString
+    * never re-projecting the archive). Both land under one root. */
+  private def sketchSegRoots(s: SparkSession, d: String): (String, String) = {
+    val root = sketchSegStores.root(d) { out =>
       sketchStore(s, d)
         .filter(col("vec_id") % SketchIncrEvery =!= SketchIncrSlot)
-        .write.mode("overwrite").parquet(baseOut)
-      val deltaOut = graft.Scratch.processScoped("graft_sketchd", s"d$n").toString
+        .write.mode("overwrite").parquet(s"$out/graft_sketchb")
       emb(s, d).filter(col("vec_id") % SketchIncrEvery === SketchIncrSlot)
         .select(col("vec_id"), sketchCol.as("sp"))
-        .write.mode("overwrite").parquet(deltaOut)
-      (baseOut, deltaOut)
-    })
+        .write.mode("overwrite").parquet(s"$out/graft_sketchd")
+    }
+    (s"$root/graft_sketchb", s"$root/graft_sketchd")
+  }
 
   /** The landed delta segment as a fresh read — exposed so the spec
     * can pin |delta| = |batch|. */

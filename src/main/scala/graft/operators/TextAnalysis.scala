@@ -475,21 +475,16 @@ object TextAnalysis {
     * per-word symbol state written to parquet once — they ARE the
     * artifact a tokenizer trainer ships, and every BPE query is a
     * store read instead of re-running the training loop. */
-  private val bpeStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val bpeIds = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val bpeStores = new graft.Landed[(String, String)]("graft_bpe")
 
   private def bpeStoreFor(s: SparkSession, d: String, mode: String,
                           train: => (DataFrame, DataFrame))
       : (DataFrame, DataFrame) = {
-    val root = bpeStores.computeIfAbsent(s"$mode:$d", _ => {
-      val out = graft.Scratch.processScoped("graft_bpe",
-        s"b${bpeIds.getAndIncrement()}").toString
+    val root = bpeStores.root((mode, d)) { out =>
       val (merges, state) = train
       merges.write.mode("overwrite").parquet(s"$out/merges")
       state.write.mode("overwrite").parquet(s"$out/state")
-      out
-    })
+    }
     (s.read.parquet(s"$root/merges"), s.read.parquet(s"$root/state"))
   }
 
@@ -783,18 +778,10 @@ object TextAnalysis {
     * corpus pass per dataset and every scoring query is one tokenize
     * pass + a vocab-sized store read — the train-once/score-many
     * deployment shape. */
-  private val lmStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val lmIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so PipelineSpec can pin build-once. */
-  private[graft] val lmBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val lmStores = new graft.Landed[String]("graft_lm")
 
   private def lmRoot(s: SparkSession, d: String): String =
-    lmStores.computeIfAbsent(d, _ => {
-      lmBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_lm",
-        s"m${lmIds.getAndIncrement()}").toString
+    lmStores.root(d) { out =>
       Tables.documents(s, d)
         .select(explode(cleanTokens(col("text"))).as("word"))
         .groupBy("word").agg(count(lit(1)).as("cf"))
@@ -810,8 +797,7 @@ object TextAnalysis {
           round(-log(col("cf").cast("double") / col("n").cast("double"))
             * 1e7, 0).cast("long").as("nllq"))
         .write.mode("overwrite").parquet(out + "_nllq")
-      out
-    })
+    }
 
   def lmStore(s: SparkSession, d: String): DataFrame =
     s.read.parquet(lmRoot(s, d))
@@ -951,12 +937,7 @@ object TextAnalysis {
   /** Session-scoped landed PRUNED BIGRAM TABLE per dataset —
     * (w1, w2, c12, c1) parquet plus the two quantized-NLL sidecars
     * (the lmRoot pattern one order up). */
-  private val bgStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val bgIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  /** Build counter — exposed so PipelineSpec can pin build-once. */
-  private[graft] val bgBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] val bgStores = new graft.Landed[String]("graft_bglm")
 
   /** Adjacent-token pairs (doc_id, w1, w2), one row per bigram event —
     * computed MAP-SIDE by zipping the token array against itself
@@ -976,10 +957,7 @@ object TextAnalysis {
   }
 
   private def bgRoot(s: SparkSession, d: String): String =
-    bgStores.computeIfAbsent(d, _ => {
-      bgBuildCount.incrementAndGet()
-      val out = graft.Scratch.processScoped("graft_bglm",
-        s"b${bgIds.getAndIncrement()}").toString
+    bgStores.root(d) { out =>
       val uni = lmStore(s, d)
       bigramEvents(Tables.documents(s, d))
         .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
@@ -999,8 +977,7 @@ object TextAnalysis {
           round(-log(lit(BackoffAlpha) * col("cf").cast("double")
             / col("n").cast("double")) * 1e7, 0).cast("long").as("nllq"))
         .write.mode("overwrite").parquet(out + "_bo")
-      out
-    })
+    }
 
   def bgStore(s: SparkSession, d: String): DataFrame =
     s.read.parquet(bgRoot(s, d))
@@ -1084,11 +1061,9 @@ object TextAnalysis {
   final case class QcIterRow(iter: Int, n_viol: Long, w_len: Long,
                              w_stop: Long, w_ttr: Long, w_bias: Long)
 
-  private val qcFeatPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val qcFeatPaths = new graft.Landed[String]("graft_qc")
   private val qcTrajCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[QcIterRow]]()
-  private val qcIds = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Integer quality features + label, landed to scratch parquet once
     * per dataset (SigStore's derivation discipline): the corpus
@@ -1136,15 +1111,9 @@ object TextAnalysis {
         s"(CASE WHEN n_tok = 0 THEN CAST(0 AS BIGINT) ELSE CAST(n_types AS BIGINT) * 1000 div n_tok END) - ${QcCenter(2)} AS f_ttr",
         "CAST(1000 AS BIGINT) AS f_bias")
 
-  private[graft] def qcFeatures(s: SparkSession, d: String): DataFrame = {
-    val path = qcFeatPaths.computeIfAbsent(d, _ => {
-      val out = graft.Scratch.processScoped("graft_qc",
-        s"feats_${qcIds.getAndIncrement()}").toString
-      qcFeaturesBuilt(s, d).write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
+  private[graft] def qcFeatures(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(qcFeatPaths.root(d)(
+      qcFeaturesBuilt(s, d).write.mode("overwrite").parquet(_)))
 
   /** Full-batch averaged-perceptron training, integer-exact. Each
     * epoch is ONE distributed pass over the landed feature relation:

@@ -112,7 +112,6 @@ object AvroIO {
   def avroRoundtrip(s: SparkSession, d: String): DataFrame = {
     val dir = stageDir("lineitem", d)
     writeAvro(s, d, dir)
-    avroLanded.put(d, dir) // the roundtrip's write doubles as the land
     readAvro(s, dir)
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("sum_qty"))
@@ -121,14 +120,9 @@ object AvroIO {
 
   /** Landed-once Avro files per dataset (consumers beyond the
     * roundtrip itself shouldn't re-pay the write). */
-  private val avroLanded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val avroLanded = new graft.Landed[String]("graft_avro")
   private def ensureAvro(s: SparkSession, d: String): String =
-    avroLanded.computeIfAbsent(d, _ => {
-      val dir = stageDir("lineitem", d)
-      writeAvro(s, d, dir)
-      dir
-    })
+    avroLanded.root(d)(writeAvro(s, d, _))
 
   /** READER schema for [[avroEvolution]]: `l_quantity` dropped,
     * `l_tier` added with a default — the two legal evolution moves. */
@@ -186,11 +180,9 @@ object AvroIO {
 
   /** Lands the orders slice under [[OrderDecSchemaJson]] once per
     * dataset: price as decimal bytes, o_orderdate as epoch micros. */
-  private val avroDecLanded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val avroDecLanded = new graft.Landed[String]("graft_avro")
   private def ensureAvroDec(s: SparkSession, d: String): String =
-    avroDecLanded.computeIfAbsent(d, _ => {
-      val dir = stageDir("orders_dec", d)
+    avroDecLanded.root(d) { dir =>
       val schemaJson = OrderDecSchemaJson
       val rows = Tables.orders(s, d)
         .select(col("o_orderkey"),
@@ -213,14 +205,10 @@ object AvroIO {
         }
       val job = Job.getInstance(s.sparkContext.hadoopConfiguration)
       AvroJob.setOutputKeySchema(job, new Schema.Parser().parse(schemaJson))
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(job.getConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
       rows.saveAsNewAPIHadoopFile(dir,
         classOf[AvroKey[GenericRecord]], classOf[NullWritable],
         classOf[AvroKeyOutputFormat[GenericRecord]], job.getConfiguration)
-      dir
-    })
+    }
 
   private def decOf(rec: GenericRecord, field: String): java.math.BigDecimal = {
     val buf = rec.get(field).asInstanceOf[java.nio.ByteBuffer]

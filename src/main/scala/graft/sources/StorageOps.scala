@@ -59,36 +59,45 @@ object StorageOps {
     * is columnar, so landing the union of the consumers' columns
     * costs narrow queries nothing (column pruning still reaches the
     * scan). Built once per dataset per JVM (the ivfStore/SigStore
-    * pattern); `whBuildCount` lets a spec pin build-once. */
-  private val whLanded =
+    * pattern). */
+  private[graft] val whStores = new graft.Landed[String]("graft_storage")
+  /** The landed root the session catalog's warehouse tables read. */
+  private val whRegistered =
     new java.util.concurrent.atomic.AtomicReference[String](null)
-  private[graft] val whBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  private val whTables = Seq("lineitem" -> "l_orderkey", "orders" -> "o_orderkey")
 
-  def ensureWarehouse(s: SparkSession, d: String): Unit = whLanded.synchronized {
-    // the landed flag is JVM-wide but the table CATALOG is
-    // per-session — a rebuilt session (e.g. after a stopped context)
-    // must re-register even when the files are already on disk
-    if (whLanded.get != d ||
-        !s.catalog.tableExists("graft_wh_lineitem") ||
-        !s.catalog.tableExists("graft_wh_orders")) {
-      whBuildCount.incrementAndGet()
+  def ensureWarehouse(s: SparkSession, d: String): Unit = whRegistered.synchronized {
+    val root = whStores.root(d) { out =>
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_quantity"), col("l_extendedprice"), col("l_discount"),
           col("l_shipdate"))
         .write.mode("overwrite")
         .bucketBy(Buckets, "l_orderkey").sortBy("l_orderkey")
-        .option("path", stageDir("wh_lineitem", d))
+        .option("path", s"$out/wh_lineitem")
         .format("parquet").saveAsTable("graft_wh_lineitem")
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
           col("o_orderpriority"))
         .write.mode("overwrite")
         .bucketBy(Buckets, "o_orderkey").sortBy("o_orderkey")
-        .option("path", stageDir("wh_orders", d))
+        .option("path", s"$out/wh_orders")
         .format("parquet").saveAsTable("graft_wh_orders")
-      whLanded.set(d)
+      whRegistered.set(out)
+    }
+    // the landed files are JVM-wide but the table CATALOG is
+    // per-session — a rebuilt session (e.g. after a stopped context)
+    // re-registers the files already on disk, bucketing included
+    if (whRegistered.get != root ||
+        whTables.exists(t => !s.catalog.tableExists(s"graft_wh_${t._1}"))) {
+      for ((t, key) <- whTables) {
+        val dir = s"$root/wh_$t"
+        s.sql(s"DROP TABLE IF EXISTS graft_wh_$t")
+        s.sql(s"CREATE TABLE graft_wh_$t (${s.read.parquet(dir).schema.toDDL}) " +
+          s"USING parquet CLUSTERED BY ($key) SORTED BY ($key) " +
+          s"INTO $Buckets BUCKETS LOCATION '$dir'")
+      }
+      whRegistered.set(root)
     }
   }
 
@@ -1369,12 +1378,10 @@ object StorageOps {
     * engine's own encoder from order-derived JSON (landed once per
     * dataset; versions are immutable), so the DuckDB oracle replays
     * the fields from the generating arithmetic on `orders`. */
-  private val variantLanded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val variantLanded = new graft.Landed[String]("graft_storage")
 
   private def stageVariantParquet(s: SparkSession, d: String): String =
-    variantLanded.computeIfAbsent(d, _ => {
-      val dir = stageDir("variant_orders", d)
+    variantLanded.root(d) { dir =>
       Tables.orders(s, d)
         .select(col("o_orderkey").as("id"),
           parse_json(to_json(struct(
@@ -1383,8 +1390,7 @@ object StorageOps {
             round(col("o_totalprice") * 100, 0).cast("long")
               .as("price_cents")))).as("props"))
         .write.mode("overwrite").parquet(dir)
-      dir
-    })
+    }
 
   def parquetVariantPushdown(s: SparkSession, d: String): DataFrame = {
     val dir = stageVariantParquet(s, d)
@@ -2004,13 +2010,11 @@ object StorageOps {
     * them on every call both re-paid two table writes per invocation
     * and let a previously returned lazy reader race a concurrent
     * rewrite of the same files. */
-  private val snapLanded =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  private val snapLanded = new graft.Landed[String]("graft_storage")
 
-  private def stageSnapshots(s: SparkSession, d: String): (String, String) =
-    snapLanded.computeIfAbsent(d, _ => {
-      val dir0 = stageDir("snap_v0", d)
-      val dir1 = stageDir("snap_v1", d)
+  private def stageSnapshots(s: SparkSession, d: String): (String, String) = {
+    val root = snapLanded.root(d) { out =>
+      val (dir0, dir1) = (s"$out/snap_v0", s"$out/snap_v1")
       val base = Tables.customer(s, d)
         .select(col("c_custkey").as("k"), col("c_name").as("name"),
           col("c_acctbal").as("bal"))
@@ -2023,8 +2027,9 @@ object StorageOps {
           .select((col("k") + 1000000L).as("k"),
             concat(lit("shadow-"), col("name")).as("name"), col("bal")))
         .write.mode("overwrite").parquet(dir1)
-      (dir0, dir1)
-    })
+    }
+    (s"$root/snap_v0", s"$root/snap_v1")
+  }
 
   /** Time travel (read-at-version) over the landed snapshot pair:
     * each retained version is an immutable directory, so "AS OF v0"
@@ -2132,13 +2137,13 @@ object StorageOps {
     * hardcoded keyspace: at sf10+ a fixed upper bound would funnel
     * every key past it into the top stride (a straggler partition),
     * while derived bounds stay deterministic per dataset. */
-  private[graft] def jdbcLand(s: SparkSession, d: String): (String, Long, Long) =
+  private[graft] def jdbcLand(s: SparkSession, d: String): (String, Long, Long) = {
+    val dir = graft.Scratch.processScoped("graft_derby",
+      d.replaceAll("[^a-zA-Z0-9]", "_")).toString
     jdbcLanded.computeIfAbsent(d, _ => {
       // Derby's engine log goes to scratch, not the process cwd
       System.setProperty("derby.stream.error.file",
         graft.Scratch.path("graft_derby.log").toString)
-      val dir = graft.Scratch.processScoped("graft_derby",
-        d.replaceAll("[^a-zA-Z0-9]", "_")).toString
       // explicit territory: Derby otherwise derives the new database's
       // locale from Locale.getDefault(), and a JVM pinned to
       // Locale.ROOT (Bench does, for parseable JSON numbers) makes
@@ -2162,6 +2167,7 @@ object StorageOps {
         .save()
       (url, mm.getLong(0), mm.getLong(1))
     })
+  }
 
   private[graft] def jdbcUrl(s: SparkSession, d: String): String =
     jdbcLand(s, d)._1
@@ -2444,9 +2450,7 @@ object StorageOps {
     * oracle is the plain full group-by — the gate proves the
     * merge-based refresh loses nothing. Refresh cost ∝ batch +
     * |groups|, independent of history size. */
-  private val mvStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val mvIds = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val mvStores = new graft.Landed[String]("graft_mv")
 
   private def orderStats(df: DataFrame): DataFrame =
     df.groupBy("o_orderpriority")
@@ -2454,13 +2458,9 @@ object StorageOps {
         sum(round(col("o_totalprice") * 100).cast("long")).as("sp"))
 
   def mvRefresh(s: SparkSession, d: String): DataFrame = {
-    val root = mvStores.computeIfAbsent(d, _ => {
-      val out = graft.Scratch.processScoped("graft_mv",
-        s"m${mvIds.getAndIncrement()}").toString
+    val root = mvStores.root(d)(
       orderStats(Tables.orders(s, d).filter(col("o_orderkey") % 10 =!= 0))
-        .write.mode("overwrite").parquet(out)
-      out
-    })
+        .write.mode("overwrite").parquet(_))
     val batch = orderStats(
       Tables.orders(s, d).filter(col("o_orderkey") % 10 === 0))
     s.read.parquet(root).unionByName(batch)

@@ -61,7 +61,7 @@ class BucketSpec extends SparkSpec {
     // over the landed table plans with NO exchange at all — the
     // distribution contract composing with the warehouse story
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
-    val dir = java.nio.file.Files.createTempDirectory("graft_topk_bkt").toString
+    val dir = SparkSpec.tempDir("graft_topk_bkt").toString
     Tables.orders(spark, sfDir)
       .select("o_custkey", "o_orderkey", "o_totalprice")
       .write.mode("overwrite")
@@ -92,7 +92,7 @@ class BucketSpec extends SparkSpec {
 
   test("warehouse q18/q9 variants equal their shuffled forms; layout lands once") {
     import graft.sources.StorageOps
-    val before = StorageOps.whBuildCount.get
+    val before = StorageOps.whStores.builds.get
     val q18b = StorageOps.q18Bucketed(spark, sfDir).collect()
     val q18 = graft.operators.RelOps.q18LargeOrders(spark, sfDir).collect()
     assert(q18b.map(_.toString).toSeq == q18.map(_.toString).toSeq)
@@ -113,7 +113,25 @@ class BucketSpec extends SparkSpec {
     // all three queries (and any reruns on the same dataset) share
     // ONE landed layout — the amortization claim, pinned
     StorageOps.q18Bucketed(spark, sfDir).collect()
-    assert(StorageOps.whBuildCount.get <= before + 1,
-      s"warehouse rebuilt per query: ${StorageOps.whBuildCount.get - before} builds")
+    assert(StorageOps.whStores.builds.get <= before + 1,
+      s"warehouse rebuilt per query: ${StorageOps.whStores.builds.get - before} builds")
+  }
+
+  // last in the suite: it stops the shared context, and this suite's
+  // `spark` stays bound to the stopped one
+  test("warehouse files outlive a restarted context: re-registered, not rebuilt") {
+    import graft.sources.StorageOps
+    val before = StorageOps.q3Bucketed(spark, sfDir).collect().map(_.toString).toSeq
+    val builds = StorageOps.whStores.builds.get
+    spark.stop()
+    val fresh = SparkSpec.session
+    val df = StorageOps.q3Bucketed(fresh, sfDir)
+    assert(df.collect().map(_.toString).toSeq == before)
+    assert(StorageOps.whStores.builds.get == builds,
+      "warehouse files re-landed after a context restart")
+    val plan = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")(0)
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"re-registered warehouse lost its bucketing:\n$plan")
   }
 }

@@ -36,9 +36,9 @@ class DedupSpec extends SparkSpec {
 
   test("dedup_incremental lands its split store once per dataset") {
     Dedup.dedupIncremental(spark, sfDir).collect()
-    val builds = Dedup.incrBuildCount.get()
+    val builds = Dedup.incrStores.builds.get()
     Dedup.dedupIncremental(spark, sfDir).collect()
-    assert(Dedup.incrBuildCount.get() == builds,
+    assert(Dedup.incrStores.builds.get() == builds,
       "a repeat call re-landed the incremental split store")
   }
 
@@ -49,12 +49,12 @@ class DedupSpec extends SparkSpec {
     // first consumer forces the build (idempotent if an earlier test
     // already did); everything after must be a pure store read
     Dedup.minhashLsh(spark, sfDir).collect()
-    val builds = SigStore.buildCount.get()
+    val builds = SigStore.stores.builds.get()
     Dedup.fuzzyPairs(spark, sfDir).collect()
     graft.operators.PipelineOps.neardupJaccardLsh(spark, sfDir).collect()
     val pairsAgain = SigStore.lshPairs(spark, sfDir)
     pairsAgain.collect()
-    assert(SigStore.buildCount.get() == builds,
+    assert(SigStore.stores.builds.get() == builds,
       "a second dedup-family consumer re-built the signature store")
     // the cached pair artifact is a bare parquet read: every file scan
     // under it points into the store, and the expensive pipeline head
@@ -169,8 +169,7 @@ class DedupSpec extends SparkSpec {
     // variant — null-safe equality counts them as invariant-holding.
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sh64_spec").toString
+    val dir = SparkSpec.tempDir("graft_sh64_spec").toString
     Seq((1L, "alpha beta gamma"), (2L, "12345 !?!? ..."), (3L, ""))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -274,9 +273,9 @@ class DedupSpec extends SparkSpec {
     assert(masked.size < full.size,
       "no pair touched the delete slot — the gate is vacuous")
     // tombstones land once; re-running is pure reads
-    val t0 = Dedup.lshTombBuildCount.get()
+    val t0 = Dedup.lshTombStores.builds.get()
     Dedup.minhashLshDelete(spark, sfDir).collect()
-    assert(Dedup.lshTombBuildCount.get() == t0,
+    assert(Dedup.lshTombStores.builds.get() == t0,
       "tombstone sidecar rebuilt on a second run")
   }
 
@@ -306,9 +305,9 @@ class DedupSpec extends SparkSpec {
     // all three legs are landed artifacts: a second ensemble run
     // rebuilds none of them (r17 — the simhash pipe was the last
     // recompute-per-run leg)
-    val s0 = Dedup.simhashPairBuildCount.get()
+    val s0 = Dedup.simhashPairStores.builds.get()
     Dedup.dedupEnsemble(spark, sfDir).collect()
-    assert(Dedup.simhashPairBuildCount.get() == s0,
+    assert(Dedup.simhashPairStores.builds.get() == s0,
       "ensemble re-ran the simhash pipeline")
   }
 
@@ -368,9 +367,9 @@ class DedupSpec extends SparkSpec {
     // the routing table LANDS per (dataset, t): a second run rebuilds
     // no leg (the simhash build counter is the canary, as in
     // dedup_ensemble)
-    val s0 = Dedup.simhashPairBuildCount.get()
+    val s0 = Dedup.simhashPairStores.builds.get()
     Dedup.dedupEnsembleClustered(spark, sfDir).collect()
-    assert(Dedup.simhashPairBuildCount.get() == s0,
+    assert(Dedup.simhashPairStores.builds.get() == s0,
       "clustered ensemble re-ran the simhash pipeline")
   }
 
@@ -405,10 +404,10 @@ class DedupSpec extends SparkSpec {
       "purged banded store row count drifted from the survivor slice")
     // artifacts land once; the purge twin's plan reads the purged
     // root only — no tombstone read, no mask anywhere
-    val p0 = Dedup.lshPurgeBuildCount.get()
+    val p0 = Dedup.lshPurgeStores.builds.get()
     val df = Dedup.minhashLshDeleteCompact(spark, sfDir)
     df.collect()
-    assert(Dedup.lshPurgeBuildCount.get() == p0,
+    assert(Dedup.lshPurgeStores.builds.get() == p0,
       "purged store rebuilt on a second run")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft_sigpurge"),

@@ -217,9 +217,9 @@ class GovernanceSpec extends SparkSpec {
     // even on a repeated statistic
     assert(over.head.getString(1) == "dp_release_refresh")
     // the ε sidecar lands once; a second accounting is a pure read
-    val b0 = Governance.dpLedgerBuildCount.get()
+    val b0 = Governance.dpLedgerStores.builds.get()
     Governance.dpBudget(spark, sfDir).collect()
-    assert(Governance.dpLedgerBuildCount.get() == b0,
+    assert(Governance.dpLedgerStores.builds.get() == b0,
       "ledger sidecar rebuilt on a second run")
     assert(Governance.dpLedger(spark, sfDir).count() ==
       Governance.DpSchedule.length)
@@ -286,9 +286,9 @@ class GovernanceSpec extends SparkSpec {
     assert(touchedDocs < docs.count(),
       "touched membership is the whole corpus — nothing was pruned")
     // base artifact lands once; a second refresh is a pure read
-    val b0 = Governance.manifestBaseBuildCount.get()
+    val b0 = Governance.manifestBaseStores.builds.get()
     Governance.shardManifestIncremental(spark, sfDir).collect()
-    assert(Governance.manifestBaseBuildCount.get() == b0,
+    assert(Governance.manifestBaseStores.builds.get() == b0,
       "base manifest rebuilt on a second run")
   }
 

@@ -136,7 +136,7 @@ class InvariantSpec extends SparkSpec {
     // 4 customers (one duplicated key), 4 orders (one null custkey,
     // one orphaned), 3 lineitems (one orphaned, one out-of-range
     // discount)
-    val dir = java.nio.file.Files.createTempDirectory("graft_dq")
+    val dir = SparkSpec.tempDir("graft_dq")
     Seq((1, "a", 0.0), (1, "a2", 0.0), (2, "b", 0.0), (3, "c", 0.0))
       .toDF("c_custkey", "c_name", "c_acctbal")
       .write.parquet(dir.resolve("customer.parquet").toString)
@@ -174,7 +174,7 @@ class InvariantSpec extends SparkSpec {
       .toDF("user_id", "ts", "event_type")
       .withColumn("event_id", col("user_id"))
       .withColumn("value", lit(0.0)).withColumn("props", lit("{}"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel")
+    val dir = SparkSpec.tempDir("graft_funnel")
     ev.write.mode("overwrite")
       .parquet(dir.resolve("events.parquet").toString)
     val got = graft.operators.ChangeOps.funnelEvents(spark, dir.toString)

@@ -47,7 +47,7 @@ class JoinOpsSpec extends SparkSpec {
       (8L, 2L, nanos(8), "view") // other types must be ignored
     ).toDF("event_id", "user_id", "ts", "event_type")
       .withColumn("value", lit(0.0)).withColumn("props", lit("{}"))
-    val dir = java.nio.file.Files.createTempDirectory("asof").toString
+    val dir = SparkSpec.tempDir("asof").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = JoinOps.asofJoin(spark, dir).collect()
       .map(r => r.getLong(0) -> Option(r.getAs[java.sql.Timestamp]("click_ts")))

@@ -119,11 +119,11 @@ class MultimodalSpec extends SparkSpec {
     // trigger a rebuild (the r8 regression was each query re-encoding
     // AND re-decoding the whole corpus: 3× codec cost per suite)
     Multimodal.featuresTable(spark, sfDir).count()
-    val before = Multimodal.featureBuildCount.get()
+    val before = Multimodal.featureStores.builds.get()
     Multimodal.multimodalFeatures(spark, sfDir).count()
     Multimodal.multimodalResize(spark, sfDir).count()
     Multimodal.multimodalFrames(spark, sfDir).count()
-    assert(Multimodal.featureBuildCount.get() == before,
+    assert(Multimodal.featureStores.builds.get() == before,
       "a multimodal query rebuilt the features store instead of reading it")
   }
 
@@ -155,9 +155,9 @@ class MultimodalSpec extends SparkSpec {
     dups.foreach(r => assert(sig(r.getLong(0)) == sig(r.getLong(2)),
       s"pair with differing signatures: $r"))
     // dedup is a store read — never a rebuild, never a binary re-scan
-    val before = Multimodal.featureBuildCount.get()
+    val before = Multimodal.featureStores.builds.get()
     Multimodal.mediaDedup(spark, sfDir).count()
-    assert(Multimodal.featureBuildCount.get() == before,
+    assert(Multimodal.featureStores.builds.get() == before,
       "media_dedup rebuilt the features store")
   }
 
@@ -306,10 +306,10 @@ class MultimodalSpec extends SparkSpec {
         % Multimodal.MediaIncrEvery === Multimodal.MediaIncrSlot)
       .count() == 0, "batch docs leaked into the base decode")
     // segments land once; re-running is pure segment reads
-    val b0 = Multimodal.mediaSegBuildCount.get()
+    val b0 = Multimodal.mediaSegStores.builds.get()
     val df = Multimodal.multimodalFeaturesIncremental(spark, sfDir)
     df.collect()
-    assert(Multimodal.mediaSegBuildCount.get() == b0,
+    assert(Multimodal.mediaSegStores.builds.get() == b0,
       "media segments rebuilt on a second run")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft_mediab") && plan.contains("graft_mediad"),
@@ -389,12 +389,12 @@ class MultimodalSpec extends SparkSpec {
       == Multimodal.featuresTable(spark, sfDir).count() - deleted.size)
     // sidecar and purge land once; the purged probe reads ONLY the
     // purged segment (no tombstone path, no mask)
-    val t0 = Multimodal.mediaTombBuildCount.get()
-    val p0 = Multimodal.mediaPurgeBuildCount.get()
+    val t0 = Multimodal.mediaTombStores.builds.get()
+    val p0 = Multimodal.mediaPurgeStores.builds.get()
     val df = Multimodal.mediaDeleteCompact(spark, sfDir)
     df.collect()
-    assert(Multimodal.mediaTombBuildCount.get() == t0 &&
-      Multimodal.mediaPurgeBuildCount.get() == p0,
+    assert(Multimodal.mediaTombStores.builds.get() == t0 &&
+      Multimodal.mediaPurgeStores.builds.get() == p0,
       "delete artifacts rebuilt on a second run")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft_mediapurge") &&

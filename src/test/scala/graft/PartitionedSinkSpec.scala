@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class PartitionedSinkSpec extends SparkSpec {
 
   test("partitionBy write prunes non-matching partitions on read") {
-    val out = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val out = SparkSpec.tempDir("graft_part").toString
     Tables.events(spark, sfDir)
       .write.mode("overwrite")
       .partitionBy("event_type")
@@ -108,7 +108,7 @@ class PartitionedSinkSpec extends SparkSpec {
   }
 
   test("ORC sink/source roundtrip preserves data") {
-    val out = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val out = SparkSpec.tempDir("graft_orc").toString
     val src = Tables.nation(spark, sfDir)
     src.write.mode("overwrite").orc(out)
     val back = spark.read.orc(out)
@@ -131,7 +131,7 @@ class PartitionedSinkSpec extends SparkSpec {
   }
 
   test("sortWithinPartitions layout keeps rows clustered per file") {
-    val out = java.nio.file.Files.createTempDirectory("graft_sorted").toString
+    val out = SparkSpec.tempDir("graft_sorted").toString
     Tables.orders(spark, sfDir)
       .repartition(4, col("o_custkey"))
       .sortWithinPartitions("o_custkey", "o_orderdate")

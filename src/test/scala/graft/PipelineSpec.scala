@@ -70,9 +70,9 @@ class PipelineSpec extends SparkSpec {
       s"degenerate filter: kept $keptN of ${out.length}")
     // train-once/score-many: repeat scoring must read the landed LM,
     // never re-train it
-    val builds = TextAnalysis.lmBuildCount.get()
+    val builds = TextAnalysis.lmStores.builds.get()
     TextAnalysis.perplexityFilter(spark, sfDir).collect()
-    assert(TextAnalysis.lmBuildCount.get() == builds,
+    assert(TextAnalysis.lmStores.builds.get() == builds,
       "a repeat perplexity scoring re-built the landed LM")
   }
 
@@ -136,9 +136,9 @@ class PipelineSpec extends SparkSpec {
     assert(keptN > 0 && keptN < out.length,
       s"degenerate filter: kept $keptN of ${out.length}")
     // train-once/score-many
-    val builds = TextAnalysis.bgBuildCount.get()
+    val builds = TextAnalysis.bgStores.builds.get()
     TextAnalysis.perplexityBigram(spark, sfDir).collect()
-    assert(TextAnalysis.bgBuildCount.get() == builds,
+    assert(TextAnalysis.bgStores.builds.get() == builds,
       "a repeat bigram scoring re-built the landed bigram table")
   }
 
@@ -489,7 +489,7 @@ class PipelineSpec extends SparkSpec {
     import graft.operators.TextAnalysis
     // 'aaaa' stresses the overlap rule: (a,a) counts 3 pairs, greedy
     // merges positions 1-2 and 3-4 → 'aa aa'; next round (aa,aa) wins
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe")
+    val dir = SparkSpec.tempDir("graft_bpe")
     Seq((1L, "aaaa aaaa aaaa ab"), (2L, "aaaa ab aaaa"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(dir.resolve("documents.parquet").toString)
@@ -558,7 +558,7 @@ class PipelineSpec extends SparkSpec {
     import spark.implicits._
     val K = PipelineOps.SubstrK // 8
     val shared = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssd")
+    val dir = SparkSpec.tempDir("graft_ssd")
     Seq(
       (1L, s"$shared uniq1 uniq2"),
       (2L, s"prefix2 $shared tail2a tail2b"),
@@ -608,12 +608,12 @@ class PipelineSpec extends SparkSpec {
     // first consumer forces the build (idempotent if an earlier test
     // already did); every consumer after must be a pure store read
     Dedup.neardupJaccard(spark, sfDir).collect()
-    val builds = SigStore.exactBuildCount.get()
+    val builds = SigStore.exact.builds.get()
     PipelineOps.dedupClusters(spark, sfDir).collect()
     PipelineOps.triangleCount(spark, sfDir).collect()
     PipelineOps.keepOnePerCluster(spark, sfDir).collect()
     PipelineOps.pagerankDocs(spark, sfDir).collect()
-    assert(SigStore.exactBuildCount.get() == builds,
+    assert(SigStore.exact.builds.get() == builds,
       "an exact-pair consumer re-built the landed pair artifact")
   }
 
@@ -792,7 +792,7 @@ class PipelineSpec extends SparkSpec {
     // stage a crafted documents table: a spam doc (one line repeated,
     // one bigram dominating) and a clean doc (all lines and bigrams
     // distinct)
-    val dir = java.nio.file.Files.createTempDirectory("graft_repfix")
+    val dir = SparkSpec.tempDir("graft_repfix")
     Seq(
       (1L, "buy now\nbuy now\nbuy now\nbuy now"),
       (2L, "the quick brown fox\njumps over lazy dogs"),

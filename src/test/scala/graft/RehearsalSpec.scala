@@ -280,9 +280,9 @@ class RehearsalSpec extends SparkSpec {
         s"planted ${planted.size}, extras ${(found -- planted).take(3)}, " +
         s"missed ${(planted -- found).take(3)}")
     // the diverse store lands once
-    val b0 = M.divFeatureBuildCount.get()
+    val b0 = M.divFeatureStores.builds.get()
     M.mediaNearDupDiverse(spark, sfDir).collect()
-    assert(M.divFeatureBuildCount.get() == b0,
+    assert(M.divFeatureStores.builds.get() == b0,
       "diverse features store rebuilt on a second run")
   }
 }

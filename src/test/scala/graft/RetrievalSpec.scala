@@ -160,12 +160,12 @@ class RetrievalSpec extends SparkSpec {
       "ln leaked into the bm25 oracle — the literal path must be total")
     // the sidecar AND the postings index land once per dataset;
     // re-running costs store reads, never a corpus re-tokenize
-    val builds = Retrieval.idfBuildCount.get()
-    val dtBuilds = Retrieval.dtBuildCount.get()
+    val builds = Retrieval.idfStores.builds.get()
+    val dtBuilds = Retrieval.dtStores.builds.get()
     Retrieval.bm25Retrieve(spark, sfDir).collect()
-    assert(Retrieval.idfBuildCount.get() == builds,
+    assert(Retrieval.idfStores.builds.get() == builds,
       "idf sidecar rebuilt on a second run")
-    assert(Retrieval.dtBuildCount.get() == dtBuilds,
+    assert(Retrieval.dtStores.builds.get() == dtBuilds,
       "postings index rebuilt on a second run")
     // the scoring plan reads the landed postings — no tokenize
     // (Generate/explode) anywhere in it
@@ -214,13 +214,13 @@ class RetrievalSpec extends SparkSpec {
     assert(incr == full,
       "incremental index answered differently from the full index")
     // base + delta segments land once each; re-running is pure reads
-    val (b0, i0) = (Retrieval.baseBuildCount.get(),
-      Retrieval.incrBuildCount.get())
+    val (b0, i0) = (Retrieval.baseStores.builds.get(),
+      Retrieval.incrStores.builds.get())
     val df = Retrieval.bm25Incremental(spark, sfDir)
     df.collect()
-    assert(Retrieval.baseBuildCount.get() == b0,
+    assert(Retrieval.baseStores.builds.get() == b0,
       "base index rebuilt on a second run")
-    assert(Retrieval.incrBuildCount.get() == i0,
+    assert(Retrieval.incrStores.builds.get() == i0,
       "delta segment rebuilt on a second run")
     // steady-state scoring is store reads only — ZERO tokenize
     // (Generate) in the plan; both segments ride landed parquet
@@ -252,10 +252,10 @@ class RetrievalSpec extends SparkSpec {
     assert(cmp == full,
       "compacted index answered differently from the full index")
     // compaction folds base + delta into ONE root; re-running is reads
-    val c0 = Retrieval.compactBuildCount.get()
+    val c0 = Retrieval.compactStores.builds.get()
     val df = Retrieval.bm25Compact(spark, sfDir)
     df.collect()
-    assert(Retrieval.compactBuildCount.get() == c0,
+    assert(Retrieval.compactStores.builds.get() == c0,
       "compacted segment rebuilt on a second run")
     val plan = df.queryExecution.executedPlan
       .toString.split("== Initial Plan ==")(0)
@@ -302,10 +302,10 @@ class RetrievalSpec extends SparkSpec {
     }
     // tombstones land once; the probe plan reads sidecar + live index,
     // never re-tokenizing
-    val t0 = Retrieval.tombBuildCount.get()
+    val t0 = Retrieval.tombStores.builds.get()
     val df = Retrieval.bm25Delete(spark, sfDir)
     df.collect()
-    assert(Retrieval.tombBuildCount.get() == t0,
+    assert(Retrieval.tombStores.builds.get() == t0,
       "tombstone sidecar rebuilt on a second run")
     val plan = df.queryExecution.executedPlan
       .toString.split("== Initial Plan ==")(0)
@@ -337,10 +337,10 @@ class RetrievalSpec extends SparkSpec {
     // compaction runs once; post-purge scoring stands on the purged
     // artifacts alone — no tombstone read, no mask, no monolith, no
     // tokenize, and the wb partition pruning survives the rewrite
-    val c0 = Retrieval.delCmpBuildCount.get()
+    val c0 = Retrieval.delCmpStores.builds.get()
     val df = Retrieval.bm25DeleteCompact(spark, sfDir)
     df.collect()
-    assert(Retrieval.delCmpBuildCount.get() == c0,
+    assert(Retrieval.delCmpStores.builds.get() == c0,
       "purged segment rebuilt on a second run")
     val plan = df.queryExecution.executedPlan
       .toString.split("== Initial Plan ==")(0)
@@ -401,9 +401,9 @@ class RetrievalSpec extends SparkSpec {
         s"landed ubq for '$w': ${ubs(w)} != replayed max $expect")
     }
     // the sidecar lands once; re-running is pure reads
-    val u0 = Retrieval.ubBuildCount.get()
+    val u0 = Retrieval.ubStores.builds.get()
     Retrieval.bm25TopkPruned(spark, sfDir).collect()
-    assert(Retrieval.ubBuildCount.get() == u0,
+    assert(Retrieval.ubStores.builds.get() == u0,
       "max-score sidecar rebuilt on a second run")
   }
 
@@ -432,10 +432,10 @@ class RetrievalSpec extends SparkSpec {
     // the landed index is shared with ann_ivf — running the hybrid
     // must not trigger another IVF build
     Similarity.ivfStore(spark, sfDir)
-    val builds = Similarity.ivfBuildCount.get()
+    val builds = Similarity.ivfStores.builds.get()
     val df = Retrieval.hybridRetrieve(spark, sfDir)
     df.collect()
-    assert(Similarity.ivfBuildCount.get() == builds,
+    assert(Similarity.ivfStores.builds.get() == builds,
       "hybrid dense half rebuilt the IVF index")
     // the plan reads the landed parquet index (scan nodes over the
     // ivf store) and never plans a cartesian over the corpus
@@ -479,10 +479,10 @@ class RetrievalSpec extends SparkSpec {
     }
     // positional store lands once; the probe's scan is pruned to the
     // phrase terms' word buckets
-    val b0 = Retrieval.ppBuildCount.get()
+    val b0 = Retrieval.ppStores.builds.get()
     val df = Retrieval.phraseRetrieve(spark, sfDir)
     df.collect()
-    assert(Retrieval.ppBuildCount.get() == b0,
+    assert(Retrieval.ppStores.builds.get() == b0,
       "positional postings rebuilt on a second run")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft_bm25pos"),
@@ -515,9 +515,9 @@ class RetrievalSpec extends SparkSpec {
     assert(Retrieval.ppBaseSegment(spark, sfDir)
       .filter(col("doc_id") % Retrieval.IncrEvery === Retrieval.IncrSlot)
       .count() == 0, "batch postings leaked into the base segment")
-    val b0 = Retrieval.ppSegBuildCount.get()
+    val b0 = Retrieval.ppSegStores.builds.get()
     Retrieval.phraseRetrieveIncremental(spark, sfDir).collect()
-    assert(Retrieval.ppSegBuildCount.get() == b0,
+    assert(Retrieval.ppSegStores.builds.get() == b0,
       "positional segments rebuilt on a second run")
   }
 
@@ -557,12 +557,12 @@ class RetrievalSpec extends SparkSpec {
     }
     // delete twins: mask ≡ purge, nothing tombstoned survives, the
     // sidecar is bm25_delete's (shared — no second artifact)
-    val t0 = Retrieval.tombBuildCount.get()
+    val t0 = Retrieval.tombStores.builds.get()
     val masked = Retrieval.phraseRetrieveDelete(spark, sfDir).collect().toSeq
     val purged = Retrieval.phraseRetrieveDeleteCompact(spark, sfDir)
       .collect().toSeq
-    assert(Retrieval.tombBuildCount.get() == t0 ||
-      Retrieval.tombBuildCount.get() == t0 + 1,
+    assert(Retrieval.tombStores.builds.get() == t0 ||
+      Retrieval.tombStores.builds.get() == t0 + 1,
       "phrase delete minted repeated tombstone sidecars")
     assert(purged == masked, "post-purge phrase ≠ masked phrase")
     assert(masked.nonEmpty && masked.forall(r =>
@@ -576,10 +576,10 @@ class RetrievalSpec extends SparkSpec {
         Retrieval.DelSlot).count(),
       "purged positional store drifted from the survivor slice")
     // purge lands once; its probe reads the purged root, no tombstones
-    val p0 = Retrieval.ppPurgeBuildCount.get()
+    val p0 = Retrieval.ppPurgeStores.builds.get()
     val df = Retrieval.phraseRetrieveDeleteCompact(spark, sfDir)
     df.collect()
-    assert(Retrieval.ppPurgeBuildCount.get() == p0,
+    assert(Retrieval.ppPurgeStores.builds.get() == p0,
       "purged positional store rebuilt on a second run")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft_bm25pospurge"),

@@ -181,10 +181,10 @@ class SimilaritySpec extends SparkSpec {
         s"delta assignment drifted for vec $id: $cid != ${fullCells(id)}")
     }
     // segments land once; probes read BOTH landed segments, pruned
-    val b0 = Similarity.ivfIncBuildCount.get()
+    val b0 = Similarity.ivfIncStores.builds.get()
     val df = Similarity.annIvfIncremental(spark, sfDir)
     df.collect()
-    assert(Similarity.ivfIncBuildCount.get() == b0,
+    assert(Similarity.ivfIncStores.builds.get() == b0,
       "incremental segments rebuilt on a second run")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft_ivfb") && plan.contains("graft_ivfd"),
@@ -218,10 +218,10 @@ class SimilaritySpec extends SparkSpec {
     assert(cmpCent.count() == Similarity.IvfClusters)
     // the fold lands once; the probe reads ONE segment (the compacted
     // root), never the base/delta pair or the live full index
-    val b0 = Similarity.ivfCmpBuildCount.get()
+    val b0 = Similarity.ivfCmpStores.builds.get()
     val df = Similarity.annIvfCompact(spark, sfDir)
     df.collect()
-    assert(Similarity.ivfCmpBuildCount.get() == b0,
+    assert(Similarity.ivfCmpStores.builds.get() == b0,
       "compacted segment rebuilt on a second run")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft_ivfc"),
@@ -268,12 +268,12 @@ class SimilaritySpec extends SparkSpec {
       "centroids not carried alongside the purged segment")
     // builds land once; the post-purge probe stands on the purged
     // root alone — no tombstone read, no mask, cid pruning intact
-    val (t0, c0) = (Similarity.ivfTombBuildCount.get(),
-      Similarity.ivfDelCmpBuildCount.get())
+    val (t0, c0) = (Similarity.ivfTombStores.builds.get(),
+      Similarity.ivfDelCmpStores.builds.get())
     val df = Similarity.annIvfDeleteCompact(spark, sfDir)
     df.collect()
-    assert(Similarity.ivfTombBuildCount.get() == t0 &&
-      Similarity.ivfDelCmpBuildCount.get() == c0,
+    assert(Similarity.ivfTombStores.builds.get() == t0 &&
+      Similarity.ivfDelCmpStores.builds.get() == c0,
       "delete artifacts rebuilt on a second run")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft_ivfdc"),
@@ -320,9 +320,9 @@ class SimilaritySpec extends SparkSpec {
     }
     // the delete artifact is SHARED with ann_ivf_delete — consuming it
     // here must not mint a second sidecar
-    val t0 = Similarity.ivfTombBuildCount.get()
+    val t0 = Similarity.ivfTombStores.builds.get()
     Similarity.semDedupDelete(spark, sfDir).collect()
-    assert(Similarity.ivfTombBuildCount.get() == t0,
+    assert(Similarity.ivfTombStores.builds.get() == t0,
       "semdedup_delete rebuilt the tombstone sidecar")
   }
 
@@ -336,12 +336,12 @@ class SimilaritySpec extends SparkSpec {
     // the purged segment is the SAME artifact ann_ivf_delete_compact
     // landed — consuming it here must not mint a second compaction,
     // nor re-touch the tombstone sidecar
-    val (t0, c0) = (Similarity.ivfTombBuildCount.get(),
-      Similarity.ivfDelCmpBuildCount.get())
+    val (t0, c0) = (Similarity.ivfTombStores.builds.get(),
+      Similarity.ivfDelCmpStores.builds.get())
     val df = Similarity.semDedupDeleteCompact(spark, sfDir)
     df.collect()
-    assert(Similarity.ivfTombBuildCount.get() == t0 &&
-      Similarity.ivfDelCmpBuildCount.get() == c0,
+    assert(Similarity.ivfTombStores.builds.get() == t0 &&
+      Similarity.ivfDelCmpStores.builds.get() == c0,
       "delete-compaction artifacts rebuilt on a second run")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft_ivfdc"),
@@ -387,10 +387,10 @@ class SimilaritySpec extends SparkSpec {
     // sketch store lands once; the coarse pass reads IT (the 4×
     // narrower artifact), and the full-vector side enters the rerank
     // via broadcast joins only — vectors are never shuffled
-    val b0 = Similarity.sketchBuildCount.get()
+    val b0 = Similarity.sketchStores.builds.get()
     val df = Similarity.annProjectRerank(spark, sfDir)
     df.collect()
-    assert(Similarity.sketchBuildCount.get() == b0,
+    assert(Similarity.sketchStores.builds.get() == b0,
       "sketch store rebuilt on a second run")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft_sketch"),
@@ -418,9 +418,9 @@ class SimilaritySpec extends SparkSpec {
       .filter(org.apache.spark.sql.functions.col("vec_id")
         % Similarity.SketchIncrEvery === Similarity.SketchIncrSlot)
       .count() == 0, "batch sketches leaked into the base segment")
-    val b0 = Similarity.sketchSegBuildCount.get()
+    val b0 = Similarity.sketchSegStores.builds.get()
     Similarity.annProjectRerankIncremental(spark, sfDir).collect()
-    assert(Similarity.sketchSegBuildCount.get() == b0,
+    assert(Similarity.sketchSegStores.builds.get() == b0,
       "sketch segments rebuilt on a second run")
   }
 
@@ -467,17 +467,17 @@ class SimilaritySpec extends SparkSpec {
     idxScans.foreach(l => assert(l.contains("PartitionFilters: [cid"),
       s"the K=64 inverted-file scan is not pruned on cid:\n$l"))
     // the K-keyed store lands once per (dataset, K)
-    val k0 = Similarity.ivfKBuildCount.get()
+    val k0 = Similarity.ivfKStores.builds.get()
     Similarity.annIvfPruned(spark, sfDir).collect()
-    assert(Similarity.ivfKBuildCount.get() == k0,
+    assert(Similarity.ivfKStores.builds.get() == k0,
       "K-keyed IVF store rebuilt on a second run")
   }
 
   test("pq queries read one landed code store per dataset, never rebuilding") {
     Similarity.annIvfPq(spark, sfDir).collect()
-    val builds = Similarity.pqBuildCount.get()
+    val builds = Similarity.pqStores.builds.get()
     Similarity.annIvfPq(spark, sfDir).collect()
-    assert(Similarity.pqBuildCount.get() == builds,
+    assert(Similarity.pqStores.builds.get() == builds,
       "a repeat PQ consumer re-built the landed code store")
   }
 
@@ -490,7 +490,7 @@ class SimilaritySpec extends SparkSpec {
       dot / math.sqrt(na * nb)
     }
     val nVec = Tables.embeddings(spark, sfDir).count()
-    val out = java.nio.file.Files.createTempDirectory("graft_hier").toString
+    val out = SparkSpec.tempDir("graft_hier").toString
     // nprobe == coarse: the shortlist is exhaustive, so the
     // hierarchical assignment must BE the exact argmax over the
     // returned centroids — the identity that pins the two-level
@@ -650,10 +650,10 @@ class SimilaritySpec extends SparkSpec {
     // first consumer forces the build (idempotent if an earlier test
     // already did); repeat queries must be store reads + probes
     Similarity.annIvf(spark, sfDir).collect()
-    val builds = Similarity.ivfBuildCount.get()
+    val builds = Similarity.ivfStores.builds.get()
     Similarity.annIvf(spark, sfDir).collect()
     Similarity.ivfIndex(spark, sfDir).count()
-    assert(Similarity.ivfBuildCount.get() == builds,
+    assert(Similarity.ivfStores.builds.get() == builds,
       "a repeat IVF consumer re-built the landed index")
   }
 

@@ -655,7 +655,7 @@ class SourcesSpec extends SparkSpec {
   test("streaming a storage-partitioned table generates pkey correctly") {
     // the micro-batch reader must carry the REAL pstep (and skew map)
     // for the pkey column — a rebuilt (name, 0) pair divided by zero
-    val out = java.nio.file.Files.createTempDirectory("graft_pstream")
+    val out = SparkSpec.tempDir("graft_pstream")
     val q = spark.readStream.format("graft.sources.SeqSource")
       .option("n", "300").option("pstep", "100")
       .option("hotrows", "150").load()
@@ -773,7 +773,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S6 JSON sink roundtrip") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val out = SparkSpec.tempDir("graft_json").toString
     val wc = TextOps.wordcount(spark, sfDir)
     TextSources.writeJson(wc, out)
     val back = spark.read.json(out)
@@ -784,7 +784,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("CSV source/sink roundtrip preserves lineitem aggregates") {
-    val out = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val out = SparkSpec.tempDir("graft_csv").toString
     val li = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_quantity", "l_returnflag")
     li.write.mode("overwrite").option("header", "true").csv(out)

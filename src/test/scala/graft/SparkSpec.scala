@@ -30,11 +30,18 @@ object SparkSpec {
   def session: SparkSession = synchronized {
     if (cached == null || cached.sparkContext.isStopped) {
       cached = GraftSession.builder(4)
-        .config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft_wh").toString)
+        .config("spark.sql.warehouse.dir", tempDir("graft_wh").toString)
         .getOrCreate()
       cached.sparkContext.setLogLevel("ERROR")
     }
     cached
+  }
+
+  /** A fresh dir under this JVM's `graft_spec` scratch tree, so the
+    * scratch cleanup removes it with everything else the suite wrote. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val parent = Scratch.processScoped("graft_spec")
+    java.nio.file.Files.createDirectories(parent)
+    java.nio.file.Files.createTempDirectory(parent, prefix)
   }
 }

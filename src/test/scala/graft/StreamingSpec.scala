@@ -34,8 +34,8 @@ class StreamingSpec extends SparkSpec {
 
   test("dsv2 streaming source: capped multi-batch drain ≡ batch read") {
     import org.apache.spark.sql.streaming.Trigger
-    val sink = java.nio.file.Files.createTempDirectory("dsv2s_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("dsv2s_ckpt").toString
+    val sink = SparkSpec.tempDir("dsv2s_sink").toString
+    val ckpt = SparkSpec.tempDir("dsv2s_ckpt").toString
     val batches = new java.util.concurrent.atomic.AtomicInteger(0)
     val q = spark.readStream.format("graft.sources.SeqSource")
       .option("n", "10000").option("parts", "4")
@@ -124,7 +124,7 @@ class StreamingSpec extends SparkSpec {
     // must throw at DataFrame construction on both ingest paths — the
     // r8 batch path failed loud but the stream path failed silent
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_badts")
+    val dir = SparkSpec.tempDir("graft_badts")
     spark.range(3)
       .select(col("id").as("event_id"),
         (col("id") * 1.5).as("ts"), // DoubleType: not a layout we ship
@@ -274,13 +274,13 @@ class StreamingSpec extends SparkSpec {
     // raw as-stored rows (no ts normalization) — the re-written slices
     // go back through the stream reader, which probes + normalizes
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_${tag}_src")
+    val dir = SparkSpec.tempDir(s"graft_${tag}_src")
     (dir, raw)
   }
 
   private def writeSlice(df: DataFrame, dir: java.nio.file.Path, name: String): Unit = {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft_slice_$name")
+    val tmp = SparkSpec.tempDir(s"graft_slice_$name")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = java.nio.file.Files.list(tmp).iterator()
     val files = new scala.collection.mutable.ArrayBuffer[java.nio.file.Path]
@@ -314,8 +314,8 @@ class StreamingSpec extends SparkSpec {
     val bucket = pmod(col("event_id"), lit(4))
     writeSlice(raw.filter(bucket === 0), srcDir, "a0")
     writeSlice(raw.filter(bucket === 1), srcDir, "a1")
-    val sink = java.nio.file.Files.createTempDirectory("graft_sessrec_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sessrec_ckpt").toString
+    val sink = SparkSpec.tempDir("graft_sessrec_sink").toString
+    val ckpt = SparkSpec.tempDir("graft_sessrec_ckpt").toString
     def phased(): Unit = drainWith(
       StreamOps.sessionizeStreamOf(
         StreamOps.eventsStreamFromDir(spark, srcDir.toString, Some(1))),
@@ -335,8 +335,8 @@ class StreamingSpec extends SparkSpec {
     val restarted = rows(sink)
 
     // one-shot control: same four files, fresh checkpoint and state
-    val sink2 = java.nio.file.Files.createTempDirectory("graft_sessrec_s2").toString
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_sessrec_c2").toString
+    val sink2 = SparkSpec.tempDir("graft_sessrec_s2").toString
+    val ckpt2 = SparkSpec.tempDir("graft_sessrec_c2").toString
     drainWith(
       StreamOps.sessionizeStreamOf(
         StreamOps.eventsStreamFromDir(spark, srcDir.toString, Some(1))),
@@ -365,8 +365,8 @@ class StreamingSpec extends SparkSpec {
         .orderBy("click_id", "purchase_id")
         .collect().toSeq.map(_.toSeq)
 
-    val sink = java.nio.file.Files.createTempDirectory("graft_leftrec_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_leftrec_ckpt").toString
+    val sink = SparkSpec.tempDir("graft_leftrec_sink").toString
+    val ckpt = SparkSpec.tempDir("graft_leftrec_ckpt").toString
     drainWith(mk(), "append", ckpt) { (b, _) =>
       b.write.mode("append").parquet(sink) }
     writeSlice(raw.filter(bucket === 2), srcDir, "b0")
@@ -377,8 +377,8 @@ class StreamingSpec extends SparkSpec {
     // one-shot control over the same files: the phased run must emit
     // the same matches AND the same watermark-flushed null rows —
     // both sides' join state and watermark must survive the restart
-    val sink2 = java.nio.file.Files.createTempDirectory("graft_leftrec_s2").toString
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_leftrec_c2").toString
+    val sink2 = SparkSpec.tempDir("graft_leftrec_s2").toString
+    val ckpt2 = SparkSpec.tempDir("graft_leftrec_c2").toString
     drainWith(mk(), "append", ckpt2) { (b, _) =>
       b.write.mode("append").parquet(sink2) }
 
@@ -407,8 +407,8 @@ class StreamingSpec extends SparkSpec {
         .orderBy("w_start", "cohort")
         .collect().toSeq.map(_.toSeq)
 
-    val sink = java.nio.file.Files.createTempDirectory("graft_jwrec_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_jwrec_ckpt").toString
+    val sink = SparkSpec.tempDir("graft_jwrec_sink").toString
+    val ckpt = SparkSpec.tempDir("graft_jwrec_ckpt").toString
     drainWith(mk(), "append", ckpt) { (b, _) =>
       b.write.mode("append").parquet(sink) }
     writeSlice(raw.filter(bucket === 2), srcDir, "b0")
@@ -420,8 +420,8 @@ class StreamingSpec extends SparkSpec {
     // emit the same finalized windows — the JOIN's buffered sides AND
     // the AGGREGATE's open windows (plus the propagated watermark
     // between them) must all survive the restart
-    val sink2 = java.nio.file.Files.createTempDirectory("graft_jwrec_s2").toString
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_jwrec_c2").toString
+    val sink2 = SparkSpec.tempDir("graft_jwrec_s2").toString
+    val ckpt2 = SparkSpec.tempDir("graft_jwrec_c2").toString
     drainWith(mk(), "append", ckpt2) { (b, _) =>
       b.write.mode("append").parquet(sink2) }
 
@@ -460,8 +460,8 @@ class StreamingSpec extends SparkSpec {
     writeSlice(rawTs.filter(!isU && tsUs > mid && tsUs <= q3), srcDir, "b0")
     writeSlice(rawTs.filter(
       tsUs > q3 && (!isU || tsUs <= mx - 2 * hourUs)), srcDir, "c0")
-    val sink = java.nio.file.Files.createTempDirectory("graft_twstimer_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_twstimer_ckpt").toString
+    val sink = SparkSpec.tempDir("graft_twstimer_sink").toString
+    val ckpt = SparkSpec.tempDir("graft_twstimer_ckpt").toString
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
@@ -534,8 +534,8 @@ class StreamingSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       def drain(ttlMs: Long): Map[Long, Long] = {
-        val sink = java.nio.file.Files.createTempDirectory("graft_ttl_sink").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_ttl_ckpt").toString
+        val sink = SparkSpec.tempDir("graft_ttl_sink").toString
+        val ckpt = SparkSpec.tempDir("graft_ttl_ckpt").toString
         // NOT AvailableNow, and NOT processAllAvailable either:
         // TimeMode.ProcessingTime makes shouldRunAnotherBatch
         // perpetually true (state-maintenance batches), so the query
@@ -603,8 +603,8 @@ class StreamingSpec extends SparkSpec {
     val bucket = pmod(col("event_id"), lit(3))
     writeSlice(raw.filter(bucket === 0), srcDir, "a0")
     writeSlice(raw.filter(bucket === 1), srcDir, "a1")
-    val sink = java.nio.file.Files.createTempDirectory("graft_twsrec_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_twsrec_ckpt").toString
+    val sink = SparkSpec.tempDir("graft_twsrec_sink").toString
+    val ckpt = SparkSpec.tempDir("graft_twsrec_ckpt").toString
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
@@ -647,8 +647,8 @@ class StreamingSpec extends SparkSpec {
     writeSlice(raw.filter(bucket === 0), srcDir, "a0")
     writeSlice(raw.filter(bucket === 1), srcDir, "a1")
 
-    val snap = java.nio.file.Files.createTempDirectory("graft_upsert_snap").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_ckpt").toString
+    val snap = SparkSpec.tempDir("graft_upsert_snap").toString
+    val ckpt = SparkSpec.tempDir("graft_upsert_ckpt").toString
 
     def drain(): Unit = StreamOps.runUpsert(spark,
       StreamOps.eventsStreamFromDir(spark, srcDir.toString, Some(1)),
