@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Scratch.{sourceFingerprint, stage, wipeDir}
 
 /** Scale-rehearsal harness (SCALE.md): stages isomorphic-shard
   * multiples of the driver testdata and measures how streaming state
@@ -55,13 +56,6 @@ object ScaleRehearsal {
       { bytes.set(0); records.set(0); inBytes.set(0); inRecords.set(0) }
   }
 
-  private def wipeDir(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-  }
-
   private def freshDir(parts: String*): String = {
     val p = Scratch.path(("graft_rehearsal" +: parts): _*)
     wipeDir(p)
@@ -71,41 +65,15 @@ object ScaleRehearsal {
 
   /** Staged dirs are content-addressed by (kind, SOURCE DATASET,
     * multiple, any shape params in `extra`) and reused across
-    * passes/runs; `_STAGED` marks a completed write AND carries a
-    * fingerprint of the staging's source files. The dataset is part of
-    * the key — keying on the multiple alone would silently reuse an
-    * sf0.1 staging for an sf0.001 request — and the fingerprint closes
-    * the remaining hole: markers persist across JVM runs, so a
-    * regenerated testdata dir (same path, new content) would otherwise
-    * keep serving shards of the OLD data to every measurement. */
+    * passes/runs under the `Scratch.stage` marker rule. The dataset
+    * is part of the key — keying on the multiple alone would silently
+    * reuse an sf0.1 staging for an sf0.001 request — and the marker's
+    * source fingerprint catches a regenerated dataset at the same
+    * path. */
   private def stagedDir(kind: String, sfDir: String, mult: Int,
                         extra: String = ""): java.nio.file.Path =
     Scratch.path("graft_rehearsal", "stage",
       s"${kind}_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}_x$mult$extra")
-
-  /** name:size:mtime of every regular file under the source paths —
-    * cheap, metadata-only, and any regeneration of the testdata moves
-    * at least one mtime. */
-  private def sourceFingerprint(srcs: Seq[java.nio.file.Path]): String = {
-    import scala.jdk.CollectionConverters._
-    srcs.flatMap { p =>
-      val st = java.nio.file.Files.walk(p)
-      try st.iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_)).toList
-      finally st.close()
-    }.sortBy(_.toString).map { f =>
-      s"${f.getFileName}:${java.nio.file.Files.size(f)}:" +
-        s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}"
-    }.mkString("|")
-  }
-
-  private def isStaged(p: java.nio.file.Path, fp: String): Boolean = {
-    val m = p.resolve("_STAGED")
-    java.nio.file.Files.exists(m) && java.nio.file.Files.readString(m) == fp
-  }
-
-  private def markStaged(p: java.nio.file.Path, fp: String): Unit =
-    java.nio.file.Files.writeString(p.resolve("_STAGED"), fp)
 
   // events sf0.1: user_id ∈ [0, 1500), event_id < 100 000, ts spans
   // 2024-01-01..31. Offsets clear the key range so shards are disjoint.
@@ -125,40 +93,37 @@ object ScaleRehearsal {
     // `batches` shapes the staged files, so it is part of the key
     val dir = stagedDir("events", sfDir, mult, s"_b$batches")
     val fp = sourceFingerprint(Seq(java.nio.file.Paths.get(sfDir, "events.parquet")))
-    if (isStaged(dir, fp)) return dir.toString
-    wipeDir(dir)
-    java.nio.file.Files.createDirectories(dir)
-    val base = Tables.events(s, sfDir)
-    // shard k = base with keys offset by k × range, generated as ONE
-    // broadcast cross join with the shard index (not a mult-way union
-    // tree, which stops planning cleanly around the hundreds — the
-    // stageEmbeddings lesson; this form stages 1000× as one plan)
-    val all = base
-      .crossJoin(broadcast(s.range(0, mult).toDF("k")))
-      .select(
-        (col("event_id") + col("k") * lit(EventRange)).as("event_id"),
-        col("ts"),
-        (col("user_id") + col("k") * lit(UserRange)).as("user_id"),
-        col("event_type"), col("value"), col("props"))
-      // 30 days / 5 batches = 6-day slices: deterministic, engine-free
-      // (clamped so a day-31 straggler can't mint a 6th bucket)
-      .withColumn("__b",
-        least(((dayofmonth(col("ts")) - 1) / 6).cast("int"), lit(batches - 1)))
-    (0 until batches).foreach { b =>
-      val tmp = dir.resolve(s"_tmp$b")
-      // repartition(1), not coalesce(1): the single-file invariant with
-      // the shard expansion still computed in parallel upstream
-      all.filter(col("__b") === b).drop("__b")
-        .repartition(1).write.parquet(tmp.toString)
-      import scala.jdk.CollectionConverters._
-      val part = java.nio.file.Files.list(tmp).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-      java.nio.file.Files.move(part, dir.resolve(f"b$b%02d.parquet"))
-      wipeDir(tmp)
-      Thread.sleep(20) // distinct mtimes → deterministic replay order
+    stage(dir, fp) {
+      val base = Tables.events(s, sfDir)
+      // shard k = base with keys offset by k × range, generated as ONE
+      // broadcast cross join with the shard index (not a mult-way union
+      // tree, which stops planning cleanly around the hundreds — the
+      // stageEmbeddings lesson; this form stages 1000× as one plan)
+      val all = base
+        .crossJoin(broadcast(s.range(0, mult).toDF("k")))
+        .select(
+          (col("event_id") + col("k") * lit(EventRange)).as("event_id"),
+          col("ts"),
+          (col("user_id") + col("k") * lit(UserRange)).as("user_id"),
+          col("event_type"), col("value"), col("props"))
+        // 30 days / 5 batches = 6-day slices: deterministic, engine-free
+        // (clamped so a day-31 straggler can't mint a 6th bucket)
+        .withColumn("__b",
+          least(((dayofmonth(col("ts")) - 1) / 6).cast("int"), lit(batches - 1)))
+      (0 until batches).foreach { b =>
+        val tmp = dir.resolve(s"_tmp$b")
+        // repartition(1), not coalesce(1): the single-file invariant with
+        // the shard expansion still computed in parallel upstream
+        all.filter(col("__b") === b).drop("__b")
+          .repartition(1).write.parquet(tmp.toString)
+        import scala.jdk.CollectionConverters._
+        val part = java.nio.file.Files.list(tmp).iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
+        java.nio.file.Files.move(part, dir.resolve(f"b$b%02d.parquet"))
+        wipeDir(tmp)
+        Thread.sleep(20) // distinct mtimes → deterministic replay order
+      }
     }
-    markStaged(dir, fp)
-    dir.toString
   }
 
   /** Stage `mult` fact shards (lineitem + orders, orderkey-offset,
@@ -171,27 +136,24 @@ object ScaleRehearsal {
     val fp = sourceFingerprint(Seq(
       java.nio.file.Paths.get(sfDir, "lineitem.parquet"),
       java.nio.file.Paths.get(sfDir, "orders.parquet")))
-    if (isStaged(dir, fp)) return dir.toString
-    wipeDir(dir)
-    java.nio.file.Files.createDirectories(dir)
-    val okRange = 150000L
-    val li = (0 until mult).map { k =>
-      Tables.lineitem(s, sfDir)
-        .withColumn("l_orderkey", col("l_orderkey") + lit(k * okRange))
-    }.reduce(_ union _)
-    li.write.parquet(dir.resolve("lineitem.parquet").toString)
-    val ord = (0 until mult).map { k =>
-      Tables.orders(s, sfDir)
-        .withColumn("o_orderkey", col("o_orderkey") + lit(k * okRange))
-    }.reduce(_ union _)
-    ord.write.parquet(dir.resolve("orders.parquet").toString)
-    Seq("customer", "nation", "region", "supplier", "part").foreach { t =>
-      java.nio.file.Files.createSymbolicLink(
-        dir.resolve(s"$t.parquet"),
-        java.nio.file.Paths.get(sfDir, s"$t.parquet"))
+    stage(dir, fp) {
+      val okRange = 150000L
+      val li = (0 until mult).map { k =>
+        Tables.lineitem(s, sfDir)
+          .withColumn("l_orderkey", col("l_orderkey") + lit(k * okRange))
+      }.reduce(_ union _)
+      li.write.parquet(dir.resolve("lineitem.parquet").toString)
+      val ord = (0 until mult).map { k =>
+        Tables.orders(s, sfDir)
+          .withColumn("o_orderkey", col("o_orderkey") + lit(k * okRange))
+      }.reduce(_ union _)
+      ord.write.parquet(dir.resolve("orders.parquet").toString)
+      Seq("customer", "nation", "region", "supplier", "part").foreach { t =>
+        java.nio.file.Files.createSymbolicLink(
+          dir.resolve(s"$t.parquet"),
+          java.nio.file.Paths.get(sfDir, s"$t.parquet"))
+      }
     }
-    markStaged(dir, fp)
-    dir.toString
   }
 
   /** One micro-batch's worth of progress evidence. */
@@ -209,15 +171,6 @@ object ScaleRehearsal {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
     s.conf.set(key, "8")
-    // SPARK_GRAFT_REHEARSAL_CHANGELOG=1: RocksDB CHANGELOG
-    // checkpointing — per-batch commits upload the delta log instead
-    // of snapshotting SST files (snapshots continue in the
-    // background), the production knob for large-state low-latency
-    // commits; measured as a deepstate twin
-    if (sys.env.get("SPARK_GRAFT_REHEARSAL_CHANGELOG").contains("1"))
-      s.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
     val q = graft.streaming.StreamOps.withRocksDb(s, trackRows = true) {
       try stream.writeStream
         .outputMode(mode)
@@ -390,26 +343,23 @@ object ScaleRehearsal {
     val dir = stagedDir("docs", sfDir, mult)
     val fp = sourceFingerprint(Seq(
       java.nio.file.Paths.get(sfDir, "documents.parquet")))
-    if (isStaged(dir, fp)) return dir.toString
-    wipeDir(dir)
-    java.nio.file.Files.createDirectories(dir)
-    val base = Tables.documents(s, sfDir)
-    // append batches of ≤ 50 shards (the stageEmbeddings rationale):
-    // a 1000× staging plans 20 modest jobs, not one 1000-branch
-    // union tree
-    val out = dir.resolve("documents.parquet").toString
-    (0 until mult).grouped(50).foreach { chunk =>
-      chunk.map { k =>
-        base.select(
-          (col("doc_id") + lit(k * DocRange)).as("doc_id"),
-          array_join(transform(split(col("text"), "\n"),
-            l => concat(l, lit(s" §$k"))), "\n").as("text"),
-          concat(col("source"), lit(s"_$k")).as("source"))
-      }.reduce(_ union _)
-        .write.mode("append").parquet(out)
+    stage(dir, fp) {
+      val base = Tables.documents(s, sfDir)
+      // append batches of ≤ 50 shards (the stageEmbeddings rationale):
+      // a 1000× staging plans 20 modest jobs, not one 1000-branch
+      // union tree
+      val out = dir.resolve("documents.parquet").toString
+      (0 until mult).grouped(50).foreach { chunk =>
+        chunk.map { k =>
+          base.select(
+            (col("doc_id") + lit(k * DocRange)).as("doc_id"),
+            array_join(transform(split(col("text"), "\n"),
+              l => concat(l, lit(s" §$k"))), "\n").as("text"),
+            concat(col("source"), lit(s"_$k")).as("source"))
+        }.reduce(_ union _)
+          .write.mode("append").parquet(out)
+      }
     }
-    markStaged(dir, fp)
-    dir.toString
   }
 
   /** Zipf vocabulary size for the realistic-corpus retrieval
@@ -439,43 +389,40 @@ object ScaleRehearsal {
     val dir = stagedDir("docszipf", sfDir, mult)
     val fp = sourceFingerprint(Seq(
       java.nio.file.Paths.get(sfDir, "documents.parquet"))) + s"|v$ZipfVocab"
-    if (isStaged(dir, fp)) return dir.toString
-    wipeDir(dir)
-    java.nio.file.Files.createDirectories(dir)
-    val nBase = Tables.documents(s, sfDir).count()
-    val ndocs = nBase * mult
-    import scala.jdk.CollectionConverters._
-    val words = s.createDataFrame(
-      (1 to ZipfVocab).map(r =>
-        org.apache.spark.sql.Row(r, zipfWordOf(r))).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("rank",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("word",
-          org.apache.spark.sql.types.StringType))))
-    s.range(ndocs).select(col("id").as("doc_id"))
-      .withColumn("len",
-        pmod(xxhash64(col("doc_id"), lit("len")), lit(41L)) + lit(40L))
-      .select(col("doc_id"),
-        explode(sequence(lit(1L), col("len"))).as("pos"))
-      .withColumn("u",
-        (pmod(xxhash64(col("doc_id"), col("pos"), lit("w")),
-          lit(1000000L)) + lit(1L)).cast("double") / 1000000.0)
-      .withColumn("rank",
-        least(lit(ZipfVocab),
-          greatest(lit(1),
-            floor(exp(col("u") * log(lit(ZipfVocab.toDouble))))
-              .cast("int"))))
-      .join(broadcast(words), "rank")
-      .groupBy("doc_id")
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("pos"), col("word")))),
-          e => e.getField("word")), " ").as("text"))
-      .select(col("doc_id"), col("text"), lit("xx").as("lang"),
-        lit("zipf").as("source"), length(col("text")).as("n_chars"))
-      .write.parquet(dir.resolve("documents.parquet").toString)
-    markStaged(dir, fp)
-    dir.toString
+    stage(dir, fp) {
+      val nBase = Tables.documents(s, sfDir).count()
+      val ndocs = nBase * mult
+      import scala.jdk.CollectionConverters._
+      val words = s.createDataFrame(
+        (1 to ZipfVocab).map(r =>
+          org.apache.spark.sql.Row(r, zipfWordOf(r))).asJava,
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("rank",
+            org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.types.StructField("word",
+            org.apache.spark.sql.types.StringType))))
+      s.range(ndocs).select(col("id").as("doc_id"))
+        .withColumn("len",
+          pmod(xxhash64(col("doc_id"), lit("len")), lit(41L)) + lit(40L))
+        .select(col("doc_id"),
+          explode(sequence(lit(1L), col("len"))).as("pos"))
+        .withColumn("u",
+          (pmod(xxhash64(col("doc_id"), col("pos"), lit("w")),
+            lit(1000000L)) + lit(1L)).cast("double") / 1000000.0)
+        .withColumn("rank",
+          least(lit(ZipfVocab),
+            greatest(lit(1),
+              floor(exp(col("u") * log(lit(ZipfVocab.toDouble))))
+                .cast("int"))))
+        .join(broadcast(words), "rank")
+        .groupBy("doc_id")
+        .agg(array_join(
+          transform(array_sort(collect_list(struct(col("pos"), col("word")))),
+            e => e.getField("word")), " ").as("text"))
+        .select(col("doc_id"), col("text"), lit("xx").as("lang"),
+          lit("zipf").as("source"), length(col("text")).as("n_chars"))
+        .write.parquet(dir.resolve("documents.parquet").toString)
+    }
   }
 
   /** line_dedup + pack_sequences over staged doc multiples: wall +
@@ -500,66 +447,26 @@ object ScaleRehearsal {
     }
   }
 
-  /** SCALE receipt for the r19 §2.4 structural rewrites that are
-    * invisible at sf0.1 (VERDICT r19 #9): the bigram adjacency
-    * (zip_with map-side vs the old lead()-over-(doc_id, pos) window
-    * that exchanged AND sorted the whole corpus token stream) and the
-    * simhash vote fold (±1 per occurrence vs the old per-distinct
-    * (doc, word) pre-aggregate that shuffled the token stream twice).
-    * Each old shape lives HERE as a measurement twin only — the query
-    * paths carry the new forms. Expectation: the removed
-    * exchange+sort's cost grows superlinearly with the multiple
-    * (sort + quadratic shuffle-block growth), the map-side twin's
-    * linearly; the printed shuffle_bytes make the removed exchange
-    * directly visible. */
+  /** The r19 §2.4 map-side text shapes over staged doc multiples:
+    * the `zip_with` bigram adjacency (`bigrams_zipwith`) and the ±1
+    * per-occurrence simhash vote fold (`simhash_occurrence`), wall +
+    * shuffle per multiple. Expectation: linear in the multiple. The
+    * removed shapes they replaced (a corpus-wide `lead()` window, a
+    * per-distinct (doc, word) pre-aggregate) have their receipts in
+    * `plans/r20/SCALE_textscale.jsonl` and `OPTIMIZATION_r20.md`. */
   def runTextScale(s: SparkSession, sfDir: String, mults: Seq[Int],
                    passes: Int = 3): Unit = {
-    import org.apache.spark.sql.DataFrame
     val listener = new ShuffleListener
     s.sparkContext.addSparkListener(listener)
-    def bigramCounts(ev: DataFrame): DataFrame =
-      ev.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-        .filter(col("c12") >= operators.TextAnalysis.MinBigramCount)
-    // the r19-removed shape: corpus-wide (doc_id, pos) window
-    def bigramEventsWindow(docs: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id").orderBy("pos")
-      docs.select(col("doc_id"),
-          posexplode(operators.TextAnalysis.cleanTokens(col("text")))
-            .as(Seq("pos", "w1")))
-        .withColumn("w2", lead("w1", 1).over(w))
-        .filter(col("w2").isNotNull)
-        .select("doc_id", "w1", "w2")
-    }
-    // the r19-removed shape: tf-weighted votes over a distinct
-    // (doc, word) pre-aggregate (one extra token-stream shuffle)
-    def simhashPreDistinct(docs: DataFrame, bits: Int): DataFrame = {
-      val tok = operators.TextOps.tokenize(docs)
-        .groupBy("doc_id", "word").agg(count(lit(1)).as("w"))
-        .withColumn("h", operators.Dedup.md5Hash60(col("word")))
-      val votes = (0 until bits).map { b =>
-        sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, col("w"))
-          .otherwise(-col("w"))).as(s"v$b")
-      }
-      tok.groupBy("doc_id")
-        .agg(votes.head, votes.tail: _*)
-        .select(col("doc_id"),
-          (0 until bits).map(b =>
-            when(col(s"v$b") > 0, shiftleft(lit(1L), b)).otherwise(lit(0L)))
-            .reduce(_.bitwiseOR(_)).as("simhash"))
-    }
     mults.foreach { m =>
-      val staged = stageDocs(s, sfDir, m)
-      val docs = Tables.documents(s, staged)
+      val docs = Tables.documents(s, stageDocs(s, sfDir, m))
       measure(s, listener, "textscale", "bigrams_zipwith", m, passes)(
-        bigramCounts(operators.TextAnalysis.bigramEvents(docs)))
-      measure(s, listener, "textscale", "bigrams_window", m, passes)(
-        bigramCounts(bigramEventsWindow(docs)))
+        operators.TextAnalysis.bigramEvents(docs)
+          .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
+          .filter(col("c12") >= operators.TextAnalysis.MinBigramCount))
       measure(s, listener, "textscale", "simhash_occurrence", m, passes)(
         operators.Dedup.simhashFromHash(docs,
           operators.Dedup.md5Hash60(col("word")), operators.Dedup.SimHashBits))
-      measure(s, listener, "textscale", "simhash_predistinct", m, passes)(
-        simhashPreDistinct(docs, operators.Dedup.SimHashBits))
     }
   }
 
@@ -580,18 +487,15 @@ object ScaleRehearsal {
     val dir = stagedDir("govdocs", sfDir, mult)
     val fp = sourceFingerprint(Seq(
       java.nio.file.Paths.get(sfDir, "documents.parquet")))
-    if (isStaged(dir, fp)) return dir.toString
-    wipeDir(dir)
-    java.nio.file.Files.createDirectories(dir)
-    val base = Tables.documents(s, sfDir)
-    val out = dir.resolve("documents.parquet").toString
-    (0 until mult).grouped(50).foreach { chunk =>
-      chunk.map(k => base.withColumn("doc_id", col("doc_id") + lit(k * DocRange)))
-        .reduce(_ union _)
-        .write.mode("append").parquet(out)
+    stage(dir, fp) {
+      val base = Tables.documents(s, sfDir)
+      val out = dir.resolve("documents.parquet").toString
+      (0 until mult).grouped(50).foreach { chunk =>
+        chunk.map(k => base.withColumn("doc_id", col("doc_id") + lit(k * DocRange)))
+          .reduce(_ union _)
+          .write.mode("append").parquet(out)
+      }
     }
-    markStaged(dir, fp)
-    dir.toString
   }
 
   /** Governance/release rung (round 16): the manifest must stay ONE
@@ -615,19 +519,16 @@ object ScaleRehearsal {
     val dir = stagedDir("cust", sfDir, mult)
     val fp = sourceFingerprint(Seq(
       java.nio.file.Paths.get(sfDir, "customer.parquet")))
-    if (isStaged(dir, fp)) return dir.toString
-    wipeDir(dir)
-    java.nio.file.Files.createDirectories(dir)
-    val base = Tables.customer(s, sfDir)
-    val out = dir.resolve("customer.parquet").toString
-    (0 until mult).grouped(50).foreach { chunk =>
-      chunk.map(k => base.withColumn("c_custkey",
-          col("c_custkey") + lit(k * 10000000L)))
-        .reduce(_ union _)
-        .write.mode("append").parquet(out)
+    stage(dir, fp) {
+      val base = Tables.customer(s, sfDir)
+      val out = dir.resolve("customer.parquet").toString
+      (0 until mult).grouped(50).foreach { chunk =>
+        chunk.map(k => base.withColumn("c_custkey",
+            col("c_custkey") + lit(k * 10000000L)))
+          .reduce(_ union _)
+          .write.mode("append").parquet(out)
+      }
     }
-    markStaged(dir, fp)
-    dir.toString
   }
 
   def runGovernance(s: SparkSession, sfDir: String, mults: Seq[Int],
@@ -730,27 +631,24 @@ object ScaleRehearsal {
     val dir = stagedDir("emb", sfDir, mult, "_t2")
     val fp = sourceFingerprint(Seq(
       java.nio.file.Paths.get(sfDir, "embeddings.parquet")))
-    if (isStaged(dir, fp)) return dir.toString
-    wipeDir(dir)
-    java.nio.file.Files.createDirectories(dir)
-    val base = Tables.embeddings(s, sfDir)
-    val out = dir.resolve("embeddings.parquet").toString
-    (0 until mult).grouped(64).foreach { chunk =>
-      chunk.map { k =>
-        val rot = (k * 7) % 64
-        val g = k / 64
-        val signs = array((0 until 64).map(i =>
-          lit(if (((g >> (i % 4)) & 1) == 1) -1.0f else 1.0f)): _*)
-        val rotated = transform(sequence(lit(0), lit(63)),
-          i => element_at(col("embedding"), ((i + lit(rot)) % 64) + 1))
-        val e = zip_with(rotated, signs, (x, sg) => x * sg)
-        base.select((col("vec_id") + lit(k * VecRange)).as("vec_id"),
-          e.as("embedding"), col("label"))
-      }.reduce(_ union _)
-        .write.mode("append").parquet(out)
+    stage(dir, fp) {
+      val base = Tables.embeddings(s, sfDir)
+      val out = dir.resolve("embeddings.parquet").toString
+      (0 until mult).grouped(64).foreach { chunk =>
+        chunk.map { k =>
+          val rot = (k * 7) % 64
+          val g = k / 64
+          val signs = array((0 until 64).map(i =>
+            lit(if (((g >> (i % 4)) & 1) == 1) -1.0f else 1.0f)): _*)
+          val rotated = transform(sequence(lit(0), lit(63)),
+            i => element_at(col("embedding"), ((i + lit(rot)) % 64) + 1))
+          val e = zip_with(rotated, signs, (x, sg) => x * sg)
+          base.select((col("vec_id") + lit(k * VecRange)).as("vec_id"),
+            e.as("embedding"), col("label"))
+        }.reduce(_ union _)
+          .write.mode("append").parquet(out)
+      }
     }
-    markStaged(dir, fp)
-    dir.toString
   }
 
   /** semdedup over staged embedding multiples with K ∝ N — the
@@ -1063,27 +961,24 @@ object ScaleRehearsal {
     val dir = stagedDir("mediadocs3", sfDir, mult)
     val fp = sourceFingerprint(Seq(
       java.nio.file.Paths.get(sfDir, "documents.parquet")))
-    if (isStaged(dir, fp)) return dir.toString
-    wipeDir(dir)
-    java.nio.file.Files.createDirectories(dir)
-    // prime AND above the 1 M id range the sibling stagers reserve —
-    // a sub-range stride would collide shard k's ids with shard k+1's
-    // once the base corpus reaches the stride (1000003 mod 256 = 67)
-    val docStride = 1000003L
-    val base = Tables.documents(s, sfDir)
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-    val out = dir.resolve("documents.parquet").toString
-    (0 until mult).grouped(50).foreach { chunk =>
-      chunk.map { k =>
-        base.select(
-          (col("doc_id") + lit(k * docStride)).as("doc_id"),
-          col("lang"), col("source"),
-          (col("n_chars") + lit(3L * k)).as("n_chars"))
-      }.reduce(_ union _)
-        .write.mode("append").parquet(out)
+    stage(dir, fp) {
+      // prime AND above the 1 M id range the sibling stagers reserve —
+      // a sub-range stride would collide shard k's ids with shard k+1's
+      // once the base corpus reaches the stride (1000003 mod 256 = 67)
+      val docStride = 1000003L
+      val base = Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
+      val out = dir.resolve("documents.parquet").toString
+      (0 until mult).grouped(50).foreach { chunk =>
+        chunk.map { k =>
+          base.select(
+            (col("doc_id") + lit(k * docStride)).as("doc_id"),
+            col("lang"), col("source"),
+            (col("n_chars") + lit(3L * k)).as("n_chars"))
+        }.reduce(_ union _)
+          .write.mode("append").parquet(out)
+      }
     }
-    markStaged(dir, fp)
-    dir.toString
   }
 
   /** Media-family lifecycle, measured (the round-15 verdict accepted
@@ -1491,17 +1386,12 @@ object ScaleRehearsal {
       // date-grain clustering column, as in StorageOps.sortedLayout:
       // parquet never evaluates NTZ-timestamp predicates against
       // row-group stats, so an NTZ layout would measure zero skipping
-      def land(kind: String)(write: DataFrame => Unit): String = {
-        val dir = stagedDir(kind, sfDir, m)
-        if (!isStaged(dir, srcFp)) {
-          wipeDir(dir)
+      def land(kind: String)(write: DataFrame => Unit): String =
+        stage(stagedDir(kind, sfDir, m), srcFp) {
           write(s.read.parquet(s"$staged/lineitem.parquet")
             .select(col("l_shipdate").cast("date").as("l_shipdate"),
               col("l_quantity"), col("l_extendedprice")))
-          markStaged(dir, srcFp)
         }
-        dir.toString
-      }
       val sortedDir = land("li_sorted_d") {
         _.repartitionByRange(32, col("l_shipdate"))
           .sortWithinPartitions("l_shipdate")

@@ -78,6 +78,54 @@ object Scratch {
       try st.toArray(n => new Array[Path](n)).toSeq finally st.close()
     } catch { case _: java.io.IOException => Nil }
 
+  /** The one staging-marker rule for `path` trees reused across runs:
+    * `write` lands `dir` unless its `_STAGED` marker already carries
+    * `fp`, a fingerprint of the stage's sources (usually
+    * [[sourceFingerprint]]); returns `dir`. Markers persist across JVM
+    * runs, so without the fingerprint a regenerated dataset (same path,
+    * new content) would keep serving the OLD stage. A stale or
+    * half-written stage is wiped first, so nothing of the old one
+    * lingers, and the marker is written only after `write` returns.
+    * There is no cross-JVM lock: two JVMs restaging the same `dir` at
+    * once can wipe each other's files. */
+  def stage(dir: Path, fp: String)(write: => Unit): String = {
+    val marker = dir.resolve("_STAGED")
+    if (!(Files.exists(marker) && Files.readString(marker) == fp)) {
+      wipeDir(dir)
+      Files.createDirectories(dir)
+      write
+      Files.writeString(marker, fp)
+    }
+    dir.toString
+  }
+
+  /** name:size:mtime of every regular file under the source paths —
+    * cheap, metadata-only, and any regeneration of a dataset moves at
+    * least one mtime. */
+  def sourceFingerprint(srcs: Seq[Path]): String = {
+    import scala.jdk.CollectionConverters._
+    srcs.flatMap { p =>
+      val st = Files.walk(p)
+      try st.iterator().asScala.filter(Files.isRegularFile(_)).toList
+      finally st.close()
+    }.sortBy(_.toString).map { f =>
+      s"${f.getFileName}:${Files.size(f)}:" +
+        s"${Files.getLastModifiedTime(f).toMillis}"
+    }.mkString("|")
+  }
+
+  /** Strict recursive delete for a stage about to be rewritten: it
+    * throws on any failure, unlike [[deleteTree]], so a stage that
+    * could not be wiped is never marked fresh. */
+  def wipeDir(p: Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    if (Files.exists(p)) {
+      val st = Files.walk(p)
+      try st.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      finally st.close()
+    }
+  }
+
   /** Best-effort recursive delete: a file another process removes
     * first, or one it is still writing, is skipped, not fatal. */
   private[graft] def deleteTree(p: Path): Unit = {

@@ -17,9 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * the built-ins (per-partition streaming expansion, no
   * materialization of the expanded relation).
   *
-  * Tokenization matches `TextAnalysis.cleanTokens` (lower →
-  * split on non-letter/digit runs → drop empties) so the DuckDB
-  * oracle replays it with the established regex twin. A NULL text or
+  * Tokenization is `Tokenizers.Alnum` (lower → split on
+  * non-letter/digit runs → drop empties), so the DuckDB oracle replays
+  * it with `Tokenizers.Alnum.sql`. A NULL text or
   * fewer than n tokens yields no rows (explode semantics, not a null
   * row). */
 case class NGramsGen(child: Expression, n: Expression)
@@ -45,9 +45,8 @@ case class NGramsGen(child: Expression, n: Expression)
     if (t == null || kv == null) Nil
     else {
       val k = kv.asInstanceOf[Int]
-      val toks = t.asInstanceOf[UTF8String].toString
-        .toLowerCase(java.util.Locale.ROOT)
-        .split("[^\\p{L}\\p{N}]+").filter(_.nonEmpty)
+      val toks = graft.operators.Tokenizers.Alnum
+        .words(t.asInstanceOf[UTF8String].toString)
       if (k <= 0 || toks.length < k) Nil
       else (0 to toks.length - k).map { i =>
         InternalRow(UTF8String.fromString(

@@ -33,7 +33,7 @@ object Dedup {
     * corpus first when its downstream partial aggregate would
     * otherwise run inside a single scan task. */
   def shinglesRawFrom(docs: DataFrame, n: Int = 3): DataFrame = {
-    val toks = TextOps.tokens(col("text"))
+    val toks = Tokenizers.Letters.column(col("text"))
     docs
       .withColumn("toks", filter(toks, t => length(t) > 0))
       .withColumn("idx",
@@ -55,7 +55,7 @@ object Dedup {
   def dedupExact(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"),
-        sha2(regexp_replace(trim(lower(col("text"))), "\\s+", " "), 256)
+        sha2(Tokenizers.ExactKey.column(col("text")), 256)
           .as("fp"))
       .groupBy("fp")
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
@@ -1078,8 +1078,7 @@ object Dedup {
       .map(i => s"($i, ${mhA(i)}, ${mhB(i)})").mkString(", ")
     s"""toks AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[^\\p{L}]+'),
-       |      x -> x <> '') AS t
+       |    ${Tokenizers.Letters.sql} AS t
        |  FROM documents),
        |sh0 AS (
        |  SELECT DISTINCT doc_id,
@@ -1131,10 +1130,7 @@ object Dedup {
   def simhashOracleCtes(maxHam: Int = 3,
                         maxBucket: Int = SimHashMaxBucket): String =
     s"""sm_tok AS (
-       |  SELECT doc_id, w AS word FROM (
-       |    SELECT doc_id,
-       |      unnest(string_split_regex(lower(text), '[^\\p{L}]+')) AS w
-       |    FROM documents) WHERE w <> ''),
+       |  SELECT doc_id, unnest(${Tokenizers.Letters.sql}) AS word FROM documents),
        |sm_tf AS (SELECT doc_id, word, count(*) AS w FROM sm_tok GROUP BY 1, 2),
        |sm_hashed AS (
        |  SELECT doc_id,
@@ -1295,9 +1291,9 @@ object Dedup {
          |JOIN heads hb ON hb.doc_id = l.doc_b
          |ORDER BY doc_a, doc_b""".stripMargin,
     "dedup_exact" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS n_copies
+      s"""SELECT min(doc_id) AS keep_id, count(*) AS n_copies
         |FROM documents
-        |GROUP BY regexp_replace(trim(lower(text)), '\s+', ' ', 'g')
+        |GROUP BY ${Tokenizers.ExactKey.sql}
         |ORDER BY keep_id""".stripMargin,
     // the three legs' CTE chains composed verbatim (LSH est over the
     // shared capped-shingle sh, SimHash under sm_ prefixes, exact
@@ -1341,8 +1337,7 @@ object Dedup {
     "neardup_jaccard" ->
       s"""WITH toks AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^\\p{L}]+'),
-        |      x -> x <> '') AS t
+        |    ${Tokenizers.Letters.sql} AS t
         |  FROM documents),
         |sh0 AS (
         |  SELECT DISTINCT doc_id,

@@ -931,14 +931,11 @@ object Governance {
     // membership, hash-fails the audit
     "takedown_audit" ->
       s"""WITH toks AS (
-         |  SELECT doc_id, w FROM (
-         |    SELECT doc_id, unnest(string_split_regex(lower(text),
-         |      '[^\\p{L}]+')) AS w FROM documents) WHERE w <> ''),
+         |  SELECT doc_id, unnest(${Tokenizers.Letters.sql}) AS w FROM documents),
          |bmdocs AS (SELECT DISTINCT doc_id FROM toks),
          |lt AS (
          |  SELECT doc_id,
-         |    list_filter(string_split_regex(lower(text), '[^\\p{L}]+'),
-         |      x -> x <> '') AS t
+         |    ${Tokenizers.Letters.sql} AS t
          |  FROM documents),
          |sh0 AS (
          |  SELECT DISTINCT doc_id,

@@ -41,13 +41,6 @@ object MapReduce {
       .as[(String, String)]
   }
 
-  /** Reference tokenizer (`Worker/Worker.py:11-12`): lowercase, keep
-    * maximal runs of Unicode letters. Scala-side twin of
-    * TextOps.tokens for use inside typed mappers. */
-  def tokenizeText(text: String): Seq[String] =
-    text.toLowerCase(java.util.Locale.ROOT)
-      .split("[^\\p{L}]+").filter(_.nonEmpty).toSeq
-
   /** Associative-combine MapReduce: the scalable reducer contract. */
   def reduceByKey[V](s: SparkSession,
                      input: Dataset[(String, String)],
@@ -85,7 +78,7 @@ object MapReduce {
   def wordcountMr(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     reduceByKey[Long](s, corpus(s, dir),
-      (text, _) => tokenizeText(text).map(_ -> 1L),
+      (text, _) => Tokenizers.Letters.words(text).map(_ -> 1L),
       _ + _)
       .toDF("word", "cnt")
       .orderBy("word")
@@ -97,7 +90,7 @@ object MapReduce {
   def invertedIndexMr(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     groupReduce[(String, String, Long)](s, corpus(s, dir),
-      (text, doc) => tokenizeText(text).map(_ -> doc),
+      (text, doc) => Tokenizers.Letters.words(text).map(_ -> doc),
       (word, docs) => {
         val counts = scala.collection.mutable.Map.empty[String, Long]
         docs.foreach(d => counts.update(d, counts.getOrElse(d, 0L) + 1L))
@@ -116,9 +109,9 @@ object MapReduce {
     * relation (≙ the reference's merged reducer output). */
   val mappers: Map[String, (String, String) => Seq[(String, String)]] = Map(
     "WordCountMapper" ->
-      ((text, _) => tokenizeText(text).map(_ -> "1")),
+      ((text, _) => Tokenizers.Letters.words(text).map(_ -> "1")),
     "InvertedIndexMapper" ->
-      ((text, doc) => tokenizeText(text).map(_ -> doc)),
+      ((text, doc) => Tokenizers.Letters.words(text).map(_ -> doc)),
   )
 
   val reducers: Map[String, (String, Iterator[String]) => Seq[(String, String, Long)]] = Map(
@@ -150,10 +143,12 @@ object MapReduce {
   }
 
   /** Stage `documents` as a one-file-per-doc text directory (once per
-    * sf dir, marker-guarded) so the reference's S1 directory-scan
+    * sf dir and source fingerprint, `Scratch.stage`) so the reference's S1 directory-scan
     * dispatch (`Master/Master.py:195-214`) can be exercised under the
     * driver gate on corpus data. The `_STAGED` marker is
     * underscore-prefixed, which Spark's file source treats as hidden.
+    * A stale stage is wiped first, so no `doc_N.txt` of an id the
+    * regenerated dataset lacks lingers.
     * Staging is test scaffolding, not the operator — the operator's
     * input at scale IS a directory of files — but even scaffolding
     * gets no driver ceiling: the per-doc files are written from
@@ -164,12 +159,9 @@ object MapReduce {
     * identical content — idempotent. */
   def stageDocsAsTextDir(s: SparkSession, dir: String): String = {
     import java.nio.file.Files
-    val staged = graft.Scratch.path("graft_mrdir",
-      dir.replaceAll("[^A-Za-z0-9]", "_"))
-    val marker = staged.resolve("_STAGED")
-    if (!Files.exists(marker)) {
-      Files.createDirectories(staged)
-      val stagedPath = staged.toString
+    val staged = stageDir("graft_mrdir", dir)
+    val stagedPath = staged.toString
+    graft.Scratch.stage(staged, docsFingerprint(dir)) {
       Tables.documents(s, dir).select("doc_id", "text")
         .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
           it.foreach { r =>
@@ -178,10 +170,16 @@ object MapReduce {
               r.getString(1))
           }
         }
-      Files.writeString(marker, "")
     }
-    staged.toString
   }
+
+  /** The reused stage of dataset `dir` under scratch tree `head`. */
+  private[graft] def stageDir(head: String, dir: String): java.nio.file.Path =
+    graft.Scratch.path(head, dir.replaceAll("[^A-Za-z0-9]", "_"))
+
+  private def docsFingerprint(dir: String): String =
+    graft.Scratch.sourceFingerprint(
+      Seq(java.nio.file.Paths.get(dir, "documents.parquet")))
 
   /** S1 dispatch under the driver gate: resolve a text DIRECTORY
     * through `TextSources.resolve`, run the name-dispatched WordCount
@@ -196,7 +194,7 @@ object MapReduce {
     * order) — the reference's S2 single-file input
     * (`Master/Master.py:216-254`), whose only chunking contract is
     * that no word is broken; line boundaries guarantee that. Same
-    * marker-guarded scaffolding rationale as [[stageDocsAsTextDir]],
+    * fingerprint-marked scaffolding rationale as [[stageDocsAsTextDir]],
     * and same no-driver-ceiling rule: the file is produced by a
     * single-task sorted `write.text` (each row lands newline-
     * terminated, exactly the old driver StringBuilder's layout) and
@@ -205,12 +203,9 @@ object MapReduce {
     * the operator, not a bottleneck to fix. */
   def stageDocsAsSingleFile(s: SparkSession, dir: String): String = {
     import java.nio.file.{Files, Paths}
-    val staged = graft.Scratch.path("graft_mrfile",
-      dir.replaceAll("[^A-Za-z0-9]", "_"))
+    val staged = stageDir("graft_mrfile", dir)
     val out = staged.resolve("docs.txt")
-    val marker = staged.resolve("_STAGED")
-    if (!Files.exists(marker)) {
-      Files.createDirectories(staged)
+    graft.Scratch.stage(staged, docsFingerprint(dir)) {
       // per-process tmp: the _STAGED marker guards the final file,
       // but two JVMs racing the FIRST staging must not share the
       // intermediate dir (one deletes while the other enumerates)
@@ -231,7 +226,6 @@ object MapReduce {
       try wk.iterator().asScala.toSeq.reverse
         .foreach(p => Files.deleteIfExists(p))
       finally wk.close()
-      Files.writeString(marker, "")
     }
     out.toString
   }
@@ -263,6 +257,13 @@ object MapReduce {
     "run_mapred_inline" -> runMapRedInline _,
   )
 
+  /** The name-dispatched WordCount's flat (word, doc = '', value)
+    * shape over the documents `from` selects. */
+  private def mapRedSql(from: String): String =
+    s"""SELECT word, '' AS doc, count(*) AS value FROM (
+       |  SELECT unnest(${Tokenizers.Letters.sql}) AS word FROM $from)
+       |GROUP BY word ORDER BY word, doc""".stripMargin
+
   /** Same oracles as the native TextOps forms — the point is that the
     * generic surface reproduces them exactly. */
   val oracle: Map[String, String] = Map(
@@ -270,23 +271,11 @@ object MapReduce {
     "inverted_index_mr" -> TextOps.oracle("inverted_index"),
     // wordcount over the staged per-doc text files ≡ wordcount over
     // the documents table; the reducer's flat shape carries doc = ''
-    "run_mapred_dir" ->
-      """SELECT word, '' AS doc, count(*) AS value FROM (
-        |  SELECT unnest(string_split_regex(lower(text), '[^\p{L}]+')) AS word
-        |  FROM documents) t WHERE word <> ''
-        |GROUP BY word ORDER BY word, doc""".stripMargin,
+    "run_mapred_dir" -> mapRedSql("documents"),
     // S2: same corpus through the single-file line-chunked branch —
     // identical counts (newlines are tokenizer separators)
-    "run_mapred_file" ->
-      """SELECT word, '' AS doc, count(*) AS value FROM (
-        |  SELECT unnest(string_split_regex(lower(text), '[^\p{L}]+')) AS word
-        |  FROM documents) t WHERE word <> ''
-        |GROUP BY word ORDER BY word, doc""".stripMargin,
+    "run_mapred_file" -> mapRedSql("documents"),
     // S3: the bounded inline slice (doc_id < 50), filtered identically
-    "run_mapred_inline" ->
-      """SELECT word, '' AS doc, count(*) AS value FROM (
-        |  SELECT unnest(string_split_regex(lower(text), '[^\p{L}]+')) AS word
-        |  FROM documents WHERE doc_id < 50) t WHERE word <> ''
-        |GROUP BY word ORDER BY word, doc""".stripMargin,
+    "run_mapred_inline" -> mapRedSql("documents WHERE doc_id < 50"),
   )
 }

@@ -791,7 +791,7 @@ object PipelineOps {
     val wCover = Window.partitionBy("doc_id").orderBy("pos")
       .rowsBetween(-(K - 1), 0)
     val kept = Tables.documents(s, d)
-      .select(col("doc_id"), array_remove(split(col("text"), "\\s+"), "").as("t"))
+      .select(col("doc_id"), Tokenizers.Whitespace.list(col("text")).as("t"))
       // decouple the md5-per-token hash loop from input-byte task
       // sizing, exactly as winnowFingerprintsOf does
       .repartition(s.sparkContext.defaultParallelism * 2, col("doc_id"))
@@ -864,7 +864,7 @@ object PipelineOps {
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
+        Tokenizers.Whitespace.count(col("text")).cast("long").as("n_tokens"))
       .withColumn("cum_before", coalesce(sum("n_tokens").over(w), lit(0L)))
       .select(col("doc_id"), col("source"), col("n_tokens"),
         expr(s"cum_before div $PackTokens").as("seq_id"),
@@ -940,7 +940,7 @@ object PipelineOps {
         .filter(col("rn") === 1 && col("lex_lang") === "en")
         .select(col("doc_id"), col("lex_lang").as("lang"))
     }
-    val toks = TextAnalysis.cleanTokens(col("text"))
+    val toks = Tokenizers.Alnum.column(col("text"))
     val quality = docs
       .withColumn("toks", toks)
       .select(col("doc_id"),
@@ -948,7 +948,7 @@ object PipelineOps {
         round((length(col("text")) -
           length(regexp_replace(col("text"), "[a-zA-Z]", ""))).cast("double") /
           length(col("text")), 6).as("alpha_ratio"),
-        sha2(regexp_replace(trim(lower(col("text"))), "\\s+", " "), 256)
+        sha2(Tokenizers.ExactKey.column(col("text")), 256)
           .as("fp"))
       .filter(col("n_tokens") >= BuildMinTokens &&
         col("alpha_ratio") >= BuildMinAlpha)
@@ -1047,10 +1047,7 @@ object PipelineOps {
       val (nqCte, nqJoin, nqExpr) = TextAnalysis.nllqOracleParts
       s"""WITH lex(lex_lang, lex_word) AS (VALUES $lexValues),
          |tok AS (
-         |  SELECT doc_id, w AS word FROM (
-         |    SELECT doc_id,
-         |      unnest(string_split_regex(lower(text), '[^\\p{L}]+')) AS w
-         |    FROM documents) WHERE w <> ''),
+         |  SELECT doc_id, unnest(${Tokenizers.Letters.sql}) AS word FROM documents),
          |scores AS (
          |  SELECT doc_id, lex_lang, count(*) AS score
          |  FROM tok JOIN lex ON word = lex_word GROUP BY 1, 2),
@@ -1062,11 +1059,10 @@ object PipelineOps {
          |  WHERE rn = 1 AND lex_lang = 'en'),
          |q AS (
          |  SELECT doc_id,
-         |    len(list_filter(string_split_regex(trim(lower(text)),
-         |      '[^\\p{L}\\p{N}]+'), x -> x <> '')) AS n_tokens,
+         |    len(${Tokenizers.Alnum.sql}) AS n_tokens,
          |    round((length(text) - length(regexp_replace(text,
          |      '[a-zA-Z]', '', 'g')))::DOUBLE / length(text), 6) AS alpha_ratio,
-         |    sha256(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS fp
+         |    sha256(${Tokenizers.ExactKey.sql}) AS fp
          |  FROM documents),
          |filt AS (
          |  SELECT q.doc_id, lang, n_tokens, fp
@@ -1076,8 +1072,7 @@ object PipelineOps {
          |  SELECT * FROM filt
          |  QUALIFY doc_id = min(doc_id) OVER (PARTITION BY fp)),
          |ptok AS (
-         |  SELECT doc_id, unnest(list_filter(string_split_regex(
-         |    trim(lower(text)), '[^\\p{L}\\p{N}]+'), x -> x <> '')) AS word
+         |  SELECT doc_id, unnest(${Tokenizers.Alnum.sql}) AS word
          |  FROM documents),
          |dt AS (SELECT doc_id, word, count(*) AS tf FROM ptok GROUP BY 1, 2),
          |lm AS (SELECT word, sum(tf)::BIGINT AS cf FROM dt GROUP BY 1),
@@ -1103,7 +1098,7 @@ object PipelineOps {
     // occurrence order, same K-window coverage test
     "substring_dedup" ->
       s"""WITH d AS (SELECT doc_id,
-         |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS t
+         |    ${Tokenizers.Whitespace.listSql} AS t
          |  FROM documents),
          |d2 AS (SELECT doc_id, t,
          |    list_transform(t,
@@ -1161,7 +1156,7 @@ object PipelineOps {
     "pack_sequences" ->
       s"""WITH t AS (
          |  SELECT doc_id, source,
-         |    len(string_split_regex(trim(text), '\\s+'))::BIGINT AS n_tokens
+         |    ${Tokenizers.Whitespace.countSql}::BIGINT AS n_tokens
          |  FROM documents),
          |c AS (
          |  SELECT *, CAST(coalesce(sum(n_tokens) OVER (
@@ -1178,10 +1173,7 @@ object PipelineOps {
     "corpus_build" ->
       s"""WITH lex(lex_lang, lex_word) AS (VALUES $lexValues),
          |tok AS (
-         |  SELECT doc_id, w AS word FROM (
-         |    SELECT doc_id,
-         |      unnest(string_split_regex(lower(text), '[^\\p{L}]+')) AS w
-         |    FROM documents) WHERE w <> ''),
+         |  SELECT doc_id, unnest(${Tokenizers.Letters.sql}) AS word FROM documents),
          |scores AS (
          |  SELECT doc_id, lex_lang, count(*) AS score
          |  FROM tok JOIN lex ON word = lex_word GROUP BY 1, 2),
@@ -1193,11 +1185,10 @@ object PipelineOps {
          |  WHERE rn = 1 AND lex_lang = 'en'),
          |q AS (
          |  SELECT doc_id,
-         |    len(list_filter(string_split_regex(trim(lower(text)),
-         |      '[^\\p{L}\\p{N}]+'), x -> x <> '')) AS n_tokens,
+         |    len(${Tokenizers.Alnum.sql}) AS n_tokens,
          |    round((length(text) - length(regexp_replace(text,
          |      '[a-zA-Z]', '', 'g')))::DOUBLE / length(text), 6) AS alpha_ratio,
-         |    sha256(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS fp
+         |    sha256(${Tokenizers.ExactKey.sql}) AS fp
          |  FROM documents),
          |filt AS (
          |  SELECT q.doc_id, lang, n_tokens, fp
@@ -1261,10 +1252,9 @@ object PipelineOps {
          |  < coalesce(keep_per_mille, $mixDefault)
          |ORDER BY doc_id""".stripMargin,
     "ngram_counts" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^\p{L}]+'),
-        |      x -> x <> '') AS t
+        |    ${Tokenizers.Letters.sql} AS t
         |  FROM documents),
         |sh AS (
         |  SELECT doc_id, array_to_string(t[i:i+1], ' ') AS bigram
@@ -1360,8 +1350,7 @@ object PipelineOps {
   private lazy val decontamNgramsSql: String =
     s"""WITH toks AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[^\\p{L}]+'),
-       |      x -> x <> '') AS t
+       |    ${Tokenizers.Letters.sql} AS t
        |  FROM documents),
        |sh AS (
        |  SELECT DISTINCT doc_id,

@@ -940,7 +940,7 @@ object Retrieval {
     * can never split the two build paths. */
   private def positionalPostingsOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-        posexplode(filter(TextOps.tokens(col("text")),
+        posexplode(filter(Tokenizers.Letters.column(col("text")),
           w => length(w) > 0)).as(Seq("pos", "word")))
       .withColumn("wb",
         pmod(Dedup.md5Hash60(col("word")), lit(WordBuckets.toLong)))
@@ -1125,10 +1125,8 @@ object Retrieval {
                              idfParts: (String, String)): String = {
     val (idfCte, idfJoin) = idfParts
     s"""toks AS (
-       |  SELECT doc_id, w AS word FROM (
-       |    SELECT doc_id, unnest(string_split_regex(lower(text),
-       |      '[^\\p{L}]+')) AS w
-       |    FROM documents$corpusWhere) WHERE w <> ''),
+       |  SELECT doc_id, unnest(${Tokenizers.Letters.sql}) AS word
+       |  FROM documents$corpusWhere),
        |dt AS (SELECT doc_id, word, count(*)::BIGINT AS tf
        |       FROM toks GROUP BY 1, 2),
        |dl AS (SELECT doc_id, count(*)::BIGINT AS len
@@ -1190,8 +1188,7 @@ object Retrieval {
     val vals = PhraseQueries.map { case (id, w1, w2) =>
       s"($id, '$w1', '$w2')" }.mkString(", ")
     s"""WITH toks AS (
-       |  SELECT doc_id, list_filter(string_split_regex(lower(text),
-       |    '[^\\p{L}]+'), x -> x <> '') AS t
+       |  SELECT doc_id, ${Tokenizers.Letters.sql} AS t
        |  FROM documents),
        |pp AS (
        |  SELECT doc_id, i AS pos, t[i] AS word

@@ -34,15 +34,6 @@ object TextAnalysis {
     lexicon.toDF("lex_lang", "lex_word")
   }
 
-  /** Lowercased letter/digit tokens of a text column, with the EMPTY
-    * edge tokens REMOVED: split() on a doc that starts or ends with
-    * punctuation yields "" at the edges (trim only strips whitespace),
-    * and counting those diverges from every oracle's
-    * `list_filter(x <> '')`. The `+` quantifier makes interior empties
-    * impossible, so array_remove exactly mirrors the filter. */
-  private[graft] def cleanTokens(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    array_remove(split(trim(lower(text)), "[^\\p{L}\\p{N}]+"), "")
-
   /** Language ID: tokenize → broadcast-join the lexicon → per-doc
     * argmax(score) with deterministic tie-break. Docs with no lexicon
     * hit → 'unknown'. The lexicon join is a broadcast hash join (the
@@ -75,7 +66,7 @@ object TextAnalysis {
     * stopword ratio, alpha-char ratio — the classic cheap corpus
     * filters. Pure column math; one narrow pass. */
   def textQuality(s: SparkSession, d: String): DataFrame = {
-    val toks = cleanTokens(col("text"))
+    val toks = Tokenizers.Alnum.column(col("text"))
     Tables.documents(s, d)
       .withColumn("toks", toks)
       .select(
@@ -145,9 +136,8 @@ object TextAnalysis {
     Tables.documents(s, d)
       .select(
         col("doc_id"),
-        size(split(trim(col("text")), "\\s+")).as("ws_tokens"),
-        size(regexp_extract_all(lower(col("text")),
-          lit("[\\p{L}]+|[0-9]+|[^\\p{L}0-9\\s]"), lit(0))).as("bpe_ish_tokens"),
+        Tokenizers.Whitespace.count(col("text")).as("ws_tokens"),
+        Tokenizers.BpeIsh.count(col("text")).as("bpe_ish_tokens"),
         ceil(length(col("text")) / lit(4.0)).cast("long").as("budget_tokens"))
       .transform(Present.sortedUnbounded(_, col("doc_id")))
 
@@ -170,7 +160,7 @@ object TextAnalysis {
   def heavyHitters(s: SparkSession, d: String, k: Int = HhK): DataFrame = {
     import s.implicits._
     val toks = Tables.documents(s, d)
-      .select(explode(cleanTokens(col("text"))).as("word"))
+      .select(explode(Tokenizers.Alnum.column(col("text"))).as("word"))
     val exact = toks.groupBy("word").agg(count(lit(1)).as("cnt"))
     val tot = exact.agg(sum("cnt").as("n"))
     val summary = toks.as[String]
@@ -216,7 +206,7 @@ object TextAnalysis {
   def cmsHeavyHitters(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val toks = Tables.documents(s, d)
-      .select(explode(cleanTokens(col("text"))).as("word"))
+      .select(explode(Tokenizers.Alnum.column(col("text"))).as("word"))
     val exact = toks.groupBy("word").agg(count(lit(1)).as("cnt"))
     val tot = exact.agg(sum("cnt").as("n"))
     val sketch = toks
@@ -245,7 +235,7 @@ object TextAnalysis {
     Tables.documents(s, d)
       .select(
         col("doc_id"),
-        sha2(regexp_replace(trim(lower(col("text"))), "\\s+", " "), 256)
+        sha2(Tokenizers.ExactKey.column(col("text")), 256)
           .as("fp"))
       .transform(Present.sortedUnbounded(_, col("doc_id")))
 
@@ -644,9 +634,7 @@ object TextAnalysis {
       .map { case (w, f) => s"('$w', $f::BIGINT)" }.mkString(", ")
     val head =
       s"""WITH tok AS (
-         |  SELECT w AS word FROM (
-         |    SELECT unnest(string_split_regex(lower(text), '[^\\p{L}]+')) AS w
-         |    FROM documents) WHERE w <> ''),
+         |  SELECT unnest(${Tokenizers.Letters.sql}) AS word FROM documents),
          |wf0 AS (SELECT word, CAST(count(*) AS BIGINT) AS freq
          |  FROM tok GROUP BY word),
          |wf AS (
@@ -682,10 +670,8 @@ object TextAnalysis {
     * s&#36;BpeMergeRounds. Both BPE oracles select from it. */
   private lazy val bpeCtes: String = {
     val head =
-      """WITH tok AS (
-        |  SELECT w AS word FROM (
-        |    SELECT unnest(string_split_regex(lower(text), '[^\p{L}]+')) AS w
-        |    FROM documents) WHERE w <> ''),
+      s"""WITH tok AS (
+        |  SELECT unnest(${Tokenizers.Letters.sql}) AS word FROM documents),
         |wf AS (SELECT word, CAST(count(*) AS BIGINT) AS freq FROM tok GROUP BY word),
         |s0 AS (
         |  SELECT word, freq, i AS pos, substring(word, i, 1) AS sym
@@ -711,10 +697,7 @@ object TextAnalysis {
        |nsub AS (SELECT word, CAST(count(*) AS BIGINT) AS n_sub
        |  FROM s$BpeMergeRounds GROUP BY word),
        |dtok AS (
-       |  SELECT doc_id, w AS word FROM (
-       |    SELECT doc_id,
-       |      unnest(string_split_regex(lower(text), '[^\\p{L}]+')) AS w
-       |    FROM documents) WHERE w <> ''),
+       |  SELECT doc_id, unnest(${Tokenizers.Letters.sql}) AS word FROM documents),
        |docw AS (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS n_occ
        |  FROM dtok GROUP BY 1, 2)
        |SELECT doc_id,
@@ -783,7 +766,7 @@ object TextAnalysis {
   private def lmRoot(s: SparkSession, d: String): String =
     lmStores.root(d) { out =>
       Tables.documents(s, d)
-        .select(explode(cleanTokens(col("text"))).as("word"))
+        .select(explode(Tokenizers.Alnum.column(col("text"))).as("word"))
         .groupBy("word").agg(count(lit(1)).as("cf"))
         .write.mode("overwrite").parquet(out)
       // the (cf -> nllq) integer sidecar: ln evaluated HERE, once per
@@ -834,7 +817,7 @@ object TextAnalysis {
     // parallelizes (1.19 → 1.81 s) — the spread pays only where the
     // map work dominates (bigram: 840 ms, repetition_stats: 530 ms)
     val dt = docs
-      .select(col("doc_id"), explode(cleanTokens(col("text"))).as("word"))
+      .select(col("doc_id"), explode(Tokenizers.Alnum.column(col("text"))).as("word"))
       .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
     val scored = dt.join(lm, "word").join(broadcast(nq), "cf")
       .groupBy("doc_id")
@@ -947,7 +930,7 @@ object TextAnalysis {
     * (guide §2.4: the shuffle was never fundamental). Pair order and
     * multiplicity are identical by construction. */
   private[graft] def bigramEvents(docs: DataFrame): DataFrame = {
-    val toks = cleanTokens(col("text"))
+    val toks = Tokenizers.Alnum.column(col("text"))
     val n1 = greatest(size(toks) - 1, lit(0))
     docs
       .select(col("doc_id"),
@@ -1093,7 +1076,7 @@ object TextAnalysis {
   private[graft] def qcFeaturize(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), col("text"),
-        cleanTokens(col("text")).as("toks"))
+        Tokenizers.Alnum.column(col("text")).as("toks"))
       // raw counts once per row: Spark does not reliably CSE
       // higher-order-function calls across select expressions, and the
       // stopword filter / distinct would otherwise run twice each per
@@ -1321,8 +1304,7 @@ object TextAnalysis {
   private def qcFeatSql: String =
     s"""t AS MATERIALIZED (
        |  SELECT doc_id, length(text) AS n_chars,
-       |    list_filter(string_split_regex(trim(lower(text)),
-       |      '[^\\p{L}\\p{N}]+'), x -> x <> '') AS toks
+       |    ${Tokenizers.Alnum.sql} AS toks
        |  FROM documents),
        |f AS MATERIALIZED (
        |  SELECT doc_id,
@@ -1446,9 +1428,8 @@ object TextAnalysis {
     // the generator's tokenize + slide replayed with the established
     // regex twin; 1-based list indexing, i up to len-2
     "ngrams_udtf" ->
-      """WITH toks AS (
-        |  SELECT list_filter(string_split_regex(lower(text),
-        |    '[^\p{L}\p{N}]+'), x -> x <> '') AS t
+      s"""WITH toks AS (
+        |  SELECT ${Tokenizers.Alnum.sql} AS t
         |  FROM documents),
         |tri AS (
         |  SELECT t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS ngram
@@ -1463,8 +1444,7 @@ object TextAnalysis {
     "perplexity_filter" -> {
       val (nqCte, nqJoin, nqExpr) = nllqOracleParts
       s"""WITH toks AS (
-         |  SELECT doc_id, unnest(list_filter(string_split_regex(
-         |    trim(lower(text)), '[^\\p{L}\\p{N}]+'), x -> x <> '')) AS word
+         |  SELECT doc_id, unnest(${Tokenizers.Alnum.sql}) AS word
          |  FROM documents),
          |dt AS (SELECT doc_id, word, count(*) AS tf FROM toks GROUP BY 1, 2),
          |lm AS (SELECT word, sum(tf)::BIGINT AS cf FROM dt GROUP BY 1),
@@ -1505,8 +1485,7 @@ object TextAnalysis {
             "* 10000000)::BIGINT")
       }
       s"""WITH toks AS (
-         |  SELECT doc_id, list_filter(string_split_regex(
-         |    trim(lower(text)), '[^\\p{L}\\p{N}]+'), x -> x <> '') AS t
+         |  SELECT doc_id, ${Tokenizers.Alnum.sql} AS t
          |  FROM documents),
          |allw AS (SELECT doc_id, unnest(t) AS word FROM toks),
          |lmw AS (SELECT word, count(*)::BIGINT AS cf FROM allw GROUP BY 1),
@@ -1558,9 +1537,7 @@ object TextAnalysis {
     // sum(BIGINT) widens to HUGEINT, so both totals are CAST back
     "vocab_build" ->
       s"""WITH tok AS (
-         |  SELECT w AS word FROM (
-         |    SELECT unnest(string_split_regex(lower(text), '[^\\p{L}]+')) AS w
-         |    FROM documents) WHERE w <> ''),
+         |  SELECT unnest(${Tokenizers.Letters.sql}) AS word FROM documents),
          |counts AS (SELECT word, count(*) AS cnt FROM tok GROUP BY word),
          |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM counts),
          |ranked AS (
@@ -1576,14 +1553,13 @@ object TextAnalysis {
          |WHERE cum_before < total * $VocabCoverage
          |ORDER BY rank""".stripMargin,
     "repetition_stats" ->
-      """WITH lines AS (
+      s"""WITH lines AS (
         |  SELECT doc_id,
         |    list_filter(string_split(text, chr(10)), x -> trim(x) <> '') AS ls
         |  FROM documents),
         |toks AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^\p{L}]+'),
-        |      x -> x <> '') AS t
+        |    ${Tokenizers.Letters.sql} AS t
         |  FROM documents),
         |sh AS (
         |  SELECT doc_id, array_to_string(t[i:i+1], ' ') AS bigram
@@ -1606,9 +1582,7 @@ object TextAnalysis {
     "lang_id" ->
       s"""WITH lex(lex_lang, lex_word) AS (VALUES $lexValues),
          |tok AS (
-         |  SELECT doc_id, w AS word FROM (
-         |    SELECT doc_id, unnest(string_split_regex(lower(text), '[^\\p{L}]+')) AS w
-         |    FROM documents) WHERE w <> ''),
+         |  SELECT doc_id, unnest(${Tokenizers.Letters.sql}) AS word FROM documents),
          |scores AS (
          |  SELECT doc_id, lex_lang, count(*) AS score
          |  FROM tok JOIN lex ON word = lex_word
@@ -1626,8 +1600,7 @@ object TextAnalysis {
          |ORDER BY d.doc_id""".stripMargin,
     "heavy_hitters" ->
       s"""WITH toks AS (
-         |  SELECT unnest(list_filter(string_split_regex(trim(lower(text)),
-         |    '[^\\p{L}\\p{N}]+'), x -> x <> '')) AS word
+         |  SELECT unnest(${Tokenizers.Alnum.sql}) AS word
          |  FROM documents),
          |exact AS (SELECT word, count(*) AS cnt FROM toks GROUP BY 1),
          |tot AS (SELECT sum(cnt) AS n FROM exact)
@@ -1637,8 +1610,7 @@ object TextAnalysis {
          |ORDER BY word""".stripMargin,
     "cms_heavy_hitters" ->
       s"""WITH toks AS (
-         |  SELECT unnest(list_filter(string_split_regex(trim(lower(text)),
-         |    '[^\\p{L}\\p{N}]+'), x -> x <> '')) AS word
+         |  SELECT unnest(${Tokenizers.Alnum.sql}) AS word
          |  FROM documents),
          |exact AS (SELECT word, count(*) AS cnt FROM toks GROUP BY 1),
          |tot AS (SELECT sum(cnt) AS n FROM exact)
@@ -1649,8 +1621,7 @@ object TextAnalysis {
     "text_quality" ->
       s"""WITH t AS (
          |  SELECT doc_id, text,
-         |    list_filter(string_split_regex(trim(lower(text)),
-         |      '[^\\p{L}\\p{N}]+'), x -> x <> '') AS toks
+         |    ${Tokenizers.Alnum.sql} AS toks
          |  FROM documents)
          |SELECT doc_id,
          |  length(text) AS n_chars,
@@ -1663,14 +1634,14 @@ object TextAnalysis {
          |    / len(toks), 6) AS stopword_ratio
          |FROM t ORDER BY doc_id""".stripMargin,
     "token_counts" ->
-      """SELECT doc_id,
-        |  len(string_split_regex(trim(text), '\s+')) AS ws_tokens,
-        |  len(regexp_extract_all(lower(text), '[\p{L}]+|[0-9]+|[^\p{L}0-9\s]')) AS bpe_ish_tokens,
+      s"""SELECT doc_id,
+        |  ${Tokenizers.Whitespace.countSql} AS ws_tokens,
+        |  ${Tokenizers.BpeIsh.countSql} AS bpe_ish_tokens,
         |  CAST(ceil(length(text) / 4.0) AS BIGINT) AS budget_tokens
         |FROM documents ORDER BY doc_id""".stripMargin,
     "fingerprint" ->
-      """SELECT doc_id,
-        |  sha256(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp
+      s"""SELECT doc_id,
+        |  sha256(${Tokenizers.ExactKey.sql}) AS fp
         |FROM documents ORDER BY doc_id""".stripMargin,
     "winnow_fingerprints" ->
       s"""WITH d AS (SELECT doc_id, lower(text) AS t FROM documents),
@@ -1688,10 +1659,8 @@ object TextAnalysis {
          |WHERE pos <= n_grams - ${WinnowW - 1}
          |ORDER BY doc_id, fp""".stripMargin,
     "tfidf" ->
-      """WITH tok AS (
-        |  SELECT doc_id, w AS word FROM (
-        |    SELECT doc_id, unnest(string_split_regex(lower(text), '[^\p{L}]+')) AS w
-        |    FROM documents) WHERE w <> ''),
+      s"""WITH tok AS (
+        |  SELECT doc_id, unnest(${Tokenizers.Letters.sql}) AS word FROM documents),
         |tf AS (SELECT doc_id, word, count(*) AS tf FROM tok GROUP BY 1, 2),
         |df AS (SELECT word, count(*) AS df FROM tf GROUP BY 1),
         |n AS (SELECT count(*) AS n_docs FROM documents),

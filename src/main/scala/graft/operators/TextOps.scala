@@ -1,15 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Reference-parity text operators.
   *
-  * Tokenization semantics follow the reference's WordCount /
-  * InvertedIndex mappers (reference `Worker/Worker.py:10-26`): lowercase
-  * the text, treat every non-letter as a separator, and keep maximal
-  * runs of Unicode letters (Python `str.isalpha()` ≙ `\p{L}`). The `1`
+  * Tokenization is [[Tokenizers.Letters]], the reference's WordCount /
+  * InvertedIndex rule (reference `Worker/Worker.py:10-26`). The `1`
   * literal the reference emits per token is subsumed by `count(*)`,
   * which Catalyst executes as partial+final HashAggregate — the
   * map-side combine the reference lacks (`Master/Master.py:130-163`
@@ -24,15 +22,11 @@ import graft.Tables
   */
 object TextOps {
 
-  /** Maximal runs of Unicode letters, lowercased (reference
-    * `Worker/Worker.py:11-12,21-22`). */
-  def tokens(text: Column): Column = split(lower(text), "[^\\p{L}]+")
-
   /** documents(doc_id, text) → (doc_id, word) one row per token
     * occurrence. */
   def tokenize(df: DataFrame, idCol: String = "doc_id",
                textCol: String = "text"): DataFrame =
-    df.select(col(idCol), explode(tokens(col(textCol))).as("word"))
+    df.select(col(idCol), explode(Tokenizers.Letters.column(col(textCol))).as("word"))
       .filter(length(col("word")) > 0)
 
   /** A2: corpus word frequency — (word, cnt). */
@@ -57,12 +51,8 @@ object TextOps {
       .agg(map_from_entries(collect_list(struct(col("doc_id"), col("cnt"))))
         .as("postings"))
 
-  // [^\p{L}]+ in RE2 (DuckDB) and Java regex select the same Unicode
-  // letter class; documents text is ASCII so lower() agrees too.
   private val tokSql =
-    """SELECT doc_id, w AS word FROM (
-      |  SELECT doc_id, unnest(string_split_regex(lower(text), '[^\p{L}]+')) AS w
-      |  FROM documents) WHERE w <> ''""".stripMargin
+    s"SELECT doc_id, unnest(${Tokenizers.Letters.sql}) AS word FROM documents"
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "wordcount"      -> ((s, d) => wordcount(s, d)),

@@ -39,6 +39,28 @@ class RunMapRedSpec extends SparkSpec {
     assert(out == Map("to" -> 2L, "be" -> 2L, "or" -> 1L, "not" -> 1L))
   }
 
+  test("run_mapred dir and file stages follow a dataset regenerated in place") {
+    import spark.implicits._
+    val ds = SparkSpec.tempDir("mr_regen").toString
+    def write(docs: (Long, String)*): Unit =
+      docs.toDF("doc_id", "text").write.mode("overwrite")
+        .parquet(s"$ds/documents.parquet")
+    def counts(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      df.collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+    def both(): Seq[Map[String, Long]] = Seq(
+      counts(MapReduce.runMapRedDir(spark, ds)),
+      counts(MapReduce.runMapRedFile(spark, ds)))
+    try {
+      write(1L -> "Alpha beta", 2L -> "beta gamma", 3L -> "delta")
+      val first = Map("alpha" -> 1L, "beta" -> 2L, "gamma" -> 1L, "delta" -> 1L)
+      assert(both() == Seq(first, first))
+      // same path, new text, fewer ids: doc_2/doc_3 must not linger
+      write(1L -> "omega Omega")
+      assert(both() == Seq(Map("omega" -> 2L), Map("omega" -> 2L)))
+    } finally Seq("graft_mrdir", "graft_mrfile").foreach(h =>
+      Scratch.deleteTree(MapReduce.stageDir(h, ds)))
+  }
+
   test("unknown function name fails like the reference's KeyError") {
     intercept[NoSuchElementException] {
       MapReduce.runMapRed(spark, "x", "NoSuchMapper", "WordCountReducer")

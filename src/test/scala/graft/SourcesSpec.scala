@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class SourcesSpec extends SparkSpec {
 
   private def scalaTokens(text: String): Seq[String] =
-    text.toLowerCase.split("[^\\p{L}]+").filter(_.nonEmpty).toSeq
+    text.toLowerCase(java.util.Locale.ROOT).split("[^\\p{L}]+").filter(_.nonEmpty).toSeq
 
   test("S1 directory scan: one row per file, provenance kept") {
     val df = TextSources.directory(spark, s"$refData/TestInverted")

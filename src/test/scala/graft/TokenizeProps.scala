@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.MapReduce
+import graft.operators.Tokenizers
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -22,7 +22,7 @@ class TokenizeProps extends AnyFunSuite {
 
   test("tokens are nonempty, lowercase, letters-only") {
     samples(anyText).foreach { t =>
-      MapReduce.tokenizeText(t).foreach { tok =>
+      Tokenizers.Letters.words(t).foreach { tok =>
         assert(tok.nonEmpty, s"input: $t")
         assert(tok == tok.toLowerCase, s"input: $t")
         assert(tok.forall(_.isLetter), s"input: $t")
@@ -33,23 +33,23 @@ class TokenizeProps extends AnyFunSuite {
   test("token mass is preserved under document concatenation") {
     val xs = samples(anyText)
     xs.zip(xs.reverse).foreach { case (a, b) =>
-      val joined = MapReduce.tokenizeText(a + " " + b)
-      val parts = MapReduce.tokenizeText(a) ++ MapReduce.tokenizeText(b)
+      val joined = Tokenizers.Letters.words(a + " " + b)
+      val parts = Tokenizers.Letters.words(a) ++ Tokenizers.Letters.words(b)
       assert(joined.sorted == parts.sorted, s"inputs: '$a' + '$b'")
     }
   }
 
   test("tokenization is idempotent on its own output") {
     samples(anyText).foreach { t =>
-      val once = MapReduce.tokenizeText(t)
-      assert(MapReduce.tokenizeText(once.mkString(" ")) == once, s"input: $t")
+      val once = Tokenizers.Letters.words(t)
+      assert(Tokenizers.Letters.words(once.mkString(" ")) == once, s"input: $t")
     }
   }
 
   test("non-letter characters never survive") {
     val junk = Gen.listOf(Gen.oneOf('0', '9', '!', ' ', '_', '%')).map(_.mkString)
     samples(junk).foreach { t =>
-      assert(MapReduce.tokenizeText(t).isEmpty, s"input: $t")
+      assert(Tokenizers.Letters.words(t).isEmpty, s"input: $t")
     }
   }
 }

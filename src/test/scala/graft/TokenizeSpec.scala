@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{MapReduce, TextOps}
+import graft.operators.{MapReduce, TextOps, Tokenizers}
+import org.apache.spark.sql.Column
 
 /** Tokenization parity with the reference semantics: Python
   * str.isalpha() keeps any Unicode letter; every non-letter splits;
@@ -8,13 +9,17 @@ import graft.operators.{MapReduce, TextOps}
 class TokenizeSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
 
-  private def tok(text: String): Seq[String] = {
+  /** The tokens a Column form yields for one text, as exploded. */
+  private def tokens(text: String, rule: Column => Column): Seq[String] = {
     import spark.implicits._
     Seq((1L, text)).toDF("doc_id", "text")
-      .select(explode(TextOps.tokens(col("text"))).as("w"))
-      .filter(length(col("w")) > 0)
+      .select(explode(rule(col("text"))).as("w"))
       .as[String].collect().toSeq
   }
+
+  // the letters Column form is the raw split: drop its edge empties
+  private def tok(text: String): Seq[String] =
+    tokens(text, Tokenizers.Letters.column).filter(_.nonEmpty)
 
   test("ascii words, punctuation, digits split") {
     assert(tok("Hello, world! 123 foo_bar") == Seq("hello", "world", "foo", "bar"))
@@ -29,7 +34,7 @@ class TokenizeSpec extends SparkSpec {
     assert(tok("123 !!! __") == Seq())
   }
 
-  test("cleanTokens drops empty edge tokens on punctuation-edged docs") {
+  test("alnum tokens drop empty edge tokens on punctuation-edged docs") {
     import spark.implicits._
     // "!hello, world." raw-splits to ["", "hello", "world", ""] —
     // the count the oracles compute via list_filter(x <> '') is 2
@@ -42,7 +47,7 @@ class TokenizeSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val got = fixtures
       .select(col("doc_id"),
-        graft.operators.TextAnalysis.cleanTokens(col("text")).as("toks"))
+        Tokenizers.Alnum.column(col("text")).as("toks"))
       .select(col("doc_id"), size(col("toks")).as("n"),
         array_contains(col("toks"), "").as("has_empty"))
       .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getBoolean(2)))).toMap
@@ -56,15 +61,22 @@ class TokenizeSpec extends SparkSpec {
   test("column tokenizer agrees with the Scala mapper twin") {
     val texts = Seq("Hello, World!", "a-b-c 1d2e3", "Águas de Março", "")
     texts.foreach { t =>
-      assert(tok(t) == MapReduce.tokenizeText(t), s"mismatch on '$t'")
+      assert(tok(t) == Tokenizers.Letters.words(t), s"mismatch on '$t'")
+    }
+    // alnum drops its empties inside the Column form: no filter here
+    def alnum(t: String) = tokens(t, Tokenizers.Alnum.column)
+    (texts ++ Seq("!hello, world.", "a1b2 3c")).foreach { t =>
+      assert(alnum(t) == Tokenizers.Alnum.words(t), s"alnum mismatch on '$t'")
     }
     // a tr-TR default locale lowercases "I" to dotless "ı": the twin
     // must stay locale-independent, like the column form and the oracle
     val saved = java.util.Locale.getDefault
     try {
       java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
-      assert(tok("TITLE") == MapReduce.tokenizeText("TITLE"),
+      assert(tok("TITLE") == Tokenizers.Letters.words("TITLE"),
         "mismatch on 'TITLE' under tr-TR")
+      assert(alnum("TITLE") == Tokenizers.Alnum.words("TITLE"),
+        "alnum mismatch on 'TITLE' under tr-TR")
     } finally java.util.Locale.setDefault(saved)
   }
 
