@@ -20,6 +20,12 @@ object GraftSession {
     env.flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ > 0)
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
+  /** n_reducers of the session `s` runs on — its
+    * `spark.sql.shuffle.partitions`, which is also the n_mappers of
+    * `TextSources.file`'s chunking. */
+  def nReducers(s: SparkSession): Int =
+    s.conf.get("spark.sql.shuffle.partitions").toInt
+
   /** The tables directory of a main that takes no sf argument. */
   def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

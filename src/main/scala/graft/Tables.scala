@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver-generated star schema
   * (TESTDATA.md). Every query takes the scale-factor directory as a
@@ -18,8 +19,60 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A table read under the stored [[schema]]: Spark still lists the
+    * files on every read, but starts no footer-inference job. */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schema(spark, path)).parquet(path)
+  }
+
+  /** The session confs parquet schema inference depends on: one file
+    * infers differently under each setting (`events` flips the first). */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** (path, inference confs) → (listing fingerprint, schema). */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[Option[String]]), (String, StructType)]()
+
+  /** The schema Spark infers for the parquet data at `path` — the one
+    * schema cache. Inferred once per path and inference confs, and
+    * again whenever the file listing (path:len:mtime of every file,
+    * taken through the Hadoop `FileSystem`, so every scheme works)
+    * changes: a table regenerated in place is read with its new
+    * schema. Metadata only — no data is cached. */
+  def schema(s: SparkSession, path: String): StructType = {
+    val key = (path, inferenceConfs.map(s.conf.getOption))
+    val fp = listing(s, path)
+    val hit = schemas.get(key)
+    if (hit != null && hit._1 == fp) hit._2
+    else {
+      val inferred = s.read.parquet(path).schema
+      schemas.put(key, (fp, inferred))
+      inferred
+    }
+  }
+
+  /** path:len:mtime of every file under `path` ("" when it does not
+    * exist; the inference then raises Spark's own missing-path error). */
+  private def listing(s: SparkSession, path: String): String = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) ""
+    else {
+      val files = fs.listFiles(root, true)
+      val out = new StringBuilder
+      while (files.hasNext) {
+        val f = files.next()
+        out ++= s"${f.getPath}:${f.getLen}:${f.getModificationTime};"
+      }
+      out.toString
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** The reference's *extensibility* surface re-expressed on Spark: a
   * name-keyed registry of (mapper, reducer) pairs over a corpus
@@ -10,19 +10,26 @@ import graft.Tables
   * `run_mapred`, `Master/Master.py:61-94`).
   *
   * Mapper `(text, docname) → pairs` is the reference's UDTF contract
-  * (`Worker/Worker.py:10-26`) → a typed `flatMap`. Reducer semantics
-  * come in two strengths:
+  * (`Worker/Worker.py:10-26`). Both reducer strengths run Hadoop's own
+  * dataflow: map tasks, one hash shuffle into exactly n_reducers =
+  * `spark.sql.shuffle.partitions` partitions (`GraftSession`'s form of
+  * `init_cluster(n_mappers, n_reducers)`), and n reduce tasks. The
+  * shuffle is `repartition(n, _1)`, which AQE never coalesces, so the
+  * reduce runs in n tasks, not one.
   *
-  *   - [[reduceByKey]] — associative+commutative combine. Runs as
-  *     `groupByKey(...).reduceGroups(...)`, which Spark executes with
-  *     map-side partial aggregation: only one combined value per key
-  *     per partition crosses the shuffle. This is the 100 TB path, and
-  *     an upgrade over the reference, which ships every (word, 1) pair
-  *     through RPC+JSON (`Master/Master.py:130-163` has no combiner).
+  *   - [[reduceByKey]] — associative+commutative fold. The map task
+  *     folds its own pairs per key (Dean & Ghemawat's Combiner, §4.3),
+  *     so only partial folds cross the shuffle; the reduce task sorts
+  *     its partition through Spark's external sorter and folds each
+  *     key run in one pass (Hadoop's sort-merge reduce). No side holds
+  *     an unbounded map. This is the 100 TB path, and an upgrade over
+  *     the reference, which ships every (word, 1) pair through
+  *     RPC+JSON (`Master/Master.py:130-163` has no combiner).
   *   - [[groupReduce]] — the reference's literal black-box contract:
   *     reducer sees all values of a key (`Worker/Worker.py:94-97`).
-  *     Runs as `mapGroups`; documented skew hazard: a hot key's values
-  *     are materialized per-group, so prefer reduceByKey whenever the
+  *     Runs as a sort + `flatMapGroups` on the key column; documented
+  *     skew hazard: every pair crosses the shuffle and a hot key's
+  *     values land in one task, so prefer reduceByKey whenever the
   *     function is a fold.
   *
   * The concrete jobs (wordcount_mr / inverted_index_mr) reproduce the
@@ -41,33 +48,71 @@ object MapReduce {
       .as[(String, String)]
   }
 
-  /** Associative-combine MapReduce: the scalable reducer contract. */
-  def reduceByKey[V](s: SparkSession,
-                     input: Dataset[(String, String)],
-                     mapper: (String, String) => IterableOnce[(String, V)],
-                     reducer: (V, V) => V)
-                    (implicit ev: org.apache.spark.sql.Encoder[(String, V)])
-      : Dataset[(String, V)] = {
-    import s.implicits._
-    input.flatMap { case (doc, text) => mapper(text, doc) }(ev)
-      .groupByKey(_._1)
-      .reduceGroups((a: (String, V), b: (String, V)) =>
-        (a._1, reducer(a._2, b._2)))
-      .map(_._2)(ev)
+  /** Distinct keys a map task folds in memory before it emits its
+    * partial folds and starts over: bounds the combiner's heap at any
+    * input size. */
+  val CombineKeys = 65536
+
+  /** Associative-combine MapReduce: the scalable reducer contract.
+    * In-mapper combining, `n_reducers` hash partitions, then a
+    * sort-merge fold of each key run. */
+  def reduceByKey[K, V](s: SparkSession,
+                        input: Dataset[(String, String)],
+                        mapper: (String, String) => IterableOnce[(K, V)],
+                        reducer: (V, V) => V)
+                       (implicit ev: Encoder[(K, V)]): Dataset[(K, V)] =
+    input
+      .mapPartitions(it => combine(
+        it.flatMap { case (doc, text) => mapper(text, doc) }, reducer))(ev)
+      .repartition(GraftSession.nReducers(s), col("_1"))
+      .sortWithinPartitions("_1")
+      .mapPartitions(it => foldRuns(it.buffered, reducer))(ev)
+
+  /** Folds `pairs` per key in a hash map, emitting the partial folds
+    * each time the map holds [[CombineKeys]] keys, and at the end. */
+  private def combine[K, V](pairs: Iterator[(K, V)], f: (V, V) => V)
+      : Iterator[(K, V)] = {
+    import scala.jdk.CollectionConverters._
+    Iterator.continually {
+      val acc = new java.util.HashMap[K, V]()
+      while (pairs.hasNext && acc.size < CombineKeys) {
+        val (k, v) = pairs.next()
+        acc.merge(k, v, (a, b) => f(a, b))
+      }
+      acc
+    }.takeWhile(!_.isEmpty)
+      .flatMap(_.entrySet.iterator.asScala.map(e => e.getKey -> e.getValue))
   }
+
+  /** One pass over a key-sorted partition: each run of equal keys
+    * folds to one pair. */
+  private def foldRuns[K, V](sorted: BufferedIterator[(K, V)], f: (V, V) => V)
+      : Iterator[(K, V)] =
+    new Iterator[(K, V)] {
+      def hasNext: Boolean = sorted.hasNext
+      def next(): (K, V) = {
+        val (k, first) = sorted.next()
+        var v = first
+        while (sorted.hasNext && sorted.head._1 == k) v = f(v, sorted.next()._2)
+        (k, v)
+      }
+    }
 
   /** Black-box grouped reducer: the reference's literal contract.
     * All values for a key are presented to the reducer as one
     * iterator (single pass, not materialized unless the reducer
-    * does). */
+    * does). Grouped on the key column after `n_reducers` hash
+    * partitions, so the shuffle carries each pair once and the
+    * reduce runs in n tasks. */
   def groupReduce[O](s: SparkSession,
                      input: Dataset[(String, String)],
                      mapper: (String, String) => IterableOnce[(String, String)],
                      reducer: (String, Iterator[String]) => IterableOnce[O])
-                    (implicit oe: org.apache.spark.sql.Encoder[O]): Dataset[O] = {
+                    (implicit oe: Encoder[O]): Dataset[O] = {
     import s.implicits._
     input.flatMap { case (doc, text) => mapper(text, doc) }
-      .groupByKey(_._1)
+      .repartition(GraftSession.nReducers(s), col("_1"))
+      .groupBy(col("_1")).as[String, (String, String)]
       .flatMapGroups((k: String, it: Iterator[(String, String)]) =>
         reducer(k, it.map(_._2)))(oe)
   }
@@ -77,7 +122,7 @@ object MapReduce {
     * reducer sums. */
   def wordcountMr(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    reduceByKey[Long](s, corpus(s, dir),
+    reduceByKey[String, Long](s, corpus(s, dir),
       (text, _) => Tokenizers.Letters.words(text).map(_ -> 1L),
       _ + _)
       .toDF("word", "cnt")
@@ -114,17 +159,28 @@ object MapReduce {
       ((text, doc) => Tokenizers.Letters.words(text).map(_ -> doc)),
   )
 
-  val reducers: Map[String, (String, Iterator[String]) => Seq[(String, String, Long)]] = Map(
+  /** A registry reducer turns a word's values into flat
+    * (word, doc, value) rows, in one of two strengths. */
+  sealed trait Reducer
+
+  /** A fold: each value becomes a (doc, partial) under its word, and
+    * the partials of one (word, doc) combine with the associative,
+    * commutative `op` — runs through [[reduceByKey]] with map-side
+    * combining. */
+  final case class Fold(lift: String => (String, Long), op: (Long, Long) => Long)
+      extends Reducer
+
+  /** The black-box contract: sees every value of a word at once — runs
+    * through [[groupReduce]]. */
+  final case class BlackBox(
+      reduce: (String, Iterator[String]) => IterableOnce[(String, String, Long)])
+      extends Reducer
+
+  val reducers: Map[String, Reducer] = Map(
     // {word: count} (Worker/Worker.py:45-49) as (word, "", count)
-    "WordCountReducer" ->
-      ((word, vs) => Seq((word, "", vs.size.toLong))),
+    "WordCountReducer" -> Fold(_ => ("", 1L), _ + _),
     // {word: {file: count}} (Worker/Worker.py:30-41) as (word, file, count)
-    "InvertedIndexReducer" ->
-      ((word, docs) => {
-        val counts = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-        docs.foreach(d => counts.update(d, counts.getOrElse(d, 0L) + 1L))
-        counts.iterator.map { case (d, c) => (word, d, c) }.toSeq
-      }),
+    "InvertedIndexReducer" -> Fold(doc => (doc, 1L), _ + _),
   )
 
   /** `run_mapred` equivalent: resolve the input like the reference's
@@ -132,14 +188,31 @@ object MapReduce {
     * the flat result relation (word, doc, value). A user of the
     * reference calls this exactly as they called the XML-RPC entry. */
   def runMapRed(s: SparkSession, inputPath: String,
-                mapFnName: String, reduceFnName: String): DataFrame = {
+                mapFnName: String, reduceFnName: String): DataFrame =
+    mapRed(s, inputPath, mappers(mapFnName), reducers(reduceFnName))
+
+  /** [[runMapRed]] on resolved functions: a [[Fold]] runs through
+    * [[reduceByKey]], a [[BlackBox]] through [[groupReduce]]. */
+  private[graft] def mapRed(s: SparkSession, inputPath: String,
+      mapper: (String, String) => Seq[(String, String)],
+      reducer: Reducer): DataFrame = {
     import s.implicits._
     val input = graft.sources.TextSources.resolve(s, inputPath)
       .select(col("file"), col("text")).as[(String, String)]
-    groupReduce[(String, String, Long)](s, input,
-      mappers(mapFnName), reducers(reduceFnName))
-      .toDF("word", "doc", "value")
-      .transform(Present.sortedUnbounded(_, col("word"), col("doc")))
+    val flat = reducer match {
+      case Fold(lift, op) =>
+        reduceByKey[(String, String), Long](s, input,
+          (text, doc) => mapper(text, doc).iterator.map { case (w, v) =>
+            val (d, x) = lift(v)
+            ((w, d), x)
+          }, op)
+          .select(col("_1._1").as("word"), col("_1._2").as("doc"),
+            col("_2").as("value"))
+      case BlackBox(reduce) =>
+        groupReduce[(String, String, Long)](s, input, mapper, reduce)
+          .toDF("word", "doc", "value")
+    }
+    flat.transform(Present.sortedUnbounded(_, col("word"), col("doc")))
   }
 
   /** Stage `documents` as a one-file-per-doc text directory (once per
@@ -231,7 +304,7 @@ object MapReduce {
   }
 
   /** S2 dispatch under the driver gate: a single FILE path resolves
-    * through the line-granularity + repartition(nChunks) branch; the
+    * through the line-granularity + repartition(n_mappers) branch; the
     * word counts must equal the directory form's (same corpus text,
     * tokenizer splits on the newlines anyway). */
   def runMapRedFile(s: SparkSession, dir: String): DataFrame =

@@ -68,10 +68,12 @@ object TextSources {
   }
 
   /** S2 — single file at line granularity + repartition(n) ≙ the
-    * reference's n_mappers chunking (`Master/Master.py:216-254`). */
-  def file(s: SparkSession, path: String, nChunks: Int = 4): DataFrame =
+    * reference's n_mappers chunking (`Master/Master.py:216-254`), with
+    * n the session's n_reducers: n_mappers = n_reducers, as
+    * `init_cluster` sets them. */
+  def file(s: SparkSession, path: String): DataFrame =
     s.read.text(path)
-      .repartition(nChunks)
+      .repartition(graft.GraftSession.nReducers(s))
       .select(
         element_at(split(input_file_name(), "/"), -1).as("file"),
         col("value").as("text"))

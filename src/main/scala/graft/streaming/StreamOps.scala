@@ -23,19 +23,14 @@ object StreamOps {
 
   /** readStream needs an explicit schema; hard-coding one broke when
     * the testdata regenerated with a different physical `ts` type, so
-    * probe it from the actual file footers with a one-off batch read
-    * (driver-side metadata only — no data scan). `Tables.normalizeTs`
-    * then maps whatever physical layout arrived onto TimestampType,
-    * failing loud on an unknown one. */
-  private val probedSchemas =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
+    * take it from the actual file footers through `Tables.schema`
+    * (driver-side metadata only, inferred again when the files change —
+    * the 4 join gates each build TWO event streams over the same dir).
+    * `Tables.normalizeTs` then maps whatever physical layout arrived
+    * onto TimestampType, failing loud on an unknown one. */
   private[graft] def probeRawSchema(s: SparkSession, srcDir: String): StructType = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // footer metadata is immutable per staged dir — probe once per
-    // JVM; the 4 join gates each build TWO event streams, so the
-    // driver otherwise re-reads the same footers ~20× per bench pass
-    probedSchemas.computeIfAbsent(srcDir, d => s.read.parquet(d).schema)
+    Tables.schema(s, srcDir)
   }
 
   /** Streaming source over the events parquet data. The file stream
@@ -65,10 +60,10 @@ object StreamOps {
 
   /** Streaming source over the documents parquet — the ingest feed
     * the trained quality filter serves on. No ts column, so no
-    * normalization; schema probed from the footers like events. */
+    * normalization; schema from `Tables.schema` like events. */
   private[graft] def docsStream(s: SparkSession, dir: String): DataFrame = {
     val src = streamableDir(dir, "documents.parquet")
-    s.readStream.schema(s.read.parquet(src).schema).parquet(src)
+    s.readStream.schema(Tables.schema(s, src)).parquet(src)
   }
 
   /** The raw-schema events file stream over an explicit directory.

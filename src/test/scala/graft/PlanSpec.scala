@@ -43,6 +43,34 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("HashAggregate"), p)
   }
 
+  /** The MapReduce surface runs Hadoop's dataflow: map tasks, one
+    * hash shuffle into exactly n_reducers partitions on the key, and
+    * the reduce (a sort-merge fold or a grouped black box) right
+    * above it. */
+  test("MapReduce surface: one n_reducers hash exchange below each reduce") {
+    val n = spark.conf.get("spark.sql.shuffle.partitions")
+    val exchange = s"""Exchange hashpartitioning\\(_1#\\d+, $n\\), REPARTITION_BY_NUM""".r
+    for (q <- Seq("wordcount_mr", "inverted_index_mr", "run_mapred_dir",
+        "run_mapred_file", "run_mapred_inline")) {
+      val lines = executed(graft.operators.MapReduce.queries(q)(spark, sfDir))
+        .linesIterator.toIndexedSeq
+      val at = lines.indices.filter(i => exchange.findFirstIn(lines(i)).isDefined)
+      assert(at.size == 1, s"$q:\n${lines.mkString("\n")}")
+      val above = lines.take(at.head).reverse
+      assert(above.head.contains("Sort [_1#"), s"$q:\n${lines.mkString("\n")}")
+      assert(above.take(3).exists(l => l.contains("MapPartitions") ||
+        l.contains("MapGroups")), s"$q:\n${lines.mkString("\n")}")
+    }
+  }
+
+  test("MapReduce folds: no ObjectHashAggregate, no appended key column") {
+    for (q <- Seq("wordcount_mr", "run_mapred_file")) {
+      val p = executed(graft.operators.MapReduce.queries(q)(spark, sfDir))
+      assert(!p.contains("ObjectHashAggregate"), p)
+      assert(!p.contains("AppendColumnsWithObject"), p)
+    }
+  }
+
   test("topk: orderBy+limit plans as TakeOrderedAndProject (no global sort)") {
     val p = executed(RelOps.topkOrders(spark, sfDir))
     assert(p.contains("TakeOrderedAndProject"), p)
