@@ -92,7 +92,7 @@ object ScaleRehearsal {
                   batches: Int = 5): String = {
     // `batches` shapes the staged files, so it is part of the key
     val dir = stagedDir("events", sfDir, mult, s"_b$batches")
-    val fp = sourceFingerprint(Seq(java.nio.file.Paths.get(sfDir, "events.parquet")))
+    val fp = sourceFingerprint(s, s"$sfDir/events.parquet")
     stage(dir, fp) {
       val base = Tables.events(s, sfDir)
       // shard k = base with keys offset by k × range, generated as ONE
@@ -133,9 +133,8 @@ object ScaleRehearsal {
     val dir = stagedDir("facts", sfDir, mult)
     // dims are symlinks (always-fresh); the copied facts are the
     // staleness risk, so they are what the fingerprint covers
-    val fp = sourceFingerprint(Seq(
-      java.nio.file.Paths.get(sfDir, "lineitem.parquet"),
-      java.nio.file.Paths.get(sfDir, "orders.parquet")))
+    val fp = sourceFingerprint(s,
+      s"$sfDir/lineitem.parquet", s"$sfDir/orders.parquet")
     stage(dir, fp) {
       val okRange = 150000L
       val li = (0 until mult).map { k =>
@@ -341,8 +340,7 @@ object ScaleRehearsal {
     * pack_sequences coordinates replicate exactly). */
   def stageDocs(s: SparkSession, sfDir: String, mult: Int): String = {
     val dir = stagedDir("docs", sfDir, mult)
-    val fp = sourceFingerprint(Seq(
-      java.nio.file.Paths.get(sfDir, "documents.parquet")))
+    val fp = sourceFingerprint(s, s"$sfDir/documents.parquet")
     stage(dir, fp) {
       val base = Tables.documents(s, sfDir)
       // append batches of ≤ 50 shards (the stageEmbeddings rationale):
@@ -387,8 +385,7 @@ object ScaleRehearsal {
     * no RNG), engine-free, rehearsal-only. */
   def stageDocsZipf(s: SparkSession, sfDir: String, mult: Int): String = {
     val dir = stagedDir("docszipf", sfDir, mult)
-    val fp = sourceFingerprint(Seq(
-      java.nio.file.Paths.get(sfDir, "documents.parquet"))) + s"|v$ZipfVocab"
+    val fp = sourceFingerprint(s, s"$sfDir/documents.parquet") + s"|v$ZipfVocab"
     stage(dir, fp) {
       val nBase = Tables.documents(s, sfDir).count()
       val ndocs = nBase * mult
@@ -485,8 +482,7 @@ object ScaleRehearsal {
     * release pipelines actually face. */
   def stageGovDocs(s: SparkSession, sfDir: String, mult: Int): String = {
     val dir = stagedDir("govdocs", sfDir, mult)
-    val fp = sourceFingerprint(Seq(
-      java.nio.file.Paths.get(sfDir, "documents.parquet")))
+    val fp = sourceFingerprint(s, s"$sfDir/documents.parquet")
     stage(dir, fp) {
       val base = Tables.documents(s, sfDir)
       val out = dir.resolve("documents.parquet").toString
@@ -517,8 +513,7 @@ object ScaleRehearsal {
     * sf0.1 (749→750 / 746 released cells). */
   def stageCustomers(s: SparkSession, sfDir: String, mult: Int): String = {
     val dir = stagedDir("cust", sfDir, mult)
-    val fp = sourceFingerprint(Seq(
-      java.nio.file.Paths.get(sfDir, "customer.parquet")))
+    val fp = sourceFingerprint(s, s"$sfDir/customer.parquet")
     stage(dir, fp) {
       val base = Tables.customer(s, sfDir)
       val out = dir.resolve("customer.parquet").toString
@@ -629,8 +624,7 @@ object ScaleRehearsal {
     // runs, and shards ≥ 64 changed content when the sign-pattern
     // family replaced the all-dims flip
     val dir = stagedDir("emb", sfDir, mult, "_t2")
-    val fp = sourceFingerprint(Seq(
-      java.nio.file.Paths.get(sfDir, "embeddings.parquet")))
+    val fp = sourceFingerprint(s, s"$sfDir/embeddings.parquet")
     stage(dir, fp) {
       val base = Tables.embeddings(s, sfDir)
       val out = dir.resolve("embeddings.parquet").toString
@@ -959,8 +953,7 @@ object ScaleRehearsal {
     // invalidation when the staging recipe changes (fingerprints
     // cover the SOURCE table, deliberately not the staging code)
     val dir = stagedDir("mediadocs3", sfDir, mult)
-    val fp = sourceFingerprint(Seq(
-      java.nio.file.Paths.get(sfDir, "documents.parquet")))
+    val fp = sourceFingerprint(s, s"$sfDir/documents.parquet")
     stage(dir, fp) {
       // prime AND above the 1 M id range the sibling stagers reserve —
       // a sub-range stride would collide shard k's ids with shard k+1's
@@ -1381,8 +1374,7 @@ object ScaleRehearsal {
     s.sparkContext.addSparkListener(listener)
     mults.foreach { m =>
       val staged = stageFacts(s, sfDir, m)
-      val srcFp = sourceFingerprint(Seq(
-        java.nio.file.Paths.get(staged, "lineitem.parquet")))
+      val srcFp = sourceFingerprint(s, s"$staged/lineitem.parquet")
       // date-grain clustering column, as in StorageOps.sortedLayout:
       // parquet never evaluates NTZ-timestamp predicates against
       // row-group stats, so an NTZ layout would measure zero skipping

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
+import org.apache.hadoop.fs.{LocatedFileStatus, Path => HPath}
+import org.apache.spark.sql.SparkSession
 
 /** Single configuration point for every scratch/staging root the
   * engine writes (stream sinks + checkpoints, connected-components
@@ -99,18 +101,25 @@ object Scratch {
     dir.toString
   }
 
-  /** name:size:mtime of every regular file under the source paths —
-    * cheap, metadata-only, and any regeneration of a dataset moves at
-    * least one mtime. */
-  def sourceFingerprint(srcs: Seq[Path]): String = {
-    import scala.jdk.CollectionConverters._
-    srcs.flatMap { p =>
-      val st = Files.walk(p)
-      try st.iterator().asScala.filter(Files.isRegularFile(_)).toList
-      finally st.close()
-    }.sortBy(_.toString).map { f =>
-      s"${f.getFileName}:${Files.size(f)}:" +
-        s"${Files.getLastModifiedTime(f).toMillis}"
+  /** name:size:mtime of every file under the source paths, listed
+    * through the Hadoop `FileSystem`, so every scheme (`file:`,
+    * `hdfs:`, `s3a:`) works — cheap, metadata-only, and any
+    * regeneration of a dataset moves at least one mtime. A missing
+    * path lists nothing. The one fingerprint rule: stages and the
+    * `Tables` schema store both key on it. */
+  def sourceFingerprint(s: SparkSession, srcs: String*): String = {
+    val conf = s.sparkContext.hadoopConfiguration
+    srcs.flatMap { src =>
+      val root = new HPath(src)
+      val fs = root.getFileSystem(conf)
+      val files = Seq.newBuilder[LocatedFileStatus]
+      if (fs.exists(root)) {
+        val it = fs.listFiles(root, true)
+        while (it.hasNext) files += it.next()
+      }
+      files.result()
+    }.sortBy(_.getPath.toString).map { f =>
+      s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"
     }.mkString("|")
   }
 

@@ -35,42 +35,25 @@ object Tables {
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.parquet.mergeSchema")
 
-  /** (path, inference confs) → (listing fingerprint, schema). */
+  /** (path, inference confs) → (source fingerprint, schema). */
   private val schemas = new java.util.concurrent.ConcurrentHashMap[
     (String, Seq[Option[String]]), (String, StructType)]()
 
   /** The schema Spark infers for the parquet data at `path` — the one
     * schema cache. Inferred once per path and inference confs, and
-    * again whenever the file listing (path:len:mtime of every file,
-    * taken through the Hadoop `FileSystem`, so every scheme works)
-    * changes: a table regenerated in place is read with its new
-    * schema. Metadata only — no data is cached. */
+    * again whenever `Scratch.sourceFingerprint` of the path changes:
+    * a table regenerated in place is read with its new schema. A
+    * missing path infers every time, so Spark raises its own error.
+    * Metadata only — no data is cached. */
   def schema(s: SparkSession, path: String): StructType = {
     val key = (path, inferenceConfs.map(s.conf.getOption))
-    val fp = listing(s, path)
+    val fp = Scratch.sourceFingerprint(s, path)
     val hit = schemas.get(key)
     if (hit != null && hit._1 == fp) hit._2
     else {
       val inferred = s.read.parquet(path).schema
       schemas.put(key, (fp, inferred))
       inferred
-    }
-  }
-
-  /** path:len:mtime of every file under `path` ("" when it does not
-    * exist; the inference then raises Spark's own missing-path error). */
-  private def listing(s: SparkSession, path: String): String = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) ""
-    else {
-      val files = fs.listFiles(root, true)
-      val out = new StringBuilder
-      while (files.hasNext) {
-        val f = files.next()
-        out ++= s"${f.getPath}:${f.getLen}:${f.getModificationTime};"
-      }
-      out.toString
     }
   }
 

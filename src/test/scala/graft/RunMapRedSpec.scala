@@ -62,7 +62,8 @@ class RunMapRedSpec extends SparkSpec {
   }
 
   /** The registry's reducers written as black boxes over every value
-    * of a word: the reference form each `Fold` must reproduce. */
+    * of a word: the reference form each registry reducer, `Fold` or
+    * `BlackBox`, must reproduce. */
   private val blackBoxTwins
       : Map[String, (String, Iterator[String]) => Seq[(String, String, Long)]] = Map(
     "WordCountReducer" -> ((word, vs) => Seq((word, "", vs.size.toLong))),
