@@ -159,27 +159,13 @@ object ScaleRehearsal {
   final case class BatchRow(batchId: Long, inputRows: Long, wallMs: Long,
                             stateRows: Long, stateBytes: Long)
 
-  /** Drain `stream` through a noop sink with AvailableNow and return
-    * the per-batch progress trail. Shuffle partitions pinned low for
-    * the local run (state stores instantiate per partition — pure
-    * overhead at test scale; see StreamOps). */
+  /** Drain `stream` through a noop sink ([[graft.streaming.StreamOps
+    * .drain]], with RocksDB row tracking on: the trail's state rows are
+    * the evidence) and return the per-batch progress trail. */
   def drainWithProgress(s: SparkSession, stream: DataFrame, mode: String,
                         tag: String): Seq[BatchRow] = {
-    import org.apache.spark.sql.streaming.Trigger
-    val ckpt = freshDir("ckpt", tag)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "8")
-    val q = graft.streaming.StreamOps.withRocksDb(s, trackRows = true) {
-      try stream.writeStream
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .format("noop")
-        .start()
-      finally s.conf.set(key, prev)
-    }
-    q.awaitTermination()
+    val q = graft.streaming.StreamOps.drain(s, stream, mode,
+      freshDir("ckpt", tag), trackRows = true)(_.format("noop"))
     val rows = q.recentProgress.toSeq.map { p =>
       val st = Option(p.stateOperators).map(_.toSeq).getOrElse(Nil)
       BatchRow(p.batchId, p.numInputRows,
@@ -205,8 +191,8 @@ object ScaleRehearsal {
 
   def runStreaming(s: SparkSession, sfDir: String, mults: Seq[Int]): Unit = {
     import graft.streaming.StreamOps
-    // Drains run on the RocksDB state store (StreamOps.withRocksDb,
-    // applied inside drainWithProgress) — the provider a 50×+
+    // Drains run on the RocksDB state store (StreamOps.drain, called
+    // by drainWithProgress) — the provider a 50×+
     // deployment actually runs (state spills to executor disk instead
     // of living on-heap), same as every gated drain. NOTE:
     // memoryUsedBytes is provider-specific (RocksDB reports its own

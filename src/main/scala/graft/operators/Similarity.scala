@@ -894,15 +894,6 @@ object Similarity {
   def semDedup(s: SparkSession, d: String): DataFrame =
     semDedupFrom(s, ivfStore(s, d)._1)
 
-  /** [[semDedup]] with an explicit cell count — the scale knob. The
-    * gated query reads the landed K=[[IvfClusters]] index; a real
-    * deployment grows K with the corpus so cells stay ~constant-sized
-    * and the Σ|cell|² pair work stays linear in N (the rehearsal
-    * measures exactly this; a FIXED K under a growing corpus is the
-    * quadratic trap). */
-  def semDedupScaled(s: SparkSession, d: String, k: Int): DataFrame =
-    semDedupFrom(s, ivfBuild(s, d, k)._1)
-
   private[graft] def semDedupFrom(s: SparkSession, idx: DataFrame): DataFrame = {
     // alias self-join over the IDENTICAL subtree: once the relation
     // outgrows the broadcast threshold the cid SMJ shuffles each

@@ -2343,8 +2343,6 @@ object StorageOps {
         round(sum("l_quantity"), 2).as("sum_qty"))
       .transform(Present.sorted(_, col("ship_month")))
 
-  def zorderLayoutDir(d: String): String = stageDir("zorder_lineitem", d)
-
   /** Parquet BLOOM-FILTER data skipping — the point-lookup story the
     * range layouts can't tell: [[sortedLayout]]/[[zorderLayout]] skip
     * via row-group min/max, which only works when the data is

@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.Tables
 
@@ -108,98 +110,104 @@ object StreamOps {
     * streams hold the path for the whole drain. */
   private def freshDir(tag: String, kind: String): String = {
     val p = graft.Scratch.processScoped("graft_stream_out", kind, tag)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-    }
+    graft.Scratch.wipeDir(p)
     java.nio.file.Files.createDirectories(p)
     p.toString
   }
 
-  /** Local-run state sizing: every stateful op instantiates one state
-    * store per shuffle partition per micro-batch, so the session-wide
-    * 32 partitions mean 32 RocksDB instances of fixed overhead for a
-    * 33-row result. The gated runners drop to 4 for the duration of
-    * the drain — a LOCAL cost knob only; on a real cluster the state
-    * op wants one partition per core like any other shuffle. */
-  private def withLowShufflePartitions[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "4")
-    try body finally s.conf.set(key, prev)
-  }
+  /** Shuffle partitions every drain runs at. Each stateful operator
+    * opens one state store per shuffle partition per micro-batch, so
+    * the session's one-partition-per-core count means that many
+    * RocksDB instances of fixed overhead for a result of a few dozen
+    * rows. A LOCAL cost knob only: on a real cluster the state op
+    * wants one partition per core like any other shuffle. */
+  private val DrainPartitions = 4
 
-  /** Every gated drain runs on the RocksDB state store provider — the
-    * provider a production deployment runs: state lives off-heap and
-    * spills to executor disk, so state size is bounded by disk rather
-    * than executor memory, and transformWithState requires it
-    * outright. Scoped to the drain and restored in finally, so batch
-    * work on the shared session never silently inherits it. (The
-    * default HDFS-backed provider held every state row on-heap —
-    * exactly what breaks first on an unbounded feed at scale.) */
-  /** `trackRows = true` keeps RocksDB's per-commit row counting so
-    * `numRowsTotal` stays exact — ScaleRehearsal's drains pass it
-    * because their state-row trails ARE the evidence; the gated
-    * drains don't read the metric and skip the counting cost. */
-  private[graft] def withRocksDb[T](s: SparkSession,
-                                    trackRows: Boolean = false)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val ckey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val tkey = "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
-    val prev = s.conf.getOption(key)
-    val prevC = s.conf.getOption(ckey)
-    val prevT = s.conf.getOption(tkey)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // CHANGELOG checkpointing: per-batch commits upload the delta log
-    // instead of snapshotting SST files (snapshots continue in the
-    // background) — the production knob for large-state low-latency
-    // commits, already rehearsed as the deepstate twin; a checkpoint
-    // FORMAT choice only, state content identical (the hash gates
-    // replay unchanged). Measured on the five heaviest gated drains:
-    // 18.05 → 15.05 s for the set (−17%), every query faster.
-    s.conf.set(ckey, "true")
-    // row-count tracking off where nothing reads it: each put/delete
-    // otherwise pays a read-before-write just to maintain the
-    // numRowsTotal metric (the documented write-heavy trade). Gated
-    // drains: 15.6 → 14.4 s for the five heaviest (−8%).
-    s.conf.set(tkey, trackRows.toString)
-    def restore(k: String, p: Option[String]): Unit = p match {
-      case Some(v) => s.conf.set(k, v)
-      case None    => s.conf.unset(k)
-    }
-    try body finally {
-      restore(key, prev); restore(ckey, prevC); restore(tkey, prevT)
-    }
-  }
-
-  /** Run a streaming aggregation TO COMPLETION and land it as a
-    * batch-readable table: foreachBatch in complete mode overwrites a
-    * parquet sink each micro-batch (the production shape: stream →
-    * foreachBatch → table), Trigger.AvailableNow drains the source and
-    * terminates, and the final table is the full aggregate. On a
-    * static source the watermark never drops anything, so
-    * stream ≡ batch ≡ oracle. */
-  private def runToTable(s: SparkSession, stream: => DataFrame,
-                         tag: String, sortCols: Column*): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val sink = freshDir(tag, "sink")
-    val ckpt = freshDir(tag, "ckpt")
-    withLowShufflePartitions(s) { withRocksDb(s) {
-      val q = stream.writeStream
-        .outputMode("complete")
+  /** Run `stream` TO COMPLETION: Trigger.AvailableNow drains the
+    * source and terminates, and the finished query is returned (its
+    * `recentProgress` is the per-batch trail). `sink` picks where the
+    * rows go (`foreachBatch`, `format`, ...). The one place a stream is
+    * started; every drain scopes the same confs to itself, restored in
+    * finally so batch work on the shared session never inherits them:
+    *  - shuffle partitions at [[DrainPartitions]];
+    *  - the RocksDB state store provider — the provider a production
+    *    deployment runs: state lives off-heap and spills to executor
+    *    disk, so state size is bounded by disk rather than executor
+    *    memory, and transformWithState requires it outright (the
+    *    default HDFS-backed provider holds every state row on-heap —
+    *    exactly what breaks first on an unbounded feed at scale);
+    *  - CHANGELOG checkpointing: per-batch commits upload the delta log
+    *    instead of snapshotting SST files (snapshots continue in the
+    *    background) — a checkpoint FORMAT choice only, state content
+    *    identical. Measured on the five heaviest gated drains:
+    *    18.05 → 15.05 s for the set (−17%), every query faster;
+    *  - RocksDB row-count tracking only when `trackRows`: each
+    *    put/delete otherwise pays a read-before-write just to keep
+    *    `numRowsTotal` exact. ScaleRehearsal's trails read that metric;
+    *    the gated drains don't, and skipping it measured 15.6 → 14.4 s
+    *    on the five heaviest (−8%). */
+  private[graft] def drain(s: SparkSession, stream: => DataFrame, mode: String,
+                           ckpt: String, trackRows: Boolean = false)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val scoped = Seq(
+      "spark.sql.shuffle.partitions" -> DrainPartitions.toString,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> trackRows.toString)
+    val set = s.conf.getAll
+    val prev = scoped.map { case (k, _) => k -> set.get(k) }
+    scoped.foreach { case (k, v) => s.conf.set(k, v) }
+    try {
+      val q = sink(stream.writeStream
+        .outputMode(mode)
         .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(sink)
-        }
-        .start()
+        .trigger(Trigger.AvailableNow())).start()
       q.awaitTermination()
-    } }
-    s.read.parquet(sink)
-      .transform(graft.operators.Present.sortedUnbounded(_, sortCols: _*))
+      q
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
+  /** Run a stream TO COMPLETION and land it as a batch-readable
+    * parquet table (the production shape: stream → foreachBatch →
+    * table), presented sorted on `keyCols`. How a micro-batch lands
+    * follows `mode`:
+    *  - complete: each batch is the full aggregate and overwrites the
+    *    sink. On a static source the watermark never drops anything,
+    *    so stream ≡ batch ≡ oracle;
+    *  - append (joins, dedup, stateless maps — rows emitted
+    *    incrementally): batch 0 resets the sink, later batches append,
+    *    and the union of batches is the result;
+    *  - update (custom-state streams — fMGWS / transformWithState emit
+    *    ONE row per touched key per micro-batch): each batch's rows are
+    *    tagged with the batch id, and the read side keeps, per key,
+    *    only the row from the LAST batch that touched it — the complete
+    *    state. Correct for any number of micro-batches (a multi-file
+    *    source, or maxFilesPerTrigger, yields several batches whose raw
+    *    union would hold duplicate keys); `keyCols` are then the state
+    *    key as well. */
+  private[graft] def runToTable(s: SparkSession, stream: => DataFrame,
+                                tag: String, mode: String,
+                                keyCols: Column*): DataFrame = {
+    val sink = freshDir(tag, "sink")
+    drain(s, stream, mode, freshDir(tag, "ckpt")) {
+      _.foreachBatch { (batch: DataFrame, id: Long) =>
+        val rows = if (mode == "update") batch.withColumn("__batch", lit(id)) else batch
+        rows.write.mode(if (mode == "complete" || id == 0) "overwrite" else "append")
+          .parquet(sink)
+      }
+    }
+    val landed = s.read.parquet(sink)
+    val rows =
+      if (mode != "update") landed
+      else landed
+        .withColumn("__rn", row_number().over(Window
+          .partitionBy(keyCols: _*).orderBy(col("__batch").desc)))
+        .filter(col("__rn") === 1).drop("__rn", "__batch")
+    rows.transform(graft.operators.Present.sortedUnbounded(_, keyCols: _*))
   }
 
   /** `windowedCounts` driver-gated: the proof that the streaming
@@ -207,7 +215,7 @@ object StreamOps {
     * answer batch Spark does. Registered under the SAME oracle SQL as
     * `events_window`. */
   def eventsWindowStream(s: SparkSession, dir: String): DataFrame =
-    runToTable(s, windowedCounts(s, dir), "events_window_stream",
+    runToTable(s, windowedCounts(s, dir), "events_window_stream", "complete",
       col("window_start"), col("event_type"))
 
   /** Sliding-window twin of `ChangeOps.slidingWindows` over the
@@ -231,32 +239,7 @@ object StreamOps {
     * just with batch Spark. */
   def slidingWindowsStream(s: SparkSession, dir: String): DataFrame =
     runToTable(s, slidingWindowsStreamOf(eventsStream(s, dir)),
-      "sliding_windows_stream", col("w_start"), col("event_type"))
-
-  /** Append-mode twin of runToTable for streams whose sinks emit rows
-    * incrementally (joins, dedup) rather than replacing an aggregate:
-    * each micro-batch appends to the parquet sink (batch 0 resets it),
-    * AvailableNow drains the source, and the union of batches is the
-    * result. */
-  private def runToTableAppend(s: SparkSession, stream: => DataFrame,
-                               tag: String, sortCols: Column*): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val sink = freshDir(tag, "sink")
-    val ckpt = freshDir(tag, "ckpt")
-    withLowShufflePartitions(s) { withRocksDb(s) {
-      val q = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.write.mode(if (id == 0) "overwrite" else "append").parquet(sink)
-        }
-        .start()
-      q.awaitTermination()
-    } }
-    s.read.parquet(sink)
-      .transform(graft.operators.Present.sortedUnbounded(_, sortCols: _*))
-  }
+      "sliding_windows_stream", "complete", col("w_start"), col("event_type"))
 
   /** Stream-stream inner join: click→purchase attribution within a
     * 60-minute window, the canonical funnel query. Both sides carry
@@ -292,7 +275,7 @@ object StreamOps {
     * ts-disordered files, the equality would need a watermark delay
     * larger than the data's max disorder. */
   def clickPurchaseJoinGated(s: SparkSession, dir: String): DataFrame =
-    runToTableAppend(s, clickPurchaseJoin(s, dir), "stream_join",
+    runToTable(s, clickPurchaseJoin(s, dir), "stream_join", "append",
       col("click_id"), col("purchase_id"))
 
   /** LEFT OUTER stream-stream join — the funnel query that also
@@ -341,8 +324,8 @@ object StreamOps {
     * (strict, dodging the eviction boundary), where stream ≡ batch
     * LEFT JOIN exactly. */
   def clickPurchaseLeftGated(s: SparkSession, dir: String): DataFrame = {
-    val landed = runToTableAppend(s, clickPurchaseLeftJoin(s, dir),
-      "stream_left_join", col("click_id"), col("purchase_id"))
+    val landed = runToTable(s, clickPurchaseLeftJoin(s, dir),
+      "stream_left_join", "append", col("click_id"), col("purchase_id"))
     val ev = Tables.events(s, dir)
     // both side maxima in ONE conditional aggregate (one scan, one
     // job) instead of two filtered agg subtrees cross-joined
@@ -401,8 +384,8 @@ object StreamOps {
     * Landed table and DuckDB oracle restrict identically, where
     * stream ≡ batch FULL JOIN exactly. */
   def clickPurchaseFullGated(s: SparkSession, dir: String): DataFrame = {
-    val landed = runToTableAppend(s, clickPurchaseFullJoin(s, dir),
-      "stream_full_join", col("click_id"), col("purchase_id"))
+    val landed = runToTable(s, clickPurchaseFullJoin(s, dir),
+      "stream_full_join", "append", col("click_id"), col("purchase_id"))
     val ev = Tables.events(s, dir)
     // one conditional aggregate for both side maxima (see
     // clickPurchaseLeftGated)
@@ -474,9 +457,9 @@ object StreamOps {
     * dodging the eviction boundary), where the chained stream ≡ the
     * batch join + window aggregate exactly. */
   def joinWindowGated(s: SparkSession, dir: String): DataFrame = {
-    val landed = runToTableAppend(s,
+    val landed = runToTable(s,
       joinWindowOf(eventsStream(s, dir), eventsStream(s, dir)),
-      "stream_join_window", col("w_start"), col("cohort"))
+      "stream_join_window", "append", col("w_start"), col("cohort"))
     val ev = Tables.events(s, dir)
     // one conditional aggregate for both side maxima (see
     // clickPurchaseLeftGated)
@@ -510,7 +493,7 @@ object StreamOps {
   /** `dedupStream` driver-gated: equals DISTINCT on the drained
     * source. */
   def dedupStreamGated(s: SparkSession, dir: String): DataFrame =
-    runToTableAppend(s, dedupStream(s, dir), "dedup_stream",
+    runToTable(s, dedupStream(s, dir), "dedup_stream", "append",
       col("user_id"), col("event_type"))
 
   /** Streaming apply of the TRAINED quality filter — the production
@@ -533,8 +516,8 @@ object StreamOps {
 
   /** `qualityFilterStream` driver-gated: equals the batch apply. */
   def qualityFilterStreamGated(s: SparkSession, dir: String): DataFrame =
-    runToTableAppend(s, qualityFilterStream(s, dir),
-      "quality_filter_stream", col("doc_id"))
+    runToTable(s, qualityFilterStream(s, dir),
+      "quality_filter_stream", "append", col("doc_id"))
 
   /** Stream-static enrichment: the streaming fact side joins a
     * broadcast dimension snapshot inside each micro-batch — the
@@ -554,58 +537,23 @@ object StreamOps {
 
   /** `streamEnrich` driver-gated against the DuckDB batch join. */
   def streamEnrichGated(s: SparkSession, dir: String): DataFrame =
-    runToTableAppend(s, streamEnrich(s, dir), "stream_enrich",
+    runToTable(s, streamEnrich(s, dir), "stream_enrich", "append",
       col("event_id"))
-
-  /** Update-mode twin of runToTable for custom-state streams (fMGWS /
-    * transformWithState emit ONE row per touched key per micro-batch —
-    * that contract is what makes the sink compactable). Each batch's
-    * rows land in the sink tagged with the batch id; the read side
-    * keeps, per key, only the row from the LAST batch that touched it
-    * — the complete state. Correct for any number of micro-batches,
-    * not just a one-shot AvailableNow drain (a multi-file source, or
-    * maxFilesPerTrigger, yields several batches whose raw union would
-    * hold duplicate keys). `keyCols` are both the state key and the
-    * presentation sort. */
-  private[graft] def runToTableUpdate(s: SparkSession, stream: => DataFrame,
-                                      tag: String, keyCols: Column*): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val sink = freshDir(tag, "sink")
-    val ckpt = freshDir(tag, "ckpt")
-    withLowShufflePartitions(s) { withRocksDb(s) {
-      val q = stream.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.withColumn("__batch", lit(id))
-            .write.mode(if (id == 0) "overwrite" else "append").parquet(sink)
-        }
-        .start()
-      q.awaitTermination()
-    } }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols: _*).orderBy(col("__batch").desc)
-    s.read.parquet(sink)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn", "__batch")
-      .transform(graft.operators.Present.sortedUnbounded(_, keyCols: _*))
-  }
 
   /** [[runningUserTotals]] driver-gated: the flatMapGroupsWithState
     * black-box state machine must agree with DuckDB's GROUP BY on the
     * drained source — the custom-state analogue of the reference's
     * opaque reducer, under the same hash oracle as everything else. */
   def runningUserTotalsGated(s: SparkSession, dir: String): DataFrame =
-    runToTableUpdate(s, runningUserTotals(s, dir), "running_totals",
+    runToTable(s, runningUserTotals(s, dir), "running_totals", "update",
       col("user_id"))
 
   /** [[userMaxStream]] driver-gated (transformWithState + RocksDB
     * ValueState cells vs the batch max). RocksDB — which this op
-    * REQUIRES — now comes from the shared drain wrapper
-    * ([[withRocksDb]]), like every other stateful gate. */
+    * REQUIRES — comes from [[drain]], like every other stateful
+    * gate. */
   def userMaxStreamGated(s: SparkSession, dir: String): DataFrame =
-    runToTableUpdate(s, userMaxStream(s, dir), "user_max_stream",
+    runToTable(s, userMaxStream(s, dir), "user_max_stream", "update",
       col("user_id"))
 
   /** Streaming MERGE (CDC upsert sink): each micro-batch's latest
@@ -633,19 +581,8 @@ object StreamOps {
     * the file-source offsets in `ckpt` make the second drain process
     * only the unseen files. */
   private[graft] def runUpsert(s: SparkSession, source: DataFrame,
-                               snap: String, ckpt: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    withLowShufflePartitions(s) { withRocksDb(s) {
-      val q = source
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(upsertBatch(snap) _)
-        .start()
-      q.awaitTermination()
-    } }
-  }
+                               snap: String, ckpt: String): Unit =
+    drain(s, source, "append", ckpt)(_.foreachBatch(upsertBatch(snap) _))
 
   /** One micro-batch of the CDC merge. Idempotent: the newer-wins
     * comparison is `>=` on (ts, event_id), so a batch replayed after
@@ -676,7 +613,7 @@ object StreamOps {
       val sp = java.nio.file.Paths.get(snap)
       val pp = java.nio.file.Paths.get(snap + "_prev")
       if (java.nio.file.Files.exists(pp)) {
-        if (java.nio.file.Files.exists(sp)) deleteRecursively(pp)
+        if (java.nio.file.Files.exists(sp)) graft.Scratch.wipeDir(pp)
         else java.nio.file.Files.move(pp, sp)
       }
     }
@@ -730,14 +667,7 @@ object StreamOps {
           java.nio.file.Files.move(pp, sp) // restore on failed swap
         throw e
     }
-    if (java.nio.file.Files.exists(pp)) deleteRecursively(pp)
-    ()
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(p).iterator().asScala.toSeq
-      .reverse.foreach(java.nio.file.Files.delete)
+    graft.Scratch.wipeDir(pp)
   }
 
   /** Watermark-evicting dedup — the 100 TB shape for unbounded key
@@ -754,7 +684,6 @@ object StreamOps {
     * row per session. Oracle-checkable; the window shuffle is keyed on
     * user_id. */
   def sessionize(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val run = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.events(s, d)
@@ -798,7 +727,7 @@ object StreamOps {
     * when the gap is >= the 30-minute timeout (half-open merge
     * interval), and session_end = last event + timeout. */
   def sessionizeStreamGated(s: SparkSession, dir: String): DataFrame =
-    runToTable(s, sessionizeStream(s, dir), "sessionize_stream",
+    runToTable(s, sessionizeStream(s, dir), "sessionize_stream", "complete",
       col("user_id"), col("session_start"))
 
   /** Custom streaming state (SURVEY.md §2.3 UDF/UDAF surface → the
@@ -1015,8 +944,8 @@ object StreamOps {
     * reproduce the batch sessionize relation exactly — session
     * numbering, bounds, counts, and sums. */
   def sessionTimersGated(s: SparkSession, dir: String): DataFrame = {
-    val raw = runToTableAppend(s, sessionTimersOf(s, eventsStream(s, dir)),
-      "tws_session", col("user_id"), col("session_id"))
+    val raw = runToTable(s, sessionTimersOf(s, eventsStream(s, dir)),
+      "tws_session", "append", col("user_id"), col("session_id"))
     val evUs = Tables.events(s, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
     // bounded driver scalar: one row (the corpus max event time)
@@ -1059,13 +988,13 @@ object StreamOps {
     * connector's offset arithmetic end to end (an overlapping or
     * gapped batch boundary duplicates or drops ids and hash-fails). */
   def dsv2Stream(s: SparkSession, dir: String): DataFrame =
-    runToTableAppend(s,
+    runToTable(s,
       s.readStream.format("graft.sources.SeqSource")
         .option("n", "100000").option("parts", "4")
         .option("batchrows", "30000").load()
         .filter(col("id") >= 25000L && col("id") < 75000L)
         .select("id", "bucket"),
-      "dsv2_stream", col("id"))
+      "dsv2_stream", "append", col("id"))
 
   /** The DSv2 streaming WRITE half — the last connector quadrant
     * (batch read/write and the micro-batch read already gated):
@@ -1081,17 +1010,15 @@ object StreamOps {
     * oracle from range arithmetic. */
   def dsv2StreamWrite(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val runId = java.util.UUID.randomUUID().toString
-    val q = s.readStream.format("graft.sources.SeqSource")
-      .option("n", "100000").option("parts", "4")
-      .option("batchrows", "30000").load()
-      .select("id")
-      .writeStream.format("graft.sources.CountSink")
-      .option("runid", runId)
-      .option("checkpointLocation", freshDir("dsv2_stream_write", "ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    drain(s,
+      s.readStream.format("graft.sources.SeqSource")
+        .option("n", "100000").option("parts", "4")
+        .option("batchrows", "30000").load()
+        .select("id"),
+      "append", freshDir("dsv2_stream_write", "ckpt")) {
+      _.format("graft.sources.CountSink").option("runid", runId)
+    }
     val (rows, sum, epochs) = graft.sources.CountSink.takeStream(runId)
     Seq((rows, sum, epochs)).toDF("n_rows", "sum_id", "n_epochs")
   }
@@ -1111,22 +1038,17 @@ object StreamOps {
     * the original source — at production state sizes this is the only
     * affordable way to look inside a query's state. */
   def stateInspect(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val ckpt = freshDir("state_inspect", "ckpt")
-    withLowShufflePartitions(s) { withRocksDb(s) {
-      val q = eventsStream(s, dir)
+    drain(s,
+      eventsStream(s, dir)
         .groupBy("user_id")
-        .agg(count(lit(1)).as("n"), sum("event_id").as("sid"))
-        .writeStream.outputMode("complete").format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.format("statestore").load(ckpt)
-        .select(col("key.user_id").as("user_id"),
-          col("value.count").as("n_events"),
-          col("value.sum").as("sum_event_id"))
-        .transform(graft.operators.Present.sortedUnbounded(_, col("user_id")))
-    } }
+        .agg(count(lit(1)).as("n"), sum("event_id").as("sid")),
+      "complete", ckpt)(_.format("noop"))
+    s.read.format("statestore").load(ckpt)
+      .select(col("key.user_id").as("user_id"),
+        col("value.count").as("n_events"),
+        col("value.sum").as("sum_event_id"))
+      .transform(graft.operators.Present.sortedUnbounded(_, col("user_id")))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -695,10 +695,10 @@ class StreamingSpec extends SparkSpec {
     // 3 micro-batches; most user_ids are touched in several of them,
     // so the raw sink holds duplicate keys and only last-batch-wins
     // compaction yields the true final state
-    val landed = StreamOps.runToTableUpdate(spark,
+    val landed = StreamOps.runToTable(spark,
       StreamOps.runningTotalsOf(spark,
         StreamOps.eventsStreamFromDir(spark, srcDir.toString, Some(1))),
-      "updcompact_test", col("user_id"))
+      "updcompact_test", "update", col("user_id"))
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2)))).toMap
 
     val batch = Tables.events(spark, sfDir)
@@ -706,6 +706,39 @@ class StreamingSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), round(sum("value"), 3).as("s"))
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2)))).toMap
     assert(landed == batch)
+  }
+
+  test("drain restores the confs it scopes, after success and after failure") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows")
+    val saved = keys.map(k => k -> spark.conf.getAll.get(k))
+    def explicit(): Seq[Option[String]] = keys.map(spark.conf.getAll.get)
+    def src = spark.readStream.format("graft.sources.SeqSource")
+      .option("n", "1000").option("batchrows", "1000").load()
+    try {
+      // sentinels the drain's own values can't mask: 13 partitions,
+      // and the provider class unset (not merely set to its default)
+      spark.conf.set(keys.head, "13")
+      spark.conf.unset(keys(1))
+      val before = explicit()
+      assert(before.take(2) == Seq(Some("13"), None))
+      StreamOps.drain(spark, src, "append",
+        SparkSpec.tempDir("drain_ok").toString)(_.format("noop"))
+      assert(explicit() == before, "completed drain leaked its confs")
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        StreamOps.drain(spark, src, "append",
+          SparkSpec.tempDir("drain_fail").toString) {
+          _.foreachBatch { (_: DataFrame, _: Long) =>
+            throw new IllegalStateException("sink failed") }
+        }
+      }
+      assert(explicit() == before, "failed drain leaked its confs")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 
   test("streaming session_window agrees with batch sessionize on counts") {
