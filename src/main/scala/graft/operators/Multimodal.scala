@@ -111,56 +111,6 @@ object Multimodal {
       img
     }
 
-    /** DIVERSE visual synthesis (rehearsal-only): cell (bx, by) of the
-      * pattern is a deterministic 64-bit mix of (pattern key, cell
-      * index) — the splitmix64 finalizer (public domain, Steele et
-      * al.) — so every distinct key decodes to an effectively random
-      * 64-cell pattern and the aHash space is ~64-bit diverse, unlike
-      * the gate synthesis's 1280-class gradient ceiling
-      * ([[cellGray]]). The gate corpus keeps the arithmetic form
-      * because its DuckDB oracle must replay the hash; the rehearsal
-      * needs realistic DIVERSITY, which no corpus staging can conjure
-      * out of the 1280-class contract (the round-16 lesson). */
-    def mix64(z0: Long): Long = {
-      var z = z0 + 0x9E3779B97F4A7C15L
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
-    def divGray(key: Long, bx: Int, by: Int): Int =
-      (mix64(key * 64 + by * 8 + bx) & 0xFF).toInt
-
-    /** Planted duplicate-class rate for the diverse mode: every
-      * [[DivDupEvery]]-th image (by image ordinal doc_id/3) repeats
-      * the PREVIOUS image's pattern — the rare-duplicate structure of
-      * a real crawl (~1.6% planted copies, everything else unique). */
-    val DivDupEvery = 64L
-    /** The pattern key: ordinal ≡ 1 (mod [[DivDupEvery]]) copies the
-      * image 3 ids earlier; everyone else patterns on their own id. */
-    def divKey(docId: Long): Long =
-      if ((docId / 3) % DivDupEvery == 1) docId - 3 else docId
-
-    private def makeImageDiverse(docId: Long, n: Long): BufferedImage = {
-      val (w, h) = (imageW(n), imageH(n))
-      val key = divKey(docId)
-      val img = new BufferedImage(w, h,
-        BufferedImage.TYPE_BYTE_INDEXED, palette)
-      var y = 0
-      while (y < h) {
-        val by = y * 8 / h
-        var x = 0
-        while (x < w) {
-          img.setRGB(x, y, cmap(divGray(key, x * 8 / w, by)))
-          x += 1
-        }
-        y += 1
-      }
-      img
-    }
-
-    def encodePngDiverse(docId: Long, n: Long): Array[Byte] =
-      write(makeImageDiverse(docId, n), "png")
-
     private def write(img: BufferedImage, fmt: String): Array[Byte] = {
       val bos = new ByteArrayOutputStream()
       ImageIO.write(img, fmt, bos)
@@ -546,7 +496,7 @@ object Multimodal {
   /** Landed tombstone sidecar: the deleted doc_ids ONLY, derived
     * index-locally from the features store's narrow id column (a real
     * takedown arrives as an id list; deriving it here keeps the
-    * rehearsal deterministic). ∝ batch by construction. */
+    * query deterministic). ∝ batch by construction. */
   private[graft] def mediaTombStore(s: SparkSession, d: String): DataFrame =
     s.read.parquet(mediaTombStores.root(d) { out =>
       featuresTable(s, d)
@@ -618,6 +568,17 @@ object Multimodal {
       : org.apache.spark.sql.Column =
     bit_count(hiA.bitwiseXOR(hiB)) + bit_count(loA.bitwiseXOR(loB))
 
+  /** Band-exploded image hashes of a features relation, columns
+    * tagged — one definition shared by the full self-join and the
+    * incremental delta-vs-all probe. */
+  private def bandedOf(feats: DataFrame, tag: String): DataFrame =
+    feats.filter(col("media_type") === "image")
+      .select(
+        col("doc_id").as(s"doc_$tag"),
+        col("ahash_hi").as(s"hi_$tag"), col("ahash_lo").as(s"lo_$tag"),
+        posexplode(hashBands(col("ahash_hi"), col("ahash_lo")))
+          .as(Seq("band", "bv")))
+
   /** Perceptual near-dup over the DECODED key frame's 8×8
     * average-hash — the published pHash-pipeline shape (LAION / CC
     * image dedup): pairs of images whose 64-bit aHashes are within
@@ -632,25 +593,8 @@ object Multimodal {
     * (decode-once, binaries never re-read). The oracle replays the
     * synthesis arithmetic through the naive ground-truth self-join,
     * so a band split that dropped a qualifying pair hash-fails. */
-  /** Band-exploded image hashes of a features relation, columns
-    * tagged — one definition shared by the full self-join and the
-    * incremental delta-vs-all probe. */
-  private def bandedOf(feats: DataFrame, tag: String): DataFrame =
-    feats.filter(col("media_type") === "image")
-      .select(
-        col("doc_id").as(s"doc_$tag"),
-        col("ahash_hi").as(s"hi_$tag"), col("ahash_lo").as(s"lo_$tag"),
-        posexplode(hashBands(col("ahash_hi"), col("ahash_lo")))
-          .as(Seq("band", "bv")))
-
-  def mediaNearDup(s: SparkSession, d: String): DataFrame =
-    nearDupOver(featuresTable(s, d))
-
-  /** The banded-Hamming rule over an arbitrary features relation —
-    * ONE definition shared by the gated query and the
-    * signature-diverse rehearsal twin, so the rehearsal measures the
-    * exact plan the gate pins. */
-  private[graft] def nearDupOver(img: DataFrame): DataFrame =
+  def mediaNearDup(s: SparkSession, d: String): DataFrame = {
+    val img = featuresTable(s, d)
     bandedOf(img, "a").join(bandedOf(img, "b"), Seq("band", "bv"))
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
@@ -660,60 +604,7 @@ object Multimodal {
       // a pair can match in several bands — one row per pair
       .groupBy("doc_a", "doc_b").agg(max("hamming").as("hamming"))
       .transform(Present.sortedUnbounded(_, col("doc_a"), col("doc_b")))
-
-  // ---------------------------------------------------------------
-  // Signature-diverse rehearsal twin (round 17): the gate synthesis
-  // caps the decoded-signature space at 1280 classes (the oracle
-  // must replay the arithmetic), which makes TRUE near-dup pairs
-  // grow ∝ corpus² on ANY staged multiple — so the banded plan's
-  // corpus-LINEARITY claim on realistic hash diversity stood on
-  // argument alone. This twin keeps the decode path and the banded
-  // plan IDENTICAL and swaps only the image synthesis: splitmix64
-  // cell patterns (≈64-bit-diverse aHashes) with a ~1.6% planted
-  // duplicate-class rate — rare duplicates over a diverse sea, the
-  // real crawl shape. Rehearsal-only: not a gated query (the mixer
-  // has no reason to be replayed by DuckDB — RehearsalSpec pins
-  // diversity + exact planted recovery instead).
-  // ---------------------------------------------------------------
-
-  /** [[mediaTableOf]] with images routed through the diverse
-    * synthesis; audio/video unchanged (their rungs have their own
-    * content signatures). */
-  private def mediaTableDiverseOf(s: SparkSession,
-                                  docs: DataFrame): Dataset[MediaRow] = {
-    import s.implicits._
-    docs
-      .select(col("doc_id"), col("n_chars"))
-      .as[(Long, Long)]
-      .mapPartitions { rows =>
-        ImageIO.setUseCache(false)
-        rows.map { case (id, n) =>
-          (id % 3) match {
-            case 0 => MediaRow(id, "image", Codec.encodePngDiverse(id, n))
-            case 1 => MediaRow(id, "audio", Codec.encodeWav(id, n))
-            case _ => MediaRow(id, "video", Codec.encodeVideo(id, n))
-          }
-        }
-      }
   }
-
-  private[graft] val divFeatureStores =
-    new graft.Landed[String]("graft_mediastore_div")
-
-  /** Landed features store for the DIVERSE corpus — the same genuine
-    * decode ([[extractFeatures]] — real PNG parse, real pixel reads)
-    * over the diverse payloads. */
-  def featuresTableDiverse(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(divFeatureStores.root(d) { out =>
-      extractFeatures(mediaTableDiverseOf(s, Tables.documents(s, d))).toDF()
-        .write.mode("overwrite").parquet(out)
-    })
-
-  /** The banded near-dup over the diverse store — the rehearsal's
-    * measured query (same rule, same plan as the gated
-    * [[mediaNearDup]]). */
-  def mediaNearDupDiverse(s: SparkSession, d: String): DataFrame =
-    nearDupOver(featuresTableDiverse(s, d))
 
   /** INCREMENTAL banded near-dup — the arriving batch's probe (the
     * dedup_incremental contract applied to the perceptual-hash

@@ -77,24 +77,7 @@ object Retrieval {
   private def bucketsOf(workload: Seq[(Long, String)]): Seq[Long] =
     workload.flatMap(_._2.split(" ")).map(wbOf).distinct
 
-  /** GENERATED workload for the amortization rehearsal: `n` queries of
-    * 3 terms each over the corpus's highest-df words (the worst case
-    * for the probe — hot terms live in the largest postings lists and
-    * the bucket-union saturates fastest). Deterministic given the
-    * landed dfr sidecar; rehearsal-only, so it never needs a DuckDB
-    * twin. */
-  private[graft] def workloadOf(s: SparkSession, d: String,
-                                n: Int): Seq[(Long, String)] = {
-    val pool = dfrStore(s, d).orderBy(desc("df"), col("word"))
-      .limit(math.max(3 * n, 30)).select("word")
-      .collect().map(_.getString(0))
-    (0 until n).map { i =>
-      val terms = (0 until 3).map(j => pool((3 * i + j) % pool.length))
-      (i + 1L, terms.distinct.mkString(" "))
-    }
-  }
-
-  /** GENERATED workload for the WAND win-case rehearsal: each query =
+  /** GENERATED workload for the WAND win regime: each query =
     * one SELECTIVE term (mid-df — rare enough for a high idf and a
     * high θ, but df ≥ 2×[[TopK]] so the seed yields a full θ) plus
     * two HOT terms (the largest postings lists). The max-score seed
@@ -102,8 +85,10 @@ object Retrieval {
     * bound dwarfs the hot terms'), θ lands near the selective docs'
     * scores, and every hot-only doc's ubsum falls below it — the
     * classic WAND regime where the prune skips the bulk of the
-    * candidate set. Deterministic given the landed dfr sidecar;
-    * rehearsal-only. */
+    * candidate set. Deterministic given the landed dfr sidecar. The
+    * RetrievalSpec "wand win regime" case runs [[wandPlan]] on it
+    * against full scoring; the measured win-regime receipts are in
+    * SCALE.md §"The WAND WIN regime". */
   private[graft] def selectiveWorkloadOf(s: SparkSession, d: String,
                                          n: Int): Seq[(Long, String)] = {
     val hot = dfrStore(s, d).orderBy(desc("df"), col("word"))
@@ -150,15 +135,11 @@ object Retrieval {
   /** JVM twin of the Column-side bucket (md5-60 % WordBuckets) — the
     * query's terms are known driver-side, so their buckets become
     * partition-pruning literals on the store read. */
-  private[graft] def wbOf(word: String): Long = wbOfAt(word, WordBuckets)
-
-  /** [[wbOf]] at an explicit bucket count — the bucket-count
-    * rehearsal's knob ([[indexRootAt]]). */
-  private[graft] def wbOfAt(word: String, buckets: Int): Long = {
+  private[graft] def wbOf(word: String): Long = {
     val hex = java.security.MessageDigest.getInstance("MD5")
       .digest(word.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(15)
-    java.lang.Long.parseLong(hex, 16) % buckets
+    java.lang.Long.parseLong(hex, 16) % WordBuckets
   }
 
   private[graft] val dtStores = new graft.Landed[String]("graft_bm25")
@@ -172,14 +153,15 @@ object Retrieval {
     * next to the index — `dl` (doc_id → length) and `dfr`
     * (word → df) — derived from the landed postings so ONE tokenize
     * pass covers everything. A layout change edits exactly this
-    * method; the full/base/delta roots only choose the doc slice, the
-    * bucket-count rehearsal ([[indexRootAt]]) the bucket count. */
-  private def landSegment(s: SparkSession, docs: DataFrame, out: String,
-                          buckets: Int = WordBuckets): Unit = {
+    * method; the full/base/delta roots only choose the doc slice. The
+    * bucket count is fixed at [[WordBuckets]] (other counts measured:
+    * SCALE.md §"Bucket count as a measured knob"). */
+  private def landSegment(s: SparkSession, docs: DataFrame,
+                          out: String): Unit = {
     TextOps.tokenize(docs)
       .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
       .withColumn("wb",
-        pmod(Dedup.md5Hash60(col("word")), lit(buckets.toLong)))
+        pmod(Dedup.md5Hash60(col("word")), lit(WordBuckets.toLong)))
       .write.mode("overwrite").partitionBy("wb").parquet(s"$out/dt")
     deriveSidecars(s, out)
   }
@@ -224,13 +206,12 @@ object Retrieval {
 
   /** Land the (df → idfq) integer sidecar from a df relation at `out`
     * — the one place Robertson idf's ln ever runs. Shared by the
-    * full-index sidecar, the segment-sourced twin, the
-    * post-compaction twins and the bucket-count rehearsal's root-local
-    * twin, so the ln/quantization can never drift. `ndocs` is a 1-row
-    * (ndocs BIGINT) relation the CALLER derives from its own dl
-    * sidecar(s) — N = INDEXED docs, the count every real engine
-    * uses — so each build path stands on its own landed artifacts and never re-reads the raw
-    * corpus (a doc that tokenizes to zero words is not indexed and
+    * full-index sidecar, the segment-sourced twin and the
+    * post-compaction twins, so the ln/quantization can never drift.
+    * `ndocs` is a 1-row (ndocs BIGINT) relation the CALLER derives
+    * from its own dl sidecar(s) — N = INDEXED docs, the count every
+    * real engine uses — so each build path stands on its own landed
+    * artifacts and never re-reads the raw corpus (a doc that tokenizes to zero words is not indexed and
     * does not count; the oracle's replay aggregates the same
     * token-derived dl, so the two N's agree by construction). */
   private def landIdf(s: SparkSession, dfr: DataFrame, ndocs: DataFrame,
@@ -333,10 +314,10 @@ object Retrieval {
   private[graft] def bm25Ranked(s: SparkSession, d: String): DataFrame =
     bm25RankedWith(s, d, Bm25Queries)
 
-  /** [[bm25Ranked]] under an explicit workload — the amortization
-    * rehearsal's entry point (per-query cost vs workload size: the
-    * probe's bucket union and the broadcast query relation both grow
-    * with the workload; everything else is workload-flat). */
+  /** [[bm25Ranked]] under an explicit workload — the full-scoring
+    * reference a generated workload's [[wandPlan]] is checked against
+    * (RetrievalSpec "wand win regime"). Only the probe's bucket union
+    * and the broadcast query relation grow with the workload. */
   private[graft] def bm25RankedWith(s: SparkSession, d: String,
                                     workload: Seq[(Long, String)]): DataFrame = {
     noteContext(s, d)
@@ -674,40 +655,6 @@ object Retrieval {
   }
 
   // ---------------------------------------------------------------
-  // Bucket-count rehearsal support: the gated stores are pinned to
-  // WordBuckets = 64; the 100 TB layout guidance ("grow the bucket
-  // count, probes prune identically") needs a MEASURED twin at a
-  // different count. Rehearsal-only — no gate reads these roots.
-  // ---------------------------------------------------------------
-
-  private val idxAtStores = new graft.Landed[(String, Int)]("graft_bm25kb")
-
-  /** Land a full postings index (+ dl/dfr sidecars + root-local idf)
-    * at an EXPLICIT word-bucket count, keyed by (dataset, buckets). */
-  private[graft] def indexRootAt(s: SparkSession, d: String,
-                                 buckets: Int): String =
-    idxAtStores.root((d, buckets)) { out =>
-      landSegment(s, Tables.documents(s, d), out, buckets)
-      landIdfOf(s, out, s"$out/idf")
-    }
-
-  /** The BM25 probe against an explicit root/bucket count — the same
-    * scoring chain as the gate, with the pruning literals hashed at
-    * the root's OWN bucket count. */
-  private[graft] def bm25RankedAt(s: SparkSession, root: String,
-      buckets: Int, workload: Seq[(Long, String)]): DataFrame = {
-    val wbs = workload.flatMap(_._2.split(" "))
-      .map(wbOfAt(_, buckets)).distinct
-    val dt = readPostings(s, s"$root/dt")
-      .filter(col("wb").isin(wbs: _*)).drop("wb")
-    val dl = s.read.parquet(s"$root/dl")
-    val st = dl.agg(sum("len").as("t"), count(lit(1)).as("nd"))
-      .select(expr("(10 * t) div nd").as("avgq"))
-    scoreFrom(s, queryTermsOf(s, workload), dt, dl,
-      s.read.parquet(s"$root/dfr"), s.read.parquet(s"$root/idf"), st)
-  }
-
-  // ---------------------------------------------------------------
   // Score-pruned top-k (WAND family): per-term integer MAX-SCORE
   // sidecars let the probe skip docs whose score upper bound cannot
   // reach rank K — the classic search-engine optimization (Broder et
@@ -751,9 +698,10 @@ object Retrieval {
   /** The pruned-probe plan plus the observability relations the spec
     * counts: (ranked result, matched (query, doc) pairs, exactly-
     * scored (query, doc) pairs) — skipped = matched − scored. The
-    * workload parameter serves the rehearsal's win-case twin (a
-    * selective seed makes θ prune the hot terms' postings); the gated
-    * query always runs the fixed [[Bm25Queries]]. */
+    * workload parameter serves the win-regime case
+    * ([[selectiveWorkloadOf]]: a selective seed makes θ prune the hot
+    * terms' postings); the gated query always runs the fixed
+    * [[Bm25Queries]]. */
   private[graft] def wandPlan(s: SparkSession, d: String,
       workload: Seq[(Long, String)] = Bm25Queries)
       : (DataFrame, DataFrame, DataFrame) = {

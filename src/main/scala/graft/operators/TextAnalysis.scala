@@ -1149,13 +1149,15 @@ object TextAnalysis {
   }
 
   /** The uncached epoch loop (the memoizing wrapper above is the
-    * query path; the scale rehearsal calls THIS so pass 2+ prices the
-    * training loop, not a cache read). */
-  private[graft] def qcTrainLoop(s: SparkSession, d: String): Seq[QcIterRow] =
+    * query path). */
+  private def qcTrainLoop(s: SparkSession, d: String): Seq[QcIterRow] =
     qcLoopRange(qcFeatures(s, d).filter(col("is_train")),
       Array(0L, 0L, 0L, 0L), 1, QcIters)._1
 
-  /** Uncached DataFrame form of the loop, for the rehearsal. */
+  /** Uncached DataFrame form of the loop — a genuinely fresh re-run
+    * that PipelineSpec compares the memoized query against (the
+    * 1–200× training ladder is in SCALE.md §"In-engine classifier
+    * training"). */
   private[graft] def qualityTrainFresh(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     qcTrainLoop(s, d).toDF()

@@ -1467,23 +1467,21 @@ object StorageOps {
     join3Body(cs)
   }
 
-  private[graft] def join3Body(cs: SparkSession): DataFrame =
-    join3BodyOf(cs, Dsv2N)
-
-  /** The parameterized 3-way form — ScaleRehearsal scales the extents
-    * through the same body the gate pins. */
-  private[graft] def join3BodyOf(cs: SparkSession, n: Long): DataFrame = {
+  /** The 3-way body on the caller's session — shared by the
+    * registered query and the spec's pushed-vs-engine comparison. */
+  private[graft] def join3Body(cs: SparkSession): DataFrame = {
     // parts=32: the pushed form collapses THREE scans into one, so
     // that one scan must carry the parallelism all three would have
     // had — with 8 splits the collapsed scan underuses local[32] and
-    // the wall (not shuffle) becomes the bottleneck at 200×
-    // (rehearsal-measured: 13.2 s at parts=8 vs the engine twin's
-    // 9.7 s across 24 concurrent scan tasks)
+    // the wall (not shuffle) becomes the bottleneck at 200× (SCALE.md
+    // §"Round-13 extension: the 3-way collapse measured": 13.2 s at
+    // parts=8 vs the engine twin's 9.7 s across 24 concurrent scan
+    // tasks)
     def tbl(x: Long) = cs.read.format("graft.sources.SeqSource")
       .option("n", x.toString).option("parts", "32").load()
-    val a = tbl(n).filter(col("id") >= n / 10)
-    val b = tbl(n / 2)
-    val c = tbl(n * 3 / 4).filter(col("id") < n * 2 / 5)
+    val a = tbl(Dsv2N).filter(col("id") >= Dsv2N / 10)
+    val b = tbl(Dsv2N / 2)
+    val c = tbl(Dsv2N * 3 / 4).filter(col("id") < Dsv2N * 2 / 5)
     a.join(b, a("id") === b("id")).join(c, a("id") === c("id"))
       .select(a("id").as("id"), a("bucket").as("bucket_a"),
         b("word").as("word"), c("bucket").as("bucket_c"))
@@ -1494,19 +1492,17 @@ object StorageOps {
       .transform(Present.sorted(_, col("word")))
   }
 
+  /** The 2-way join's two sides on the caller's session — shared by
+    * the registered query and the spec's pushed-vs-engine comparison
+    * (measured at 1–50×: SCALE.md §"1–50× join pushdown rehearsal"). */
   private[graft] def dsv2JoinSides(cs: SparkSession)
-      : (DataFrame, DataFrame) = dsv2JoinSidesOf(cs, Dsv2N)
-
-  /** The parameterized form — ScaleRehearsal scales the extents
-    * through the same body the gate pins. */
-  private[graft] def dsv2JoinSidesOf(cs: SparkSession, n: Long)
       : (DataFrame, DataFrame) = {
-    // parts=32 for the same reason as join3BodyOf: the pushed join
+    // parts=32 for the same reason as join3Body: the pushed join
     // serves BOTH sides from one scan, which must not halve the
     // machine's parallelism just because the join disappeared
     def tbl(x: Long) = cs.read.format("graft.sources.SeqSource")
       .option("n", x.toString).option("parts", "32").load()
-    (tbl(n).filter(col("id") >= n / 10), tbl(n / 2))
+    (tbl(Dsv2N).filter(col("id") >= Dsv2N / 10), tbl(Dsv2N / 2))
   }
 
   private[graft] def dsv2JoinBody(a: DataFrame, b: DataFrame): DataFrame =
@@ -1608,22 +1604,18 @@ object StorageOps {
 
   /** The join body on whatever session/conf the caller prepared —
     * shared by the registered query and the spec's with/without-SPJ
-    * exchange-count comparison. */
-  private[graft] def spjBody(cs: SparkSession): DataFrame =
-    spjBodyOf(cs, SpjAN, SpjBN)
-
-  /** The parameterized form — ScaleRehearsal scales the table extents
-    * through the same body the gate pins. `noorder` suppresses the
-    * scan's reported ordering (the rehearsal's sort-cost twin: same
-    * zero-exchange SPJ, but the SMJ re-sorts every key block). */
-  private[graft] def spjBodyOf(cs: SparkSession, nA: Long,
-                               nB: Long, noorder: Boolean = false): DataFrame = {
+    * exchange-count comparison. `noorder` suppresses the scan's
+    * reported ordering (the spec's sort-elision twin: same
+    * zero-exchange SPJ, but the SMJ re-sorts every key block; measured
+    * in SCALE.md §"Round-12 extension: sort elision measured"). */
+  private[graft] def spjBody(cs: SparkSession,
+                             noorder: Boolean = false): DataFrame = {
     def tbl(n: Long) = cs.read.format("graft.sources.SeqSource")
       .option("n", n.toString).option("pstep", SpjStep.toString)
       .option("noorder", noorder.toString).load()
-    val b = tbl(nB).select(col("pkey"), col("id"),
+    val b = tbl(SpjBN).select(col("pkey"), col("id"),
       col("bucket").as("bucket_b"))
-    tbl(nA).join(b, Seq("pkey", "id"))
+    tbl(SpjAN).join(b, Seq("pkey", "id"))
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"),
         sum(col("bucket") + col("bucket_b")).as("sum_buckets"))
@@ -1631,7 +1623,7 @@ object StorageOps {
   }
 
   /** A session with the SPJ confs on — shared by the registered
-    * query, the spec, and the rehearsal. */
+    * queries and the spec. */
   private[graft] def spjSession(s: SparkSession): SparkSession = {
     val cs = s.newSession()
     cs.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
@@ -1670,27 +1662,18 @@ object StorageOps {
 
   /** The skewed-layout join body on the caller's session — shared by
     * the registered query and the spec's grouped-vs-partially-
-    * clustered comparison. */
-  private[graft] def spjSkewBody(cs: SparkSession): DataFrame =
-    spjSkewBodyOf(cs, SpjAN, SpjBN, SpjStep, SkewHotSplits)
-
-  /** Parameterized form — ScaleRehearsal turns the straggler into a
-    * measured wall: with `hotrows` > 0 the source's pkey map is
-    * genuinely SKEWED (ids below hotrows all land in pkey 0 — one
-    * oversized block next to uniform pstep blocks), so grouping the
-    * hot block into one task is a real straggler, not just a
-    * partition-count curiosity. Both sides share (pstep, hotrows),
-    * so the key maps align and the join still co-partitions. */
-  private[graft] def spjSkewBodyOf(cs: SparkSession, nA: Long, nB: Long,
-                                   pstep: Long, hot: Int,
-                                   hotrows: Long = 0L): DataFrame = {
+    * clustered comparison. Both sides share pstep and the uniform
+    * (`hotrows=0`) key map, so the join still co-partitions; the
+    * straggler on a genuinely skewed map is measured in SCALE.md
+    * §"1–50× SPJ skew rehearsal". */
+  private[graft] def spjSkewBody(cs: SparkSession): DataFrame = {
     def tbl(n: Long, h: Int) = cs.read.format("graft.sources.SeqSource")
-      .option("n", n.toString).option("pstep", pstep.toString)
+      .option("n", n.toString).option("pstep", SpjStep.toString)
       .option("hotsplits", h.toString)
-      .option("hotrows", hotrows.toString).load()
-    val b = tbl(nB, 1).select(col("pkey"), col("id"),
+      .option("hotrows", "0").load()
+    val b = tbl(SpjBN, 1).select(col("pkey"), col("id"),
       col("bucket").as("bucket_b"))
-    tbl(nA, hot).join(b, Seq("pkey", "id"))
+    tbl(SpjAN, SkewHotSplits).join(b, Seq("pkey", "id"))
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"),
         sum(col("bucket") + col("bucket_b")).as("sum_buckets"))
@@ -2311,9 +2294,9 @@ object StorageOps {
     * two-column range predicate skips on either. The Z value orders
     * the write and is then dropped — it's a layout device, not data.
     * The gated query filters one year AND a supplier range; the
-    * oracle runs the same filter on the source parquet. Measured
-    * evidence: the `layout` rehearsal family compares scan records
-    * against the 1-D sorted layout on this two-dim predicate. */
+    * oracle runs the same filter on the source parquet. Scan records
+    * against the 1-D sorted layout on this two-dim predicate, 1–50×:
+    * SCALE.md §"Relational" (Z-order). */
   def zorderLayout(s: SparkSession, d: String): DataFrame = {
     val dir = stageDir("zorder_lineitem", d)
     Tables.lineitem(s, d)
@@ -2331,8 +2314,8 @@ object StorageOps {
   }
 
   /** Read half of [[zorderLayout]] — the two-dimension range query
-    * (spec/rehearsal hook; also runs unmodified over the 1-D sorted
-    * layout for the skipping comparison). */
+    * (also run over the 1-D sorted layout for the skipping
+    * comparison in SCALE.md §"Relational"). */
   def zorderLayoutRead(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(dir)
       .filter(col("l_shipdate") >= lit("1995-01-01") &&
@@ -2358,8 +2341,10 @@ object StorageOps {
     * O(matching row groups), not O(table). Dictionary encoding is
     * disabled on the key column to make the attribution honest — with
     * it on, small test files would dictionary-skip and mask what the
-    * bloom contributes at scale (PlanSpec measures: bloom ON skips
-    * row groups that bloom OFF reads, on byte-identical data).
+    * bloom contributes at scale (PlanSpec pins it: an in-domain
+    * absent key visits no row group with the bloom on and every row
+    * group with it off; the 1–50× row-group counts are in SCALE.md
+    * §"Relational").
     *
     * The layout deliberately SHUFFLES rows (hash of l_partkey) so the
     * key column is maximally unclustered — the adversarial case for
@@ -2374,8 +2359,9 @@ object StorageOps {
     bloomSkipRead(s, d, dir)
   }
 
-  /** Write half of [[bloomSkipLayout]] (rehearsal hook): same rows,
-    * same shuffle, bloom on/off switchable for the measured twin. */
+  /** Write half of [[bloomSkipLayout]]: same rows, same shuffle,
+    * bloom on/off switchable for the no-bloom twin measured in
+    * SCALE.md §"Relational". */
   private[graft] def stageBloomLineitem(s: SparkSession, src: String,
                                         dir: String, bloom: Boolean): Unit = {
     val w = Tables.lineitem(s, src)
@@ -2423,8 +2409,9 @@ object StorageOps {
     Seq(pr.getLong(0), pr.getLong(1))
   }
 
-  /** The probe plan alone (rehearsal hook — probes precomputed so the
-    * measured pass contains ONLY the layout scan). */
+  /** The probe plan alone — probes precomputed, so a measured pass
+    * (SCALE.md §"Relational", bloom on/off) contains ONLY the layout
+    * scan. */
   private[graft] def bloomProbeRead(s: SparkSession, layoutDir: String,
                                     probes: Seq[Long]): DataFrame =
     s.read.parquet(layoutDir)

@@ -107,8 +107,9 @@ object StreamOps {
     * processScoped (r19): wipe-on-use over a path shared with a
     * concurrent suite/Verify JVM would wipe a LIVE stream's sink or
     * checkpoint mid-run — the AvroIO hazard class, wider here because
-    * streams hold the path for the whole drain. */
-  private def freshDir(tag: String, kind: String): String = {
+    * streams hold the path for the whole drain. The one wipe-and-create
+    * for stream scratch: ScaleRehearsal's checkpoints use it too. */
+  private[graft] def freshDir(tag: String, kind: String): String = {
     val p = graft.Scratch.processScoped("graft_stream_out", kind, tag)
     graft.Scratch.wipeDir(p)
     java.nio.file.Files.createDirectories(p)

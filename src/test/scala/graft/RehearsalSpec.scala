@@ -11,8 +11,17 @@ class RehearsalSpec extends SparkSpec {
   test("rehearsal table: fixed order, all = streaming + join, typos fail fast") {
     def names(arg: String) = ScaleRehearsal.selected(arg).map(_._1)
     assert(names("all") == Seq("streaming", "join"))
-    assert(names("topk,join,all") == Seq("streaming", "join", "topk"))
-    assert(names("workloadzipf,wand") == Seq("wand", "workloadzipf"))
+    assert(names("layout,join,all") == Seq("streaming", "join", "layout"))
+    // a retired family is unknown, and the message lists the seven
+    // that remain
+    val known = Seq("streaming", "deepstate", "join", "pipeline",
+      "layout", "similarity", "textscale")
+    assert(ScaleRehearsal.rehearsals.map(_._1) == known)
+    val retired = intercept[IllegalArgumentException](
+      ScaleRehearsal.selected("wand"))
+    assert(retired.getMessage.contains("wand"), retired.getMessage)
+    known.foreach(f => assert(retired.getMessage.contains(f),
+      s"'$f' missing from: ${retired.getMessage}"))
     // a typo'd family throws before main builds a session: building one
     // would re-apply GraftSession's shape to the shared session and
     // overwrite this sentinel partition count
@@ -97,37 +106,6 @@ class RehearsalSpec extends SparkSpec {
     assert(crossShard.count() == 0, "a staged line appears in two shards")
   }
 
-  test("workloadOf: deterministic hot-term workloads of the right shape") {
-    // the amortization rehearsal's workload generator is
-    // evidence-generating code: n queries, up to 3 terms each, drawn
-    // from the corpus's HIGHEST-df words (the worst case for the
-    // bucket-union probe), deterministic given the landed dfr sidecar
-    val wl30 = graft.operators.Retrieval.workloadOf(spark, sfDir, 30)
-    assert(wl30.size == 30)
-    assert(wl30.map(_._1) == (1L to 30L), "query ids must be 1..n")
-    wl30.foreach { case (_, q) =>
-      val terms = q.split(" ")
-      assert(terms.nonEmpty && terms.length <= 3 &&
-        terms.distinct.length == terms.length, s"bad query shape: '$q'")
-    }
-    assert(wl30 == graft.operators.Retrieval.workloadOf(spark, sfDir, 30),
-      "workload generator must be deterministic")
-    // the pool really is the df head: every term's df is >= the df of
-    // the (3n)-th ranked word
-    import org.apache.spark.sql.functions._
-    val dfr = graft.operators.Retrieval.dfrStore(spark, sfDir)
-      .orderBy(desc("df"), col("word")).limit(90)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val floor = dfr.values.min
-    wl30.flatMap(_._2.split(" ")).foreach(w =>
-      assert(dfr.contains(w) && dfr(w) >= floor,
-        s"workload term '$w' is not from the df head"))
-    // growing n keeps the prefix: the n=3 workload is wl30's head —
-    // the ladder compares the SAME queries at every size
-    assert(graft.operators.Retrieval.workloadOf(spark, sfDir, 3) ==
-      wl30.take(3))
-  }
-
   test("staged embedding shards preserve norms and same-shard geometry") {
     val mult = 3
     val dir = ScaleRehearsal.stageEmbeddings(spark, sfDir, mult)
@@ -163,126 +141,5 @@ class RehearsalSpec extends SparkSpec {
           s"shard $k pair ($a,$b) dot drifted: $d0 vs $d1")
       }
     }
-  }
-
-  test("zipf corpus: deterministic, tokenizer-safe, heavy-tailed") {
-    val mult = 2
-    val dir = ScaleRehearsal.stageDocsZipf(spark, sfDir, mult)
-    val staged = spark.read.parquet(s"$dir/documents.parquet")
-    val nBase = Tables.documents(spark, sfDir).count()
-    assert(staged.count() == mult * nBase, "doc count not ∝ multiple")
-    // tokenizer safety: every token survives the [^letter]+ split
-    // intact (a digit in a word would shear it apart and silently
-    // change the df distribution the rehearsal exists to fix)
-    val toks = graft.operators.TextOps.tokenize(staged)
-    val words = toks.groupBy("word").count()
-    assert(words.filter(!col("word").rlike("^[a-z]+$")).count() == 0,
-      "non-alphabetic token leaked into the zipf corpus")
-    // heavy tail: the top-1% head covers a large share of the token
-    // stream while MOST of the vocabulary sits in the df tail — the
-    // two properties a 31-word corpus cannot have
-    val byCount = words.orderBy(desc("count")).collect()
-      .map(_.getLong(1))
-    val total = byCount.sum.toDouble
-    val vocab = byCount.length
-    assert(vocab > 2000, s"vocabulary too small to be heavy-tailed: $vocab")
-    val headShare = byCount.take(math.max(1, vocab / 100)).sum / total
-    assert(headShare > 0.2, f"top-1%% head covers only $headShare%.2f")
-    val tailWords = byCount.count(_ <= 5)
-    assert(tailWords > vocab / 3,
-      s"df tail too thin: $tailWords of $vocab words with ≤5 occurrences")
-    // determinism: restaging from the same source is byte-identical
-    // content (hash of the sorted projection)
-    def corpusHash(df: org.apache.spark.sql.DataFrame): Long = df
-      .select(xxhash64(col("doc_id"), col("text")).as("h"))
-      .agg(expr("bit_xor(h)")).head.getLong(0)
-    val h1 = corpusHash(staged)
-    val again = corpusHash(spark.read.parquet(
-      ScaleRehearsal.stageDocsZipf(spark, sfDir, mult) + "/documents.parquet"))
-    assert(h1 == again, "zipf staging is not deterministic")
-  }
-
-  test("gov replicas: LM replica-invariance and dedup collapse") {
-    val mult = 2
-    val dir = ScaleRehearsal.stageGovDocs(spark, sfDir, mult)
-    val staged = spark.read.parquet(s"$dir/documents.parquet")
-    val base = Tables.documents(spark, sfDir)
-    assert(staged.count() == mult * base.count())
-    // ids unique after offsetting, text VERBATIM (no tag suffixes)
-    assert(staged.select("doc_id").distinct().count() == staged.count())
-    assert(staged.select("text").distinct().count()
-      == base.select("text").distinct().count(),
-      "replica staging altered document text")
-    // the load-bearing invariance: every cf and N scale by the SAME
-    // multiple, and IEEE division is exactly rounded, so cf/N — and
-    // every per-doc avg_nll — is BIT-IDENTICAL to the base corpus
-    // (this is what keeps the fixed perplexity gate meaningful on the
-    // staged corpus; the tag-suffix stager broke it — see
-    // stageGovDocs scaladoc)
-    import org.apache.spark.sql.functions.col
-    val baseNll = graft.operators.TextAnalysis.perplexityFilter(spark, sfDir)
-      .select("doc_id", "avg_nll", "kept").collect()
-      .map(r => r.getLong(0) -> (r.get(1), r.getBoolean(2))).toMap
-    val stagedNll = graft.operators.TextAnalysis.perplexityFilter(spark, dir)
-      .filter(col("doc_id") < ScaleRehearsal.DocRange)
-      .select("doc_id", "avg_nll", "kept").collect()
-    assert(stagedNll.nonEmpty)
-    stagedNll.foreach { r =>
-      val (nll, kept) = baseNll(r.getLong(0))
-      assert(r.get(1) == nll && r.getBoolean(2) == kept,
-        s"replica corpus shifted avg_nll for doc ${r.getLong(0)}: " +
-          s"${r.get(1)} vs base $nll")
-    }
-    // dedup collapse: corpus_build survivors on the replica corpus =
-    // the base survivors (fp ignores doc_id; min-id keeps shard 0)
-    val survStaged = graft.operators.PipelineOps.corpusBuild(spark, dir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val survBase = graft.operators.PipelineOps.corpusBuild(spark, sfDir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(survStaged == survBase,
-      "replica corpus changed the unique-content survivor set")
-  }
-
-  test("diverse media corpus: ~64-bit-diverse decoded hashes, planted " +
-    "pairs recovered exactly through the banded plan") {
-    import org.apache.spark.sql.functions.col
-    val M = graft.operators.Multimodal
-    // the staged diversity: every non-planted image decodes to its
-    // own aHash — distinct hashes = images − planted copies (an
-    // accidental collision between splitmix64 patterns would be a
-    // ~2^-64 event; equality here IS the diversity pin, against the
-    // gate synthesis's 1280-class ceiling)
-    val imgs = M.featuresTableDiverse(spark, sfDir)
-      .filter(col("media_type") === "image")
-    val nImg = imgs.count()
-    val nHash = imgs.select("ahash_hi", "ahash_lo").distinct().count()
-    val ids = Tables.documents(spark, sfDir).select("doc_id")
-      .filter(col("doc_id") % 3 === 0).collect().map(_.getLong(0)).toSet
-    val planted = ids.filter(d =>
-      (d / 3) % M.Codec.DivDupEvery == 1 && ids.contains(d - 3))
-      .map(d => (d - 3, d))
-    assert(planted.nonEmpty, "no planted pair at this scale — vacuous")
-    assert(nHash == nImg - planted.size,
-      s"diversity ceiling: $nHash distinct hashes over $nImg images " +
-        s"(expected ${nImg - planted.size})")
-    // the planted copy is a REAL decode-level duplicate (same pattern
-    // key → identical decoded aHash regardless of dims)
-    val (pa, pb) = planted.head
-    val h = imgs.filter(col("doc_id").isin(pa, pb))
-      .select("ahash_hi", "ahash_lo").distinct().count()
-    assert(h == 1, s"planted pair ($pa, $pb) decoded to distinct hashes")
-    // exact recovery: the banded plan finds the planted pairs and
-    // NOTHING else — corpus-linear output on realistic diversity
-    val found = M.mediaNearDupDiverse(spark, sfDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(found == planted,
-      s"banded recovery drifted: found ${found.size}, " +
-        s"planted ${planted.size}, extras ${(found -- planted).take(3)}, " +
-        s"missed ${(planted -- found).take(3)}")
-    // the diverse store lands once
-    val b0 = M.divFeatureStores.builds.get()
-    M.mediaNearDupDiverse(spark, sfDir).collect()
-    assert(M.divFeatureStores.builds.get() == b0,
-      "diverse features store rebuilt on a second run")
   }
 }

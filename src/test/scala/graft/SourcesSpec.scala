@@ -349,8 +349,7 @@ class SourcesSpec extends SparkSpec {
       "SPJ shuffled a join side")
     // the noorder twin makes the elision ATTRIBUTABLE: same session,
     // same SPJ layout, ordering withheld → the SMJ plans its sorts
-    val twin = StorageOps.spjBodyOf(on, StorageOps.SpjAN, StorageOps.SpjBN,
-      noorder = true)
+    val twin = StorageOps.spjBody(on, noorder = true)
     val tsmj = twin.queryExecution.executedPlan.collect {
       case j: SortMergeJoinExec => j
     }
