@@ -1125,6 +1125,14 @@ object Retrieval {
        |  WHERE drank <= $TopK)""".stripMargin
   }
 
+  /** The full-corpus BM25 replay: `bm25_retrieve`'s oracle, and the
+    * oracle of every twin whose index maintenance must be invisible in
+    * the answer. */
+  private def oracleBm25: String =
+    s"""WITH $bm25CtesSql
+       |SELECT query_id, doc_id, n_terms, score, rank FROM rk
+       |WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin
+
   /** The phrase replay — ONE builder parameterized by the proximity
     * condition (exact adjacency vs the slop window) and the survivor
     * predicate (the delete twins), shared by all five phrase
@@ -1160,10 +1168,7 @@ object Retrieval {
 
   // a def, not a val: embeds the idf integers harvested at dump time
   def oracle: Map[String, String] = Map(
-    "bm25_retrieve" ->
-      s"""WITH $bm25CtesSql
-         |SELECT query_id, doc_id, n_terms, score, rank FROM rk
-         |WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin,
+    "bm25_retrieve" -> oracleBm25,
     // tokenize → positions over the FILTERED token sequence →
     // adjacency join → per-query occurrence rank, replayed verbatim
     // (positions are 1-based here, 0-based on the Spark side —
@@ -1187,17 +1192,11 @@ object Retrieval {
     // the oracle is the full-corpus replay, identical to
     // bm25_retrieve's — a merge that dropped a posting, double-counted
     // a df, or staled avgdl hash-fails against it
-    "bm25_incremental" ->
-      s"""WITH $bm25CtesSql
-         |SELECT query_id, doc_id, n_terms, score, rank FROM rk
-         |WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin,
+    "bm25_incremental" -> oracleBm25,
     // compaction must be INVISIBLE in the answer: same full replay —
     // a fold that dropped or double-counted a posting, or re-derived
     // a sidecar wrong, hash-fails here
-    "bm25_compact" ->
-      s"""WITH $bm25CtesSql
-         |SELECT query_id, doc_id, n_terms, score, rank FROM rk
-         |WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin,
+    "bm25_compact" -> oracleBm25,
     // tombstone MASKING with stale stats (the Lucene contract): the
     // stats CTEs replay the FULL corpus, the scoring CTE drops the
     // deleted docs — a leaked tombstoned doc or an over-eager stat
@@ -1220,10 +1219,7 @@ object Retrieval {
     // the max-score prune changes what gets SCORED, never what gets
     // ANSWERED: same full replay — an unsound bound (a skipped doc
     // that belonged in the top K) hash-fails here
-    "bm25_topk_pruned" ->
-      s"""WITH $bm25CtesSql
-         |SELECT query_id, doc_id, n_terms, score, rank FROM rk
-         |WHERE rank <= $TopK ORDER BY query_id, rank""".stripMargin,
+    "bm25_topk_pruned" -> oracleBm25,
     "hybrid_retrieve" ->
       s"""WITH $bm25CtesSql,
          |sp AS (SELECT query_id, doc_id, rank AS srank FROM rk

@@ -77,22 +77,18 @@ object TopKOps {
     "topk_window_limit" -> topkWindowLimit _,
   )
 
+  private val oracleTopK =
+    s"""SELECT o_custkey, o_orderkey, o_totalprice FROM (
+       |  SELECT o_custkey, o_orderkey, o_totalprice,
+       |    row_number() OVER (PARTITION BY o_custkey
+       |      ORDER BY o_totalprice DESC, o_orderkey) AS rn
+       |  FROM orders) t
+       |WHERE rn <= $K
+       |ORDER BY o_custkey, o_totalprice DESC, o_orderkey""".stripMargin
+
   val oracle: Map[String, String] = Map(
-    "topk_per_key" ->
-      s"""SELECT o_custkey, o_orderkey, o_totalprice FROM (
-         |  SELECT o_custkey, o_orderkey, o_totalprice,
-         |    row_number() OVER (PARTITION BY o_custkey
-         |      ORDER BY o_totalprice DESC, o_orderkey) AS rn
-         |  FROM orders) t
-         |WHERE rn <= $K
-         |ORDER BY o_custkey, o_totalprice DESC, o_orderkey""".stripMargin,
-    "topk_window_limit" ->
-      s"""SELECT o_custkey, o_orderkey, o_totalprice FROM (
-         |  SELECT o_custkey, o_orderkey, o_totalprice,
-         |    row_number() OVER (PARTITION BY o_custkey
-         |      ORDER BY o_totalprice DESC, o_orderkey) AS rn
-         |  FROM orders) t
-         |WHERE rn <= $K
-         |ORDER BY o_custkey, o_totalprice DESC, o_orderkey""".stripMargin,
+    "topk_per_key" -> oracleTopK,
+    // the window-limit plan changes how the top K are found, never which
+    "topk_window_limit" -> oracleTopK,
   )
 }

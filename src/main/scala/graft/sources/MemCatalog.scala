@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
-import org.apache.spark.sql.types.{LongType, Metadata, MetadataBuilder, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, Metadata, MetadataBuilder, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Catalog PLUGIN — the last rung of the sources ladder: a
@@ -280,31 +280,159 @@ class MemCatalog extends TableCatalog with SupportsNamespaces
     * table's delta log into its base. Maintenance as a first-class
     * catalog verb matters at 100 TB because compaction must be
     * SCHEDULED (off-peak, amortized), not implied by DML — the
-    * catalog exposes the knob, the operator turns it. */
+    * catalog exposes the knob, the operator turns it.
+    *
+    * Every verb is one row of `procedureTable`, which both
+    * `listProcedures` and `loadProcedure` read. */
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
-    Array(Identifier.of(namespace, "compact"),
-      Identifier.of(namespace, "changes"),
-      Identifier.of(namespace, "expire"),
-      Identifier.of(namespace, "tag"),
-      Identifier.of(namespace, "untag"),
-      Identifier.of(namespace, "branch"),
-      Identifier.of(namespace, "publish"),
-      Identifier.of(namespace, "rebase"),
-      Identifier.of(namespace, "drop_branch"))
+    procedureTable.map(p => Identifier.of(namespace, p.name())).toArray
   override def loadProcedure(ident: Identifier): procedures.UnboundProcedure =
-    ident.name.toLowerCase match {
-      case "compact" => new CompactProcedure(this)
-      case "changes" => new ChangesProcedure(this)
-      case "expire"  => new ExpireProcedure(this)
-      case "tag"     => new TagProcedure(this)
-      case "untag"   => new UntagProcedure(this)
-      case "branch"  => new BranchProcedure(this)
-      case "publish" => new PublishProcedure(this)
-      case "rebase"  => new RebaseProcedure(this)
-      case "drop_branch" => new DropBranchProcedure(this)
-      case _ => throw new RuntimeException(
-        s"procedure not found: ${key(ident)}")
-    }
+    procedureTable.find(_.name().equalsIgnoreCase(ident.name))
+      .getOrElse(throw new RuntimeException(
+        s"procedure not found: ${key(ident)}"))
+
+  private def tableArg(in: InternalRow): MemTable =
+    tableByName(in.getUTF8String(0).toString)
+
+  private val procedureTable: Seq[MemProcedure] = {
+    import MemProcedure.summary
+    val tblParam = "tbl" -> StringType
+    val refParam = "name" -> StringType
+    Seq(
+      new MemProcedure("compact",
+        "compact('ns.tbl'): fold a merge-on-read table's delta log into its base",
+        Seq(tblParam), deterministic = false)({ in =>
+        val (folded, baseRows) = tableArg(in).compact()
+        summary("folded_deltas", "base_rows")(folded, baseRows)
+      }),
+      // the CDC read between two committed versions
+      // ([[MemTable.changesBetween]]): one row per inserted/deleted row
+      // reference per commit in (from, to], in the table's CURRENT
+      // schema (per-row field-id layout resolution, like every scan)
+      // plus `_change_type` and `_commit_version` — the Delta CDF
+      // column convention. A procedure because the engine exposes no
+      // TVF hook to V2 catalogs; it reads committed state only, so it
+      // is deterministic for a fixed history and the CALL itself is
+      // the gated query.
+      new MemProcedure("changes",
+        "changes('ns.tbl', from_v, to_v): row-level insert/delete diff " +
+          "between committed versions",
+        Seq(tblParam, "from_v" -> LongType, "to_v" -> LongType),
+        deterministic = true)({ in =>
+        val t = tableArg(in)
+        val recs = t.changesBetween(in.getLong(1), in.getLong(2))
+        val schema = t.schema()
+        val ids = t.layoutSnapshot
+        val defaults = t.defaultsSnapshot
+        val outSchema = StructType(schema.fields ++ Seq(
+          StructField("_change_type", StringType, nullable = false),
+          StructField("_commit_version", LongType, nullable = false)))
+        val outRows = recs.map { case (v, typ, mr) =>
+          InternalRow.fromSeq(
+            schema.fields.indices.map { j =>
+              val pos = mr.layout.indexOf(ids(j))
+              if (pos < 0) defaults.getOrElse(ids(j), null)
+              else mr.row.get(pos, schema.fields(j).dataType)
+            } ++
+            Seq(org.apache.spark.unsafe.types.UTF8String.fromString(typ),
+              java.lang.Long.valueOf(v)))
+        }.toArray
+        (outSchema, outRows)
+      }),
+      // VERSION RETENTION (Iceberg `expire_snapshots`, Delta VACUUM +
+      // log retention): all but the newest `keep_n` version manifests
+      // are dropped with their row references and commit deltas, and
+      // every read that needs them (`VERSION AS OF`, `TIMESTAMP AS
+      // OF`, `changes` ranges) fails loudly from then on
+      // ([[MemTable.expire]]). This is what makes a takedown DELETE
+      // stick: without it, purged content is one `VERSION AS OF n-1`
+      // away forever.
+      new MemProcedure("expire",
+        "expire('ns.tbl', keep_n): drop all but the newest keep_n version " +
+          "manifests; expired versions become unreadable",
+        Seq(tblParam, "keep_n" -> LongType), deterministic = false)({ in =>
+        val (expired, retained, firstLive) =
+          tableArg(in).expire(in.getLong(1).toInt)
+        summary("expired_versions", "retained_versions",
+          "first_live_version")(expired, retained, firstLive)
+      }),
+      // NAMED VERSION REFS (Iceberg tags): an immutable pointer at a
+      // committed version, readable via `VERSION AS OF 'name'` and
+      // PROTECTED from retention (`expire` clamps its cut below the
+      // oldest tag). The audit/rollback handle a compliance review
+      // pins BEFORE a retention sweep runs.
+      new MemProcedure("tag",
+        "tag('ns.tbl', 'name', v): immutable named ref to version v; " +
+          "tagged versions survive expire",
+        Seq(tblParam, refParam, "v" -> LongType), deterministic = false)({ in =>
+        summary("tagged_version")(tableArg(in)
+          .createTag(in.getUTF8String(1).toString, in.getLong(2)))
+      }),
+      new MemProcedure("untag",
+        "untag('ns.tbl', 'name'): drop a named ref; its version becomes " +
+          "expirable again",
+        Seq(tblParam, refParam), deterministic = false)({ in =>
+        summary("untagged_version")(
+          tableArg(in).dropTag(in.getUTF8String(1).toString))
+      }),
+      new MemProcedure("branch",
+        "branch('ns.tbl', 'name'): writable branch ref at the current " +
+          "head; write via ns.tbl.branch_<name>, then sys.publish",
+        Seq(tblParam, refParam), deterministic = false)({ in =>
+        val t = tableArg(in)
+        summary("branched_at_version")(t.createBranch(
+          in.getUTF8String(1).toString, t.versionCount.toLong))
+      }),
+      new MemProcedure("publish",
+        "publish('ns.tbl', 'name'): audit the branch against the table's " +
+          "CHECK constraints, then fast-forward main to it; a failing " +
+          "audit refuses and leaves main untouched",
+        Seq(tblParam, refParam), deterministic = false)({ in =>
+        val tbl = in.getUTF8String(0).toString
+        val branch = in.getUTF8String(1).toString
+        val t = tableByName(tbl)
+        if (!t.hasBranch(branch)) throw new IllegalArgumentException(
+          s"no such branch '$branch' on $tbl")
+        // THE AUDIT: every CHECK constraint must hold over the branch
+        // view before main moves. Branch writes were deliberately
+        // unchecked (WAP stages first); this is where the contract is
+        // enforced — engine-evaluated over the branch address, so the
+        // predicate semantics are exactly the write-path ones. NULL
+        // passes CHECK (the SQL standard), hence the coalesce shape.
+        val spark = org.apache.spark.sql.SparkSession.active
+        val addr = s"${name()}.$tbl.branch_$branch"
+        t.constraints().foreach {
+          case c: org.apache.spark.sql.connector.catalog.constraints.Check =>
+            val bad = spark.sql(
+              s"""SELECT count(*) FROM $addr
+                 |WHERE coalesce(NOT (${c.predicateSql()}), false)"""
+                .stripMargin).head().getLong(0)
+            if (bad > 0) throw new IllegalStateException(
+              s"publish '$branch': audit failed on ${c.name()} " +
+                s"(${c.predicateSql()}) — $bad violating rows; " +
+                "branch kept, main untouched")
+          case _ => ()
+        }
+        val (v, n) = t.publishBranch(branch)
+        summary("published_version", "rows_published")(v, n)
+      }),
+      new MemProcedure("rebase",
+        "rebase('ns.tbl', 'name'): move a branch's base to the current " +
+          "head (conflict-free for append-only staging) so a refused " +
+          "fast-forward publish can retry",
+        Seq(tblParam, refParam), deterministic = false)({ in =>
+        summary("rebased_to_version")(
+          tableArg(in).rebaseBranch(in.getUTF8String(1).toString))
+      }),
+      new MemProcedure("drop_branch",
+        "drop_branch('ns.tbl', 'name'): discard a branch and its staged " +
+          "appends (the repair verb for a failed audit)",
+        Seq(tblParam, refParam), deterministic = false)({ in =>
+        summary("was_based_on_version")(
+          tableArg(in).dropBranch(in.getUTF8String(1).toString))
+      }))
+  }
+
   private[sources] def tableByName(name: String): MemTable = {
     val t = tables.get(name)
     if (t == null) throw new NoSuchTableException(name.split('.').toSeq)
@@ -774,7 +902,7 @@ class MemTable(tableName: String, tableSchema: StructType,
   // lakehouse-maturity surface a production ingest workflow needs).
   // Branch writes are deliberately UNCHECKED (the WAP point: stage
   // first, audit the staged state, publish only what passes); the
-  // CHECK-constraint audit runs engine-side in PublishProcedure.
+  // CHECK-constraint audit runs engine-side in the `publish` verb.
   private final class BranchState(val baseV: Int) {
     val pending = new java.util.ArrayList[MemRow]()
   }
@@ -852,7 +980,7 @@ class MemTable(tableName: String, tableSchema: StructType,
     * still the branch base (the Iceberg fast_forward contract — a
     * diverged main needs [[rebaseBranch]] first; appends-only staging
     * makes that always safe); commits the staged appends as ONE new
-    * version and drops the branch. The caller (PublishProcedure) has
+    * version and drops the branch. The caller (the `publish` verb) has
     * already audited. Returns (published version, rows published). */
   private[sources] def publishBranch(name: String): (Int, Int) =
     rows.synchronized {
@@ -1916,67 +2044,36 @@ class BitXorAggBound
   override def produceResult(state: java.lang.Long): java.lang.Long = state
 }
 
-/** The catalog's one stored procedure: `compact('ns.tbl')` folds a
-  * merge-on-read table's delta log into its base ([[MemTable.compact]])
-  * and returns one summary row `(folded_deltas, base_rows)` through a
-  * [[LocalScan]] — the engine surfaces it as the CALL's result set, so
-  * the maintenance job reports what it did in-band (the Iceberg
-  * procedure-result contract). Binding validates arity/type once at
-  * analysis; `isDeterministic = false` because the call mutates table
-  * state. */
-/** `changes('ns.tbl', from_v, to_v)` — the CDC read between two
-  * committed versions ([[MemTable.changesBetween]]): one row per
-  * inserted/deleted row reference per commit in (from, to], in the
-  * table's CURRENT schema (per-row field-id layout resolution, like
-  * every scan) plus `_change_type` and `_commit_version` — the
-  * Delta CDF column convention. Surfaced as a procedure because the
-  * engine exposes no TVF hook to V2 catalogs; the result set rides a
-  * [[LocalScan]] like `compact`'s summary. Deterministic given the
-  * commit history, so the CALL itself is the gated query. */
-class ChangesProcedure(cat: MemCatalog)
+/** One stored procedure of [[MemCatalog]]'s procedure table: `bind`
+  * checks the coerced argument row against `params` once, at
+  * analysis, and `call` hands the argument row to `run`, whose result
+  * set rides a [[LocalScan]] — the engine surfaces it as the CALL's
+  * result, so a maintenance verb reports what it did in-band (the
+  * Iceberg procedure-result contract). `deterministic` is false for
+  * every verb that mutates table state. */
+class MemProcedure(verb: String, about: String,
+                   params: Seq[(String, DataType)], deterministic: Boolean)(
+    run: InternalRow => (StructType, Array[InternalRow]))
     extends procedures.UnboundProcedure {
-  override def name(): String = "changes"
-  override def description(): String =
-    "changes('ns.tbl', from_v, to_v): row-level insert/delete diff " +
-      "between committed versions"
+  override def name(): String = verb
+  override def description(): String = about
   override def bind(inputType: StructType): procedures.BoundProcedure = {
-    if (inputType.fields.length != 3 ||
-        inputType.fields(0).dataType != StringType ||
-        inputType.fields(1).dataType != LongType ||
-        inputType.fields(2).dataType != LongType)
+    if (inputType.fields.map(_.dataType).toSeq != params.map(_._2))
       throw new UnsupportedOperationException(
-        s"changes expects (STRING, BIGINT, BIGINT), got $inputType")
+        s"$verb expects (${params.map(_._2.sql).mkString(", ")}), " +
+          s"got $inputType")
     new procedures.BoundProcedure {
-      override def name(): String = "changes"
-      override def description(): String = ChangesProcedure.this.description()
+      override def name(): String = verb
+      override def description(): String = about
       override def parameters(): Array[procedures.ProcedureParameter] =
-        Array(procedures.ProcedureParameter.in("tbl", StringType).build(),
-          procedures.ProcedureParameter.in("from_v", LongType).build(),
-          procedures.ProcedureParameter.in("to_v", LongType).build())
-      // reads committed state only — deterministic for a fixed history
-      override def isDeterministic: Boolean = true
+        params.map { case (p, t) =>
+          procedures.ProcedureParameter.in(p, t).build() }.toArray
+      override def isDeterministic: Boolean = deterministic
       override def call(input: InternalRow): util.Iterator[Scan] = {
-        val t = cat.tableByName(input.getUTF8String(0).toString)
-        val recs = t.changesBetween(input.getLong(1), input.getLong(2))
-        val schema = t.schema()
-        val ids = t.layoutSnapshot
-        val defaults = t.defaultsSnapshot
-        val outSchema = StructType(schema.fields ++ Seq(
-          StructField("_change_type", StringType, nullable = false),
-          StructField("_commit_version", LongType, nullable = false)))
-        val outRows = recs.map { case (v, typ, mr) =>
-          InternalRow.fromSeq(
-            schema.fields.indices.map { j =>
-              val pos = mr.layout.indexOf(ids(j))
-              if (pos < 0) defaults.getOrElse(ids(j), null)
-              else mr.row.get(pos, schema.fields(j).dataType)
-            } ++
-            Seq(org.apache.spark.unsafe.types.UTF8String.fromString(typ),
-              java.lang.Long.valueOf(v)))
-        }.toArray
+        val (schema, result) = run(input)
         val out: Scan = new LocalScan {
-          override def readSchema(): StructType = outSchema
-          override def rows(): Array[InternalRow] = outRows
+          override def readSchema(): StructType = schema
+          override def rows(): Array[InternalRow] = result
         }
         util.List.of(out).iterator()
       }
@@ -1984,325 +2081,9 @@ class ChangesProcedure(cat: MemCatalog)
   }
 }
 
-/** `expire('ns.tbl', keep_n)` — VERSION RETENTION, the
-  * expire-snapshots verb every production table format ships
-  * (Iceberg `expire_snapshots`, Delta VACUUM + log retention): all
-  * but the newest `keep_n` version manifests are dropped, their row
-  * references and commit deltas released, and every read that needs
-  * them (`VERSION AS OF`, `TIMESTAMP AS OF`, `changes` ranges) fails
-  * loudly from then on ([[MemTable.expire]]). This is what makes a
-  * takedown DELETE actually stick: without it, purged content is one
-  * `VERSION AS OF n-1` away forever. Summary row
-  * `(expired_versions, retained_versions, first_live_version)` rides
-  * a [[LocalScan]] like `compact`'s. */
-class ExpireProcedure(cat: MemCatalog)
-    extends procedures.UnboundProcedure {
-  override def name(): String = "expire"
-  override def description(): String =
-    "expire('ns.tbl', keep_n): drop all but the newest keep_n version " +
-      "manifests; expired versions become unreadable"
-  override def bind(inputType: StructType): procedures.BoundProcedure = {
-    if (inputType.fields.length != 2 ||
-        inputType.fields(0).dataType != StringType ||
-        inputType.fields(1).dataType != LongType)
-      throw new UnsupportedOperationException(
-        s"expire expects (STRING, BIGINT), got $inputType")
-    new procedures.BoundProcedure {
-      override def name(): String = "expire"
-      override def description(): String = ExpireProcedure.this.description()
-      override def parameters(): Array[procedures.ProcedureParameter] =
-        Array(procedures.ProcedureParameter.in("tbl", StringType).build(),
-          procedures.ProcedureParameter.in("keep_n", LongType).build())
-      override def isDeterministic: Boolean = false
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val (expired, retained, firstLive) =
-          cat.tableByName(input.getUTF8String(0).toString)
-            .expire(input.getLong(1).toInt)
-        val out: Scan = new LocalScan {
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("expired_versions", LongType, nullable = false),
-            StructField("retained_versions", LongType, nullable = false),
-            StructField("first_live_version", LongType, nullable = false)))
-          override def rows(): Array[InternalRow] = Array(
-            InternalRow.fromSeq(Seq(expired.toLong, retained.toLong,
-              firstLive.toLong)))
-        }
-        util.List.of(out).iterator()
-      }
-    }
-  }
-}
-
-/** `tag('ns.tbl', 'name', v)` / `untag('ns.tbl', 'name')` — NAMED
-  * VERSION REFS (Iceberg tags): an immutable pointer at a committed
-  * version, readable via `VERSION AS OF 'name'` and PROTECTED from
-  * retention (`expire` clamps its cut below the oldest tag — the
-  * expire_snapshots refs contract). The audit/rollback handle a
-  * compliance review pins BEFORE a retention sweep runs. Summary row
-  * carries the (re)solved ordinal. */
-class TagProcedure(cat: MemCatalog)
-    extends procedures.UnboundProcedure {
-  override def name(): String = "tag"
-  override def description(): String =
-    "tag('ns.tbl', 'name', v): immutable named ref to version v; " +
-      "tagged versions survive expire"
-  override def bind(inputType: StructType): procedures.BoundProcedure = {
-    if (inputType.fields.length != 3 ||
-        inputType.fields(0).dataType != StringType ||
-        inputType.fields(1).dataType != StringType ||
-        inputType.fields(2).dataType != LongType)
-      throw new UnsupportedOperationException(
-        s"tag expects (STRING, STRING, BIGINT), got $inputType")
-    new procedures.BoundProcedure {
-      override def name(): String = "tag"
-      override def description(): String = TagProcedure.this.description()
-      override def parameters(): Array[procedures.ProcedureParameter] =
-        Array(procedures.ProcedureParameter.in("tbl", StringType).build(),
-          procedures.ProcedureParameter.in("name", StringType).build(),
-          procedures.ProcedureParameter.in("v", LongType).build())
-      override def isDeterministic: Boolean = false
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val v = cat.tableByName(input.getUTF8String(0).toString)
-          .createTag(input.getUTF8String(1).toString, input.getLong(2))
-        val out: Scan = new LocalScan {
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("tagged_version", LongType, nullable = false)))
-          override def rows(): Array[InternalRow] =
-            Array(InternalRow.fromSeq(Seq(v.toLong)))
-        }
-        util.List.of(out).iterator()
-      }
-    }
-  }
-}
-
-class UntagProcedure(cat: MemCatalog)
-    extends procedures.UnboundProcedure {
-  override def name(): String = "untag"
-  override def description(): String =
-    "untag('ns.tbl', 'name'): drop a named ref; its version becomes " +
-      "expirable again"
-  override def bind(inputType: StructType): procedures.BoundProcedure = {
-    if (inputType.fields.length != 2 ||
-        inputType.fields(0).dataType != StringType ||
-        inputType.fields(1).dataType != StringType)
-      throw new UnsupportedOperationException(
-        s"untag expects (STRING, STRING), got $inputType")
-    new procedures.BoundProcedure {
-      override def name(): String = "untag"
-      override def description(): String = UntagProcedure.this.description()
-      override def parameters(): Array[procedures.ProcedureParameter] =
-        Array(procedures.ProcedureParameter.in("tbl", StringType).build(),
-          procedures.ProcedureParameter.in("name", StringType).build())
-      override def isDeterministic: Boolean = false
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val v = cat.tableByName(input.getUTF8String(0).toString)
-          .dropTag(input.getUTF8String(1).toString)
-        val out: Scan = new LocalScan {
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("untagged_version", LongType, nullable = false)))
-          override def rows(): Array[InternalRow] =
-            Array(InternalRow.fromSeq(Seq(v.toLong)))
-        }
-        util.List.of(out).iterator()
-      }
-    }
-  }
-}
-
-class BranchProcedure(cat: MemCatalog)
-    extends procedures.UnboundProcedure {
-  override def name(): String = "branch"
-  override def description(): String =
-    "branch('ns.tbl', 'name'): writable branch ref at the current " +
-      "head; write via ns.tbl.branch_<name>, then sys.publish"
-  override def bind(inputType: StructType): procedures.BoundProcedure = {
-    if (inputType.fields.length != 2 ||
-        inputType.fields(0).dataType != StringType ||
-        inputType.fields(1).dataType != StringType)
-      throw new UnsupportedOperationException(
-        s"branch expects (STRING, STRING), got $inputType")
-    new procedures.BoundProcedure {
-      override def name(): String = "branch"
-      override def description(): String = BranchProcedure.this.description()
-      override def parameters(): Array[procedures.ProcedureParameter] =
-        Array(procedures.ProcedureParameter.in("tbl", StringType).build(),
-          procedures.ProcedureParameter.in("name", StringType).build())
-      override def isDeterministic: Boolean = false
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val t = cat.tableByName(input.getUTF8String(0).toString)
-        val v = t.createBranch(input.getUTF8String(1).toString,
-          t.versionCount.toLong)
-        val out: Scan = new LocalScan {
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("branched_at_version", LongType, nullable = false)))
-          override def rows(): Array[InternalRow] =
-            Array(InternalRow.fromSeq(Seq(v.toLong)))
-        }
-        util.List.of(out).iterator()
-      }
-    }
-  }
-}
-
-class PublishProcedure(cat: MemCatalog)
-    extends procedures.UnboundProcedure {
-  override def name(): String = "publish"
-  override def description(): String =
-    "publish('ns.tbl', 'name'): audit the branch against the table's " +
-      "CHECK constraints, then fast-forward main to it; a failing " +
-      "audit refuses and leaves main untouched"
-  override def bind(inputType: StructType): procedures.BoundProcedure = {
-    if (inputType.fields.length != 2 ||
-        inputType.fields(0).dataType != StringType ||
-        inputType.fields(1).dataType != StringType)
-      throw new UnsupportedOperationException(
-        s"publish expects (STRING, STRING), got $inputType")
-    new procedures.BoundProcedure {
-      override def name(): String = "publish"
-      override def description(): String = PublishProcedure.this.description()
-      override def parameters(): Array[procedures.ProcedureParameter] =
-        Array(procedures.ProcedureParameter.in("tbl", StringType).build(),
-          procedures.ProcedureParameter.in("name", StringType).build())
-      override def isDeterministic: Boolean = false
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val tbl = input.getUTF8String(0).toString
-        val branch = input.getUTF8String(1).toString
-        val t = cat.tableByName(tbl)
-        if (!t.hasBranch(branch)) throw new IllegalArgumentException(
-          s"no such branch '$branch' on $tbl")
-        // THE AUDIT: every CHECK constraint must hold over the branch
-        // view before main moves. Branch writes were deliberately
-        // unchecked (WAP stages first); this is where the contract is
-        // enforced — engine-evaluated over the branch address, so the
-        // predicate semantics are exactly the write-path ones. NULL
-        // passes CHECK (the SQL standard), hence the coalesce shape.
-        val spark = org.apache.spark.sql.SparkSession.active
-        val addr = s"${cat.name()}.$tbl.branch_$branch"
-        t.constraints().foreach {
-          case c: org.apache.spark.sql.connector.catalog.constraints.Check =>
-            val bad = spark.sql(
-              s"""SELECT count(*) FROM $addr
-                 |WHERE coalesce(NOT (${c.predicateSql()}), false)"""
-                .stripMargin).head().getLong(0)
-            if (bad > 0) throw new IllegalStateException(
-              s"publish '$branch': audit failed on ${c.name()} " +
-                s"(${c.predicateSql()}) — $bad violating rows; " +
-                "branch kept, main untouched")
-          case _ => ()
-        }
-        val (v, n) = t.publishBranch(branch)
-        val out: Scan = new LocalScan {
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("published_version", LongType, nullable = false),
-            StructField("rows_published", LongType, nullable = false)))
-          override def rows(): Array[InternalRow] =
-            Array(InternalRow.fromSeq(Seq(v.toLong, n.toLong)))
-        }
-        util.List.of(out).iterator()
-      }
-    }
-  }
-}
-
-class RebaseProcedure(cat: MemCatalog)
-    extends procedures.UnboundProcedure {
-  override def name(): String = "rebase"
-  override def description(): String =
-    "rebase('ns.tbl', 'name'): move a branch's base to the current " +
-      "head (conflict-free for append-only staging) so a refused " +
-      "fast-forward publish can retry"
-  override def bind(inputType: StructType): procedures.BoundProcedure = {
-    if (inputType.fields.length != 2 ||
-        inputType.fields(0).dataType != StringType ||
-        inputType.fields(1).dataType != StringType)
-      throw new UnsupportedOperationException(
-        s"rebase expects (STRING, STRING), got $inputType")
-    new procedures.BoundProcedure {
-      override def name(): String = "rebase"
-      override def description(): String = RebaseProcedure.this.description()
-      override def parameters(): Array[procedures.ProcedureParameter] =
-        Array(procedures.ProcedureParameter.in("tbl", StringType).build(),
-          procedures.ProcedureParameter.in("name", StringType).build())
-      override def isDeterministic: Boolean = false
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val v = cat.tableByName(input.getUTF8String(0).toString)
-          .rebaseBranch(input.getUTF8String(1).toString)
-        val out: Scan = new LocalScan {
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("rebased_to_version", LongType, nullable = false)))
-          override def rows(): Array[InternalRow] =
-            Array(InternalRow.fromSeq(Seq(v.toLong)))
-        }
-        util.List.of(out).iterator()
-      }
-    }
-  }
-}
-
-class DropBranchProcedure(cat: MemCatalog)
-    extends procedures.UnboundProcedure {
-  override def name(): String = "drop_branch"
-  override def description(): String =
-    "drop_branch('ns.tbl', 'name'): discard a branch and its staged " +
-      "appends (the repair verb for a failed audit)"
-  override def bind(inputType: StructType): procedures.BoundProcedure = {
-    if (inputType.fields.length != 2 ||
-        inputType.fields(0).dataType != StringType ||
-        inputType.fields(1).dataType != StringType)
-      throw new UnsupportedOperationException(
-        s"drop_branch expects (STRING, STRING), got $inputType")
-    new procedures.BoundProcedure {
-      override def name(): String = "drop_branch"
-      override def description(): String =
-        DropBranchProcedure.this.description()
-      override def parameters(): Array[procedures.ProcedureParameter] =
-        Array(procedures.ProcedureParameter.in("tbl", StringType).build(),
-          procedures.ProcedureParameter.in("name", StringType).build())
-      override def isDeterministic: Boolean = false
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val v = cat.tableByName(input.getUTF8String(0).toString)
-          .dropBranch(input.getUTF8String(1).toString)
-        val out: Scan = new LocalScan {
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("was_based_on_version", LongType, nullable = false)))
-          override def rows(): Array[InternalRow] =
-            Array(InternalRow.fromSeq(Seq(v.toLong)))
-        }
-        util.List.of(out).iterator()
-      }
-    }
-  }
-}
-
-class CompactProcedure(cat: MemCatalog)
-    extends procedures.UnboundProcedure {
-  override def name(): String = "compact"
-  override def description(): String =
-    "compact('ns.tbl'): fold a merge-on-read table's delta log into its base"
-  override def bind(inputType: StructType): procedures.BoundProcedure = {
-    if (inputType.fields.length != 1 ||
-        inputType.fields(0).dataType != StringType)
-      throw new UnsupportedOperationException(
-        s"compact expects one STRING table name, got $inputType")
-    new procedures.BoundProcedure {
-      override def name(): String = "compact"
-      override def description(): String = CompactProcedure.this.description()
-      override def parameters(): Array[procedures.ProcedureParameter] =
-        Array(procedures.ProcedureParameter.in("tbl", StringType).build())
-      override def isDeterministic: Boolean = false
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val (folded, baseRows) =
-          cat.tableByName(input.getUTF8String(0).toString).compact()
-        val out: Scan = new LocalScan {
-          override def readSchema(): StructType = StructType(Seq(
-            StructField("folded_deltas", LongType, nullable = false),
-            StructField("base_rows", LongType, nullable = false)))
-          override def rows(): Array[InternalRow] = Array(
-            InternalRow.fromSeq(Seq(folded.toLong, baseRows.toLong)))
-        }
-        util.List.of(out).iterator()
-      }
-    }
-  }
+object MemProcedure {
+  /** The one-row, all-BIGINT summary most verbs return. */
+  def summary(cols: String*)(values: Long*): (StructType, Array[InternalRow]) =
+    (StructType(cols.map(StructField(_, LongType, nullable = false))),
+      Array(InternalRow.fromSeq(values)))
 }

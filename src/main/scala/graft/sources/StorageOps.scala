@@ -2559,6 +2559,24 @@ object StorageOps {
     "mv_refresh"       -> mvRefresh _,
   )
 
+  /** The SPJ join's replay, shared by the uniform and skewed layouts. */
+  private val oracleSpjJoin =
+    s"""WITH a AS (
+       |  SELECT i AS id,
+       |    ('0x' || substring(md5('seq' || i::VARCHAR), 1, 15))::BIGINT
+       |      % 100 AS bucket,
+       |    'w' || (i % 50)::VARCHAR AS word
+       |  FROM range(0, $SpjAN) t(i)),
+       |b AS (
+       |  SELECT i AS id,
+       |    ('0x' || substring(md5('seq' || i::VARCHAR), 1, 15))::BIGINT
+       |      % 100 AS bucket_b
+       |  FROM range(0, $SpjBN) t(i))
+       |SELECT word, count(*)::BIGINT AS cnt,
+       |  sum(bucket + bucket_b)::BIGINT AS sum_buckets
+       |FROM a JOIN b USING (id)
+       |GROUP BY word ORDER BY word""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "bucketed_join" ->
       """SELECT o_orderpriority,
@@ -2571,16 +2589,7 @@ object StorageOps {
     // identical answer to q3_top_orders — the layout changes the
     // plan, never the result
     "q3_bucketed" -> graft.operators.RelOps.oracle("q3_top_orders"),
-    "q18_bucketed" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, round(sum(l_quantity), 2) AS total_qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING round(sum(l_quantity), 2) > 300)
-        |SELECT c_name, c_custkey, o_orderkey, o_orderdate, total_qty
-        |FROM big
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY total_qty DESC, o_orderkey""".stripMargin,
+    "q18_bucketed" -> graft.operators.RelOps.oracle("q18_large_orders"),
     // the generated source replayed from range(): same id window,
     // same md5-60 bucket; DuckDB sum widens to HUGEINT, cast back
     "dsv2_scan" ->
@@ -2627,22 +2636,7 @@ object StorageOps {
     // both generated tables replayed from range(); the id join implies
     // the pkey join (pkey = id / pstep on both sides), so co-location
     // changes the plan, never the rows
-    "dsv2_spj_join" ->
-      s"""WITH a AS (
-         |  SELECT i AS id,
-         |    ('0x' || substring(md5('seq' || i::VARCHAR), 1, 15))::BIGINT
-         |      % 100 AS bucket,
-         |    'w' || (i % 50)::VARCHAR AS word
-         |  FROM range(0, $SpjAN) t(i)),
-         |b AS (
-         |  SELECT i AS id,
-         |    ('0x' || substring(md5('seq' || i::VARCHAR), 1, 15))::BIGINT
-         |      % 100 AS bucket_b
-         |  FROM range(0, $SpjBN) t(i))
-         |SELECT word, count(*)::BIGINT AS cnt,
-         |  sum(bucket + bucket_b)::BIGINT AS sum_buckets
-         |FROM a JOIN b USING (id)
-         |GROUP BY word ORDER BY word""".stripMargin,
+    "dsv2_spj_join" -> oracleSpjJoin,
     // the vectorized path must produce byte-identical rows to the
     // row path — same range replay
     "dsv2_columnar_scan" ->
@@ -2734,22 +2728,7 @@ object StorageOps {
          |GROUP BY 1 ORDER BY word""".stripMargin,
     // content is split-layout-independent: the skewed (hotsplits)
     // layout replays as the same range join as the uniform SPJ
-    "dsv2_spj_skew" ->
-      s"""WITH a AS (
-         |  SELECT i AS id,
-         |    ('0x' || substring(md5('seq' || i::VARCHAR), 1, 15))::BIGINT
-         |      % 100 AS bucket,
-         |    'w' || (i % 50)::VARCHAR AS word
-         |  FROM range(0, $SpjAN) t(i)),
-         |b AS (
-         |  SELECT i AS id,
-         |    ('0x' || substring(md5('seq' || i::VARCHAR), 1, 15))::BIGINT
-         |      % 100 AS bucket_b
-         |  FROM range(0, $SpjBN) t(i))
-         |SELECT word, count(*)::BIGINT AS cnt,
-         |  sum(bucket + bucket_b)::BIGINT AS sum_buckets
-         |FROM a JOIN b USING (id)
-         |GROUP BY word ORDER BY word""".stripMargin,
+    "dsv2_spj_skew" -> oracleSpjJoin,
     // each version replayed from the rule; v0 must be unperturbed by
     // the v1 write (immutable version directories)
     "time_travel" ->
@@ -3231,18 +3210,7 @@ object StorageOps {
       """SELECT count(*)::BIGINT AS n_rows,
         |  sum(o_orderkey)::BIGINT AS sum_orderkey
         |FROM orders""".stripMargin,
-    "q9_bucketed" ->
-      """SELECT n_name AS nation,
-        |  year(o_orderdate) AS o_year,
-        |  ((sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000)
-        |    AS BIGINT)) + 50) // 100) / 100.0 AS profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey AND p_type IN ('PROMO', 'ECONOMY')
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY 1, 2
-        |ORDER BY nation, o_year DESC""".stripMargin,
+    "q9_bucketed" -> graft.operators.RelOps.oracle("q9_product_profit"),
     "partitioned_scan" ->
       """SELECT source, count(*) AS n_docs,
         |  sum(length(text))::BIGINT AS total_chars,
@@ -3314,11 +3282,9 @@ object StorageOps {
       """SELECT source, count(*) AS n_docs,
         |  sum(length(text))::BIGINT AS total_chars
         |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "orc_roundtrip" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |  round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+    // same replay as avro_roundtrip: the format changes the files,
+    // never the answer
+    "orc_roundtrip" -> AvroIO.oracle("avro_roundtrip"),
     // filter + aggregate replayed from the source parquet: the JDBC
     // round trip (dialect DDL, batched insert, partitioned pushed-down
     // read) must lose nothing; cents are BIGINT end-to-end

@@ -248,13 +248,25 @@ object StreamOps {
     * side's buffered state is bounded to watermark + window — the shape
     * that holds on an unbounded feed. On the drained static source the
     * result equals the batch/DuckDB self-join exactly. */
-  def clickPurchaseJoin(s: SparkSession, dir: String): DataFrame = {
-    val clicks = eventsStream(s, dir)
+  def clickPurchaseJoin(s: SparkSession, dir: String): DataFrame =
+    clickPurchaseOf(eventsStream(s, dir), eventsStream(s, dir), "inner")
+      .select(col("click_id"), col("purchase_id"), col("user_id"),
+        col("click_ts"), col("purchase_ts"))
+
+  /** The funnel join every click→purchase stream shares: clicks and
+    * purchases split out of two events-shaped streams (normally both
+    * over the same source), each side watermarked 1 hour, joined on
+    * user within the 60-minute attribution window. Each caller keeps
+    * its own projection. */
+  private[graft] def clickPurchaseOf(clickSrc: DataFrame,
+                                     purchaseSrc: DataFrame,
+                                     joinType: String): DataFrame = {
+    val clicks = clickSrc
       .filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         col("ts").as("click_ts"))
       .withWatermark("click_ts", "1 hour")
-    val purchases = eventsStream(s, dir)
+    val purchases = purchaseSrc
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"),
         col("user_id").as("p_user"), col("ts").as("purchase_ts"))
@@ -262,10 +274,18 @@ object StreamOps {
     clicks.join(purchases,
       col("user_id") === col("p_user") &&
         col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("interval 60 minutes"))
-      .select(col("click_id"), col("purchase_id"), col("user_id"),
-        col("click_ts"), col("purchase_ts"))
+        col("purchase_ts") <= col("click_ts") + expr("interval 60 minutes"),
+      joinType)
   }
+
+  /** Both side maxima of the events table in ONE conditional
+    * aggregate (one scan, one job) instead of two filtered agg
+    * subtrees cross-joined — the horizon every outer/chained funnel
+    * gate restricts against. Each gate keeps its own `select`. */
+  private def sideMaxima(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir).agg(
+      max(when(col("event_type") === "click", col("ts"))).as("mc"),
+      max(when(col("event_type") === "purchase", col("ts"))).as("mp"))
 
   /** `clickPurchaseJoin` driver-gated against the DuckDB self-join.
     *
@@ -293,25 +313,10 @@ object StreamOps {
     * StreamingSpec can feed multi-batch staged sources through the
     * same logic for the stop/restart case. */
   private[graft] def clickPurchaseLeftOf(clickSrc: DataFrame,
-                                         purchaseSrc: DataFrame): DataFrame = {
-    val clicks = clickSrc
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = purchaseSrc
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"),
-        col("user_id").as("p_user"), col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "1 hour")
-    clicks.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("interval 60 minutes"),
-      "left_outer")
+                                         purchaseSrc: DataFrame): DataFrame =
+    clickPurchaseOf(clickSrc, purchaseSrc, "left_outer")
       .select(col("click_id"), col("purchase_id"), col("user_id"),
         col("click_ts"), col("purchase_ts"))
-  }
 
   /** `clickPurchaseLeftJoin` driver-gated. Outer results are only
     * FINAL for clicks the terminal watermark has cleared. With TWO
@@ -327,15 +332,9 @@ object StreamOps {
   def clickPurchaseLeftGated(s: SparkSession, dir: String): DataFrame = {
     val landed = runToTable(s, clickPurchaseLeftJoin(s, dir),
       "stream_left_join", "append", col("click_id"), col("purchase_id"))
-    val ev = Tables.events(s, dir)
-    // both side maxima in ONE conditional aggregate (one scan, one
-    // job) instead of two filtered agg subtrees cross-joined
-    val horizon = broadcast(
-      ev.agg(
-        max(when(col("event_type") === "click", col("ts"))).as("mc"),
-        max(when(col("event_type") === "purchase", col("ts"))).as("mp"))
-        .select((least(col("mc"), col("mp")) -
-          expr("interval 120 minutes")).as("h")))
+    val horizon = broadcast(sideMaxima(s, dir)
+      .select((least(col("mc"), col("mp")) -
+        expr("interval 120 minutes")).as("h")))
     landed.crossJoin(horizon)
       .filter(col("click_ts") < col("h")).drop("h")
       .transform(graft.operators.Present.sortedUnbounded(_,
@@ -352,26 +351,11 @@ object StreamOps {
     * until then and the terminal no-data batch flushes its
     * null-extended row. */
   private[graft] def clickPurchaseFullOf(clickSrc: DataFrame,
-                                         purchaseSrc: DataFrame): DataFrame = {
-    val clicks = clickSrc
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = purchaseSrc
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"),
-        col("user_id").as("p_user"), col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "1 hour")
-    clicks.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("interval 60 minutes"),
-      "full_outer")
+                                         purchaseSrc: DataFrame): DataFrame =
+    clickPurchaseOf(clickSrc, purchaseSrc, "full_outer")
       .select(col("click_id"), col("purchase_id"),
         coalesce(col("user_id"), col("p_user")).as("user_id"),
         col("click_ts"), col("purchase_ts"))
-  }
 
   def clickPurchaseFullJoin(s: SparkSession, dir: String): DataFrame =
     clickPurchaseFullOf(eventsStream(s, dir), eventsStream(s, dir))
@@ -387,14 +371,8 @@ object StreamOps {
   def clickPurchaseFullGated(s: SparkSession, dir: String): DataFrame = {
     val landed = runToTable(s, clickPurchaseFullJoin(s, dir),
       "stream_full_join", "append", col("click_id"), col("purchase_id"))
-    val ev = Tables.events(s, dir)
-    // one conditional aggregate for both side maxima (see
-    // clickPurchaseLeftGated)
-    val horizon = broadcast(
-      ev.agg(
-        max(when(col("event_type") === "click", col("ts"))).as("mc"),
-        max(when(col("event_type") === "purchase", col("ts"))).as("mp"))
-        .select(least(col("mc"), col("mp")).as("wm0")))
+    val horizon = broadcast(sideMaxima(s, dir)
+      .select(least(col("mc"), col("mp")).as("wm0")))
     landed.crossJoin(horizon)
       .filter(
         (col("click_ts").isNotNull &&
@@ -425,28 +403,14 @@ object StreamOps {
     * — land the join, re-read it, re-aggregate — pays a full
     * materialization cycle of latency and storage. */
   private[graft] def joinWindowOf(clickSrc: DataFrame,
-                                  purchaseSrc: DataFrame): DataFrame = {
-    val clicks = clickSrc
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = purchaseSrc
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"),
-        col("user_id").as("p_user"), col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "1 hour")
-    clicks.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("interval 60 minutes"))
+                                  purchaseSrc: DataFrame): DataFrame =
+    clickPurchaseOf(clickSrc, purchaseSrc, "inner")
       .groupBy(window(col("purchase_ts"), "3 hours").as("w"),
         (col("user_id") % 5).as("cohort"))
       .agg(count(lit(1)).as("n_attributed"),
         sum(col("purchase_id")).as("sum_purchase_id"))
       .select(col("w.start").as("w_start"), col("cohort"),
         col("n_attributed"), col("sum_purchase_id"))
-  }
 
   /** `joinWindowOf` driver-gated. Append mode emits a window only
     * once the POST-JOIN watermark clears its end; with terminal
@@ -461,14 +425,8 @@ object StreamOps {
     val landed = runToTable(s,
       joinWindowOf(eventsStream(s, dir), eventsStream(s, dir)),
       "stream_join_window", "append", col("w_start"), col("cohort"))
-    val ev = Tables.events(s, dir)
-    // one conditional aggregate for both side maxima (see
-    // clickPurchaseLeftGated)
-    val horizon = broadcast(
-      ev.agg(
-        max(when(col("event_type") === "click", col("ts"))).as("mc"),
-        max(when(col("event_type") === "purchase", col("ts"))).as("mp"))
-        .select(least(col("mc"), col("mp")).as("wm0")))
+    val horizon = broadcast(sideMaxima(s, dir)
+      .select(least(col("mc"), col("mp")).as("wm0")))
     landed.crossJoin(horizon)
       .filter(col("w_start") + expr("interval 3 hours") <
         col("wm0") - expr("interval 120 minutes"))

@@ -276,6 +276,48 @@ class CatalogSpec extends SparkSpec {
     assert(desc.contains("compact"), s"DESCRIBE PROCEDURE empty: $desc")
   }
 
+  test("CALL verbs: every one listed, described, and typed at binding") {
+    val cs = mounted()
+    cs.sql("CREATE TABLE mem.pc.t (k BIGINT) TBLPROPERTIES('mor'='true')")
+    cs.sql("INSERT INTO mem.pc.t VALUES (1)")
+    val verbs = Seq(
+      "compact" -> Seq("tbl" -> "STRING"),
+      "changes" -> Seq("tbl" -> "STRING", "from_v" -> "BIGINT",
+        "to_v" -> "BIGINT"),
+      "expire" -> Seq("tbl" -> "STRING", "keep_n" -> "BIGINT"),
+      "tag" -> Seq("tbl" -> "STRING", "name" -> "STRING", "v" -> "BIGINT"),
+      "untag" -> Seq("tbl" -> "STRING", "name" -> "STRING"),
+      "branch" -> Seq("tbl" -> "STRING", "name" -> "STRING"),
+      "publish" -> Seq("tbl" -> "STRING", "name" -> "STRING"),
+      "rebase" -> Seq("tbl" -> "STRING", "name" -> "STRING"),
+      "drop_branch" -> Seq("tbl" -> "STRING", "name" -> "STRING"))
+    val shown = cs.sql("SHOW PROCEDURES IN mem.sys").collect()
+      .map(_.getAs[String]("procedure_name")).toSet
+    assert(shown == verbs.map(_._1).toSet, s"SHOW PROCEDURES: $shown")
+    def literal(t: String): String = if (t == "STRING") "'x'" else "1L"
+    verbs.foreach { case (verb, params) =>
+      val desc = cs.sql(s"DESCRIBE PROCEDURE mem.sys.$verb").collect()
+        .map(_.getString(0)).mkString("\n")
+      params.foreach { case (p, _) =>
+        assert(s"\\b$p\\b".r.findFirstIn(desc).isDefined,
+          s"DESCRIBE PROCEDURE $verb misses parameter $p: $desc")
+      }
+      val good = "'pc.t'" +: params.tail.map(p => literal(p._2))
+      // one argument too many, and the table name as a BIGINT: both
+      // refused by bind, before the verb touches the table
+      Seq(good :+ "1L", "1L" +: good.tail).foreach { args =>
+        val call = s"CALL mem.sys.$verb(${args.mkString(", ")})"
+        val e = intercept[UnsupportedOperationException] {
+          cs.sql(call).collect()
+        }
+        assert(e.getMessage.startsWith(s"$verb expects"),
+          s"$call: ${e.getMessage}")
+      }
+    }
+    assert(cs.sql("SELECT k FROM mem.pc.t").collect().map(_.getLong(0))
+      .toSeq == Seq(1L), "a refused CALL touched the table")
+  }
+
   test("REPLACE WHERE: atomic slice swap, counted, refuses opaque conditions") {
     import org.apache.spark.sql.functions._
     import graft.sources.MemTable
